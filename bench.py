@@ -186,6 +186,33 @@ def time_suite(spark, names, sf_dir: str, passes: int, queries) -> dict[str, flo
     return timings
 
 
+def contract_line(out: dict, sc) -> str:
+    """The last stdout line: ``out`` (the full result) as compact JSON
+    that fits a ~2000-char capture of the output's tail. ``cpus``,
+    ``master`` and ``defaultParallelism`` (of SparkContext ``sc``) say
+    what the numbers ran on, so scaling can be checked across runs."""
+    timings, extra, mf = out["queries"], out["extra"], out["queries_multifile"]
+    compact = {
+        "metric": out["metric"],
+        "value": out["value"],
+        "unit": "sec",
+        "queries": {n: round(timings[n], 2) for n in timings},
+        "value_multifile": out["value_multifile"],
+        "extra_sec": out["extra_sec"],
+        "n_headline": len(timings),
+        "n_extra": len(extra),
+        "extra_t": [round(extra[n], 2) for n in EXTRA if n in extra],
+        "mf_t": [
+            round(mf[n], 2) for n in timings if isinstance(mf.get(n), float)
+        ],
+        "sf": out["sf"],
+        "cpus": os.cpu_count(),
+        "master": sc.master,
+        "defaultParallelism": sc.defaultParallelism,
+    }
+    return json.dumps(compact, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -260,24 +287,7 @@ def main() -> None:
         },
         separators=(",", ":"),
     ))
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": "sec",
-        "queries": {n: round(timings[n], 2) for n in timings},
-        "value_multifile": out["value_multifile"],
-        "extra_sec": out["extra_sec"],
-        "n_headline": len(timings),
-        "n_extra": len(extra),
-        "extra_t": [round(extra[n], 2) for n in extra_names],
-        "mf_t": [
-            round(mf_timings[n], 2)
-            for n in names
-            if isinstance(mf_timings.get(n), float)
-        ],
-        "sf": out["sf"],
-    }
-    print(json.dumps(compact, separators=(",", ":")))
+    print(contract_line(out, spark.sparkContext))
     spark.stop()
 
 

@@ -39,6 +39,9 @@ carry no -0.0 on the test corpus.)
 
 from __future__ import annotations
 
+import math
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,10 +52,14 @@ _LIT_MEMO: dict[str, Column] = {}
 
 def _d_suffix_sql(value) -> str:
     """``value`` (arbitrarily nested lists of floats) as a SQL array
-    literal with ``D``-suffixed elements."""
+    literal with ``D``-suffixed elements. Raises ``ValueError`` on a NaN
+    or infinite element: SQL has no double literal for them."""
     if isinstance(value, (list, tuple)):
         return "array(" + ",".join(_d_suffix_sql(x) for x in value) + ")"
-    return f"{float(value)!r}D"
+    x = float(value)
+    if not math.isfinite(x):
+        raise ValueError(f"non-finite double {x!r} has no SQL literal")
+    return f"{x!r}D"
 
 
 def double_array_lit(spark: SparkSession, value) -> Column:
@@ -76,7 +83,10 @@ def double_array_lit(spark: SparkSession, value) -> Column:
             lit
         )
         col = Column(jc)
-    except Exception:  # pragma: no cover - version-drift fallback
+    except (Py4JError, AttributeError, TypeError, ValueError):
+        # version drift: a moved internal (AttributeError/Py4JError, or a
+        # TypeError calling a JVM class that no longer exists) or a plan
+        # the optimizer did not fold to one Literal (ValueError above)
         col = F.expr(sql)
     _LIT_MEMO[sql] = col
     return col

@@ -616,11 +616,22 @@ def pq_topk(
     )
     # exact rerank of the shortlist only — true vectors join back by
     # cand_id, query vectors by broadcast; the final top-k window again
-    # shuffles narrow scored rows, not payloads
+    # shuffles narrow scored rows, not payloads. The re-join is where a
+    # repeated query_id would multiply rows, so the contract is enforced
+    # there: the (tiny) query side fails the job on a duplicate id.
     true_vec = candidates.select(cand_id, F.col(vec).alias("__cv"))
+    q_unique = q.groupBy(query_id).agg(
+        F.count(F.lit(1)).alias("__n"), F.first("__qv").alias("__qv")
+    ).select(
+        query_id,
+        F.when(F.col("__n") == 1, F.col("__qv")).otherwise(F.raise_error(
+            F.concat(F.lit("pq_topk: duplicate query_id "),
+                     F.col(query_id).cast("string"))
+        )).alias("__qv"),
+    )
     rer = (
         short.join(true_vec, cand_id)
-        .join(F.broadcast(q), query_id)
+        .join(F.broadcast(q_unique), query_id)
         .select(query_id, cand_id, cosine("__qv", "__cv").alias("cos_sim"))
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))

@@ -34,6 +34,35 @@ _STREAM_DIR_ROOT = "/tmp/flink_spark_stream_src"
 _SENTINEL_ISO = "2100-01-01 00:00:00"
 _SENTINEL_CUTOFF_ISO = "2090-01-01 00:00:00"
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+#: Analyzed-plan nodes that hold no streaming state, as ``treeString``
+#: names them (``Relation`` is a batch ``LogicalRelation``).
+_STATELESS_NODES = frozenset({
+    "Project", "Filter", "EventTimeWatermark", "StreamingRelation",
+    "StreamingRelationV2", "Relation", "SubqueryAlias", "ResolvedHint",
+})
+
+
+def emits_on_watermark_advance(tree: str) -> bool:
+    """Whether a streaming plan may emit rows on a watermark advance
+    alone. ``tree`` is the analyzed plan's ``treeString()``, one node per
+    line. False only when every node is an inner ``Join`` (it emits when
+    a row arrives; the watermark only evicts its state) or in
+    :data:`_STATELESS_NODES`. Any other line, including an aggregate, an
+    outer join, a stateful Python operator, an unknown node or a plan
+    string cut at ``spark.sql.maxPlanStringLength``, answers True: a
+    wrong answer can only cost a micro-batch, never rows."""
+    if tree.endswith(" more characters"):
+        return True
+    for line in tree.splitlines():
+        name, _, args = line.lstrip(" :+-").removeprefix("~").partition(" ")
+        if name == "Join" and args.split(",", 1)[0] == "Inner":
+            continue
+        if name not in _STATELESS_NODES:
+            return True
+    return False
+
 
 def _source_files(file_path: str) -> list[str]:
     """A table path is either one parquet file or a directory of
@@ -179,6 +208,16 @@ def run_to_memory(
     for local runs — A/B-measured ~25% faster than 8 at sf0.1; on a cluster set it ~1-2x total cores, it bounds both
     state parallelism AND per-batch commit fan-out). The batch setting is
     restored after the drain.
+
+    Trailing batch: after the last data batch, Spark runs one more
+    micro-batch that reads no rows and only advances the watermark, which
+    emits the final rows of window aggregates, outer joins, sessions and
+    timers. A plan of inner joins over stateless nodes
+    (:func:`emits_on_watermark_advance` is False) emits only when a row
+    arrives, so that batch would only evict state from a checkpoint the
+    drain deletes anyway: for such plans the drain turns
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` off, restoring the
+    session's value afterwards like the shuffle setting.
     """
     import os
     import shutil
@@ -186,9 +225,14 @@ def run_to_memory(
 
     spark = sdf.sparkSession
     name = f"{prefix}_{next(_COUNTER)}"
-    stream_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle)
+    confs = {
+        "spark.sql.shuffle.partitions":
+            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
+    }
+    tree = sdf._jdf.queryExecution().analyzed().treeString()
+    if not emits_on_watermark_advance(tree):
+        confs[_NO_DATA_BATCHES] = "false"
+    saved = {k: spark.conf.get(k) for k in confs}
     # Explicit run-local checkpoint, deleted after the drain. Placed on
     # tmpfs when available (A/B-neutral vs page-cached /tmp locally, but
     # guarantees no disk churn). On a real cluster the checkpoint must be
@@ -199,6 +243,9 @@ def run_to_memory(
     )
     ckpt = tempfile.mkdtemp(prefix=f"flink_spark_ckpt_{name}_", dir=ckpt_root)
     try:
+        # start() clones the session's conf: set before it, restore after
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -209,7 +256,8 @@ def run_to_memory(
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 

@@ -335,3 +335,45 @@ def test_ivf_empty_batch_after_training_leaves_store_identical(
     ]
     rows1 = sorted(map(tuple, idx1.topk(_queries(spark, sf_dir)).collect()))
     assert rows1 == rows0
+
+
+def test_pq_empty_batch_after_training_leaves_store_identical(
+    spark, sf_dir, tmp_path
+):
+    """PQ twin of the IVF test above: once the codebooks are frozen, an
+    empty batch encodes and writes unconditionally, and that write must
+    add no file under ``codes`` and delete none; the search results are
+    unchanged."""
+    import os
+
+    from flink_spark.streaming.ann_stream import pq_ingest_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    root = str(tmp_path / "pq_root")
+    cands = _cands(spark, sf_dir)
+
+    def run_once():
+        stream = spark.readStream.schema(cands.schema).parquet(str(src))
+        return pq_ingest_stream(stream, root=root)
+
+    def code_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _dirs, fs in os.walk(f"{root}/codes")
+            for f in fs if f.endswith(".parquet")
+        )
+
+    _land(cands, tmp_path, src, "b0")
+    idx0 = run_once()
+    rows0 = sorted(map(tuple, idx0.topk(_queries(spark, sf_dir)).collect()))
+    files0 = code_files()
+    assert files0
+    _land(cands.filter(F.lit(False)), tmp_path, src, "b1")
+    idx1 = run_once()
+    assert code_files() == files0
+    assert not [
+        f for f in os.listdir(f"{root}/codes") if f.endswith(".parquet")
+    ]
+    rows1 = sorted(map(tuple, idx1.topk(_queries(spark, sf_dir)).collect()))
+    assert rows1 == rows0

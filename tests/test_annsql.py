@@ -80,6 +80,17 @@ def test_pq_oracle_alternative_params(spark):
     assert sorted(map(tuple, got.collect())) == _oracle(sql)
 
 
+def test_pq_topk_rejects_duplicate_query_id(spark):
+    """The rerank re-attaches query vectors by query_id, so ids must be
+    unique: a repeated id fails the query instead of multiplying rows."""
+    from flink_spark.llm import similarity as SIM
+
+    q, c = _qc(spark)
+    dup = q.unionByName(q.limit(1))
+    with pytest.raises(Exception, match="duplicate query_id"):
+        SIM.pq_topk(dup, c, k=3, m=8, ks=8).collect()
+
+
 def test_semantic_neardup_oracle_alternative_params(spark):
     from flink_spark.llm.clustering import semantic_neardup_pairs
 

@@ -5,6 +5,7 @@ the same discipline as the r12 PQ-codec equivalence test."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -103,6 +104,50 @@ def test_double_array_lit_is_single_literal_and_bit_exact(spark):
         df._jdf.queryExecution().analyzed().expressions().apply(0).child()
     )
     assert child.getClass().getSimpleName() == "Literal"
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), -float("inf")])
+def test_double_array_lit_rejects_non_finite(spark, bad):
+    """NaN and infinities have no SQL double literal (``nanD``/``infD``
+    would not parse): they are rejected up front, not sent to the parser."""
+    from flink_spark.exprutil import double_array_lit
+
+    with pytest.raises(ValueError, match="non-finite"):
+        double_array_lit(spark, [[0.5, bad]])
+
+
+def test_double_array_lit_fallback_same_values(spark, monkeypatch):
+    """When the folded-Literal path fails (here: a session without the
+    JVM view), the ``F.expr`` fallback yields the same doubles, as a
+    CreateArray tree instead of one Literal."""
+    import struct
+
+    from flink_spark import exprutil
+
+    class _NoJvm:
+        def sql(self, text):
+            return spark.sql(text)
+
+    vals = [[0.25, -1.5e-8, 1.0 / 3.0], [6.02e23, 5e-324, -0.0]]
+    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    fast = exprutil.double_array_lit(spark, vals)
+    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    slow = exprutil.double_array_lit(_NoJvm(), vals)
+
+    def bits(col):
+        df = spark.range(1).select(col.alias("v"))
+        top = df._jdf.queryExecution().analyzed().expressions().apply(0)
+        rows = df.first()["v"]
+        return top.child().getClass().getSimpleName(), [
+            [struct.pack("<d", x) for x in row] for row in rows
+        ]
+
+    fast_node, fast_bits = bits(fast)
+    slow_node, slow_bits = bits(slow)
+    assert (fast_node, slow_node) == ("Literal", "CreateArray")
+    assert slow_bits == fast_bits == [
+        [struct.pack("<d", x) for x in row] for row in vals
+    ]
 
 
 def test_cc_sql_round_matches_dataframe_round(spark):

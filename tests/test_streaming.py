@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_spark.streaming import changelog as CL
-from flink_spark.streaming.core import run_to_memory
+from flink_spark.streaming.core import emits_on_watermark_advance, run_to_memory
 
 
 def _write_batches(spark, tmp_path, batches, schema_cols):
@@ -655,3 +655,175 @@ def test_watermark_alignment_throttles_fast_source(spark, tmp_path):
         # a's own 12:00, a is exempt and drains its buffered row
         (3, 1, 0, t("10:20")),
     ]
+
+
+# -- trailing watermark-only micro-batch ------------------------------------
+
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@pytest.fixture(scope="module")
+def ev_stream(spark, tmp_path_factory):
+    """Factory of streaming DataFrames over a one-file event source."""
+    import datetime as dt
+
+    rows = [(i, dt.datetime(2024, 1, 1, 0, i), i % 3, "click" if i % 2
+             else "purchase") for i in range(20)]
+    d = _write_batches(spark, tmp_path_factory.mktemp("ev"), [rows],
+                       ["event_id", "ts", "user_id", "event_type"])
+    schema = spark.read.parquet(d).schema
+
+    def make():
+        return _stream_dir(spark, d, schema).withWatermark("ts", "1 minute")
+
+    return make
+
+
+def _interval_join(mk, how="inner"):
+    a = mk().filter(F.col("event_type") == "click").select(
+        "user_id", F.col("ts").alias("a_ts"))
+    b = mk().filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("b_user"), F.col("ts").alias("b_ts"))
+    return a.join(b, (F.col("user_id") == F.col("b_user"))
+                  & F.col("b_ts").between(F.col("a_ts"),
+                                          F.col("a_ts") + F.expr(
+                                              "INTERVAL 5 minutes")), how)
+
+
+def _pandas_state(mk):
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def fn(key, pdfs, state):
+        yield pd.DataFrame({"user_id": [key[0]],
+                            "n": [sum(len(p) for p in pdfs)]})
+
+    return mk().groupBy("user_id").applyInPandasWithState(
+        fn, "user_id long, n long", "n long", "append",
+        GroupStateTimeout.NoTimeout)
+
+
+@pytest.mark.parametrize("build,emits", [
+    pytest.param(_interval_join, False, id="inner_join"),
+    pytest.param(lambda mk: mk().filter("user_id > 0").select("event_id"),
+                 False, id="stateless"),
+    pytest.param(lambda mk: _interval_join(mk, "left_outer"), True,
+                 id="left_outer_join"),
+    pytest.param(lambda mk: mk().groupBy(F.window("ts", "5 minutes"))
+                 .count(), True, id="append_aggregate"),
+    pytest.param(_pandas_state, True, id="pandas_with_state"),
+    pytest.param(lambda mk: _interval_join(mk).dropDuplicates(["user_id"]),
+                 True, id="join_then_dedup"),
+])
+def test_trailing_batch_classifier(ev_stream, build, emits):
+    """Only inner joins over stateless nodes may skip the trailing
+    watermark-only batch; every other stateful node keeps it."""
+    sdf = build(ev_stream)
+    tree = sdf._jdf.queryExecution().analyzed().treeString()
+    assert emits_on_watermark_advance(tree) is emits, tree
+
+
+@pytest.mark.parametrize("tree", [
+    "~Project [a#1]\n+- ~SomeFutureNode x\n   +- ~StreamingRelation s\n",
+    "~Project [a#1]\n+- ~Join Inner, (a#1 = b#2)\n   :- ~Project ... 9"
+    " more characters",
+    "~Join Cross\n:- ~StreamingRelation s\n+- ~StreamingRelation t\n",
+], ids=["unknown_node", "truncated_plan", "cross_join"])
+def test_trailing_batch_classifier_unknown_keeps(tree):
+    assert emits_on_watermark_advance(tree)
+
+
+@pytest.fixture
+def drain_batches(spark):
+    """Executed micro-batches per drain: ``{query name: [input rows of
+    each batch]}``, read from a StreamingQueryListener once every drain
+    started meanwhile has reported its termination."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    lock = threading.Lock()
+    events = {"started": set(), "ended": set(), "batches": {}}
+
+    class Counter(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            with lock:
+                events["started"].add(event.id)
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if "addBatch" in p.durationMs:  # an executed batch
+                with lock:
+                    events["batches"].setdefault(p.name, {})[p.batchId] = (
+                        p.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with lock:
+                events["ended"].add(event.id)
+
+    listener = Counter()
+    spark.streams.addListener(listener)
+
+    def read():
+        deadline = time.time() + 30
+        while time.time() < deadline:
+            with lock:
+                if events["started"] <= events["ended"]:
+                    break
+            time.sleep(0.05)
+        with lock:
+            return {name: [rows for _, rows in sorted(b.items())]
+                    for name, b in events["batches"].items()}
+
+    yield read
+    spark.streams.removeListener(listener)
+
+
+@pytest.mark.parametrize("name,prefix,skips", [
+    ("stream_interval_join", "ijoin", True),
+    ("stream_tumble_agg", "tumble", False),
+    ("stream_interval_join_left", "lojoin", False),
+])
+def test_drain_trailing_batch(spark, sf_dir, drain_batches, name, prefix,
+                              skips):
+    """An inner interval join drains in one micro-batch; append window
+    aggregates and outer joins still run the trailing watermark batch,
+    which reads no rows but emits the final windows / null rows."""
+    from flink_spark.queries.registry import QUERIES
+
+    QUERIES[name].fn(spark, sf_dir).collect()
+    (batches,) = [b for n, b in drain_batches().items()
+                  if n.startswith(prefix + "_")]
+    if skips:
+        assert len(batches) == 1 and batches[0] > 0, batches
+    else:
+        assert len(batches) >= 2 and batches[-1] == 0, batches
+    assert spark.conf.get(_NO_DATA) == "true"
+
+
+def test_drain_restores_no_data_batches_conf(spark, ev_stream):
+    """A skipping drain restores the session's setting afterwards, also
+    when the drain raises, and never overrides a session that turned the
+    trailing batch off itself."""
+    ok = ev_stream().select("event_id")
+    bad = ev_stream().select(
+        F.when(F.col("event_id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("event_id")).alias("event_id"))
+    assert not emits_on_watermark_advance(
+        bad._jdf.queryExecution().analyzed().treeString())
+    assert spark.conf.get(_NO_DATA) == "true"
+    assert run_to_memory(ok, "append", "nodata_ok").count() == 20
+    assert spark.conf.get(_NO_DATA) == "true"
+    with pytest.raises(Exception, match="boom"):
+        run_to_memory(bad, "append", "nodata_bad")
+    assert spark.conf.get(_NO_DATA) == "true"
+    spark.conf.set(_NO_DATA, "false")
+    try:
+        agg = ev_stream().groupBy(F.window("ts", "5 minutes")).count()
+        run_to_memory(agg, "append", "nodata_off").count()
+        assert spark.conf.get(_NO_DATA) == "false"
+    finally:
+        spark.conf.set(_NO_DATA, "true")
