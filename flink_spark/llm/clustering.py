@@ -23,11 +23,12 @@ llm/similarity.py (cell assignment by the same argmin construction).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _ranked_cells(vec: Column, centroids: list[list[float]]) -> Column:
+def _ranked_cells(spark: SparkSession, vec: Column,
+                  centroids: list[list[float]]) -> Column:
     """The (dist, idx)-sorted struct array as ONE SMALL Column tree over
     a single nested-array literal.
 
@@ -43,14 +44,12 @@ def _ranked_cells(vec: Column, centroids: list[list[float]]) -> Column:
     flink_spark.exprutil for the construction and the ±0.0 nuance
     (unobservable after ``(a-b)*(a-b)``: both subtraction results
     square to +0.0); the transform index equals the old ``{i} AS i``
-    int literal."""
-    from pyspark.sql import SparkSession
-
+    int literal. ``spark`` is the session of the DataFrame the Column
+    goes into."""
     from flink_spark.exprutil import double_array_lit
 
     cents = double_array_lit(
-        SparkSession.getActiveSession(),
-        [[float(x) for x in c] for c in centroids],
+        spark, [[float(x) for x in c] for c in centroids]
     )
     return F.sort_array(
         F.transform(
@@ -71,7 +70,7 @@ def assign_clusters(df: DataFrame, centroids: list[list[float]],
                     vec_col: str = "embedding") -> DataFrame:
     """Add ``cluster`` (argmin over centroids, ties → lowest index) and
     ``dist_sq`` columns. All-JVM expression, no shuffle."""
-    first = _ranked_cells(F.col(vec_col), centroids)[0]
+    first = _ranked_cells(df.sparkSession, F.col(vec_col), centroids)[0]
     return df.select(
         "*",
         first["i"].alias("cluster"),
@@ -141,7 +140,7 @@ def semantic_neardup_pairs(df, k: int = 8, n_iter: int = 3,
     v = F.col(vec_col)
     # single-literal ranking — see _ranked_cells for the analysis-cost
     # economics and bit-equivalence
-    ranked = _ranked_cells(v, centroids)
+    ranked = _ranked_cells(df.sparkSession, v, centroids)
     probes = df.select(
         F.col(id_col), v,
         F.explode(

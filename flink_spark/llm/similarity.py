@@ -121,11 +121,8 @@ def hyperplane_sketch(df: DataFrame, vec: str, n_planes: int = 16,
     key = (vec, n_planes, dim, table)
     bucket = _SKETCH_MEMO.get(key)
     if bucket is None:
-        from pyspark.sql import SparkSession
-
         from flink_spark.exprutil import double_array_lit
 
-        sess = SparkSession.getActiveSession()
         bucket = None
         vcol = F.expr(vec)
         for j in range(n_planes):
@@ -135,7 +132,8 @@ def hyperplane_sketch(df: DataFrame, vec: str, n_planes: int = 16,
             # every downstream operator — same economics (and
             # bit-equivalence; ±1.0 has no -0.0 hazard) as
             # clustering._ranked_cells
-            arr = double_array_lit(sess, hyperplane_plane(table, j, dim))
+            arr = double_array_lit(
+                df.sparkSession, hyperplane_plane(table, j, dim))
             dot = F.aggregate(
                 F.zip_with(vcol, arr,
                            lambda x, y: x.cast("double") * y),
@@ -489,12 +487,10 @@ def _pq_encode_with_books(cv: DataFrame, cand_id: str, m: int, sub: int,
     memo_key = (m, sub, str(books))
     cached = _PQ_ENC_MEMO.get(memo_key)
     if cached is None:
-        from pyspark.sql import SparkSession
-
         from flink_spark.exprutil import double_array_lit
 
         bl = double_array_lit(
-            SparkSession.getActiveSession(),
+            cv.sparkSession,
             [[[float(x) for x in cent] for cent in book] for book in books],
         )
         cvc = F.col("__cv")
@@ -563,6 +559,24 @@ def _pq_encode_with_books(cv: DataFrame, cand_id: str, m: int, sub: int,
     )
 
 
+def unique_queries(q: DataFrame, query_id: str, caller: str) -> DataFrame:
+    """The (``query_id``, ``__qv``) query side of a rerank, aggregated
+    by ``query_id``. A rerank re-attaches query vectors by id, where a
+    repeated id would multiply rows, so one fails the job instead. The
+    side is tiny and gets broadcast whole, so it is aggregated in one
+    partition: no exchange, and no extra shuffle job before the
+    broadcast."""
+    return q.coalesce(1).groupBy(query_id).agg(
+        F.count(F.lit(1)).alias("__n"), F.first("__qv").alias("__qv")
+    ).select(
+        query_id,
+        F.when(F.col("__n") == 1, F.col("__qv")).otherwise(F.raise_error(
+            F.concat(F.lit(f"{caller}: duplicate query_id "),
+                     F.col(query_id).cast("string"))
+        )).alias("__qv"),
+    )
+
+
 def pq_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -620,18 +634,9 @@ def pq_topk(
     # repeated query_id would multiply rows, so the contract is enforced
     # there: the (tiny) query side fails the job on a duplicate id.
     true_vec = candidates.select(cand_id, F.col(vec).alias("__cv"))
-    q_unique = q.groupBy(query_id).agg(
-        F.count(F.lit(1)).alias("__n"), F.first("__qv").alias("__qv")
-    ).select(
-        query_id,
-        F.when(F.col("__n") == 1, F.col("__qv")).otherwise(F.raise_error(
-            F.concat(F.lit("pq_topk: duplicate query_id "),
-                     F.col(query_id).cast("string"))
-        )).alias("__qv"),
-    )
     rer = (
         short.join(true_vec, cand_id)
-        .join(F.broadcast(q_unique), query_id)
+        .join(F.broadcast(unique_queries(q, query_id, "pq_topk")), query_id)
         .select(query_id, cand_id, cosine("__qv", "__cv").alias("cos_sim"))
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))

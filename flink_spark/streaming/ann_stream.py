@@ -128,7 +128,7 @@ class IvfStreamIndex:
         from flink_spark.llm.clustering import _ranked_cells
 
         ranked = _ranked_cells(
-            F.col(vec).cast("array<double>"), cents
+            queries.sparkSession, F.col(vec).cast("array<double>"), cents
         )
         cells = F.slice(ranked, 1, n_probe)
         probes = queries.select(
@@ -278,7 +278,7 @@ class PqStreamIndex:
              ) -> DataFrame:
         from pyspark.sql import Window
 
-        from flink_spark.llm.similarity import cosine
+        from flink_spark.llm.similarity import cosine, unique_queries
 
         if not self.books:
             return self.spark.createDataFrame(
@@ -317,7 +317,8 @@ class PqStreamIndex:
         )
         rer = (
             short.join(enc.select("cand_id", "__cv"), "cand_id")
-            .join(F.broadcast(q), query_id)
+            .join(F.broadcast(
+                unique_queries(q, query_id, "PqStreamIndex.topk")), query_id)
             .select(query_id, "cand_id",
                     cosine("__qv", "__cv").alias("cos_sim"))
         )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_spark.session import prepare_session
+from flink_spark.streaming.storeutil import drain_conf
 
 _COUNTER = itertools.count()
 
@@ -201,38 +202,45 @@ def run_to_memory(
     """Run a streaming DataFrame to completion (AvailableNow) into a memory
     sink; return the sink contents as a batch DataFrame.
 
-    State-partition sizing: the number of state-store instances is fixed at
-    query start from ``spark.sql.shuffle.partitions``, and each instance
-    pays per-batch snapshot/commit overhead — so streaming queries use
-    their own partition count (``SPARK_GRAFT_STREAM_SHUFFLE``, default 4
-    for local runs — A/B-measured ~25% faster than 8 at sf0.1; on a cluster set it ~1-2x total cores, it bounds both
-    state parallelism AND per-batch commit fan-out). The batch setting is
-    restored after the drain.
+    The drain runs under :func:`storeutil.drain_conf`, which restores
+    the session's settings afterwards:
 
-    Trailing batch: after the last data batch, Spark runs one more
-    micro-batch that reads no rows and only advances the watermark, which
-    emits the final rows of window aggregates, outer joins, sessions and
-    timers. A plan of inner joins over stateless nodes
-    (:func:`emits_on_watermark_advance` is False) emits only when a row
-    arrives, so that batch would only evict state from a checkpoint the
-    drain deletes anyway: for such plans the drain turns
-    ``spark.sql.streaming.noDataMicroBatches.enabled`` off, restoring the
-    session's value afterwards like the shuffle setting.
+    - State-partition sizing: the number of state-store instances is
+      fixed at query start from ``spark.sql.shuffle.partitions``, and
+      each instance pays per-batch snapshot/commit overhead, so drains
+      use their own partition count (``SPARK_GRAFT_STREAM_SHUFFLE``,
+      default 4 for local runs, A/B-measured ~25% faster than 8 at
+      sf0.1; on a cluster set it ~1-2x total cores, it bounds both state
+      parallelism AND per-batch commit fan-out).
+    - Checkpoint renames: Spark's default checkpoint file manager renames
+      every state-store delta, checksum, offset, commit and metadata
+      file through ``FileContext.rename``, which on a local disk without
+      libhadoop forks a ``readlink`` per rename. The drain uses the
+      FileSystem-based manager (``storeutil.DRAIN_CONF``), one rename(2)
+      that forks nothing. The default manager adds only an atomic
+      fail-if-exists rename, which catches a second writer on the same
+      checkpoint. This checkpoint has one writer by construction: a
+      fresh ``mkdtemp`` directory, and within one SparkContext Spark
+      keeps at most one active run per checkpoint id (a second start
+      either stops the first run or is rejected).
+    - Trailing batch: after the last data batch, Spark runs one more
+      micro-batch that reads no rows and only advances the watermark,
+      which emits the final rows of window aggregates, outer joins,
+      sessions and timers. A plan of inner joins over stateless nodes
+      (:func:`emits_on_watermark_advance` is False) emits only when a
+      row arrives, so that batch would only evict state from a
+      checkpoint the drain deletes anyway: for such plans the drain
+      turns ``spark.sql.streaming.noDataMicroBatches.enabled`` off.
     """
-    import os
     import shutil
     import tempfile
 
     spark = sdf.sparkSession
     name = f"{prefix}_{next(_COUNTER)}"
-    confs = {
-        "spark.sql.shuffle.partitions":
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
-    }
     tree = sdf._jdf.queryExecution().analyzed().treeString()
+    extra = {}
     if not emits_on_watermark_advance(tree):
-        confs[_NO_DATA_BATCHES] = "false"
-    saved = {k: spark.conf.get(k) for k in confs}
+        extra[_NO_DATA_BATCHES] = "false"
     # Explicit run-local checkpoint, deleted after the drain. Placed on
     # tmpfs when available (A/B-neutral vs page-cached /tmp locally, but
     # guarantees no disk churn). On a real cluster the checkpoint must be
@@ -243,21 +251,17 @@ def run_to_memory(
     )
     ckpt = tempfile.mkdtemp(prefix=f"flink_spark_ckpt_{name}_", dir=ckpt_root)
     try:
-        # start() clones the session's conf: set before it, restore after
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with drain_conf(spark, extra):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 

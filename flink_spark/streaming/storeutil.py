@@ -22,6 +22,7 @@ import os
 import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -194,23 +195,69 @@ def prepare_root(prefix: str, root: str | None) -> tuple[str, bool]:
     return root, persistent
 
 
+#: Session conf every drain starts under. Spark's default checkpoint
+#: file manager renames each state-store delta, checksum, offset, commit
+#: and metadata file through ``FileContext.rename``, which on a local
+#: disk without libhadoop asks ``RawLocalFileSystem.getFileLinkStatus``
+#: and so forks a ``readlink`` per rename: most of the processes a drain
+#: forks (``tools/spawn_audit.py`` lists them). The FileSystem-based
+#: manager renames through ``File.renameTo``, one rename(2) that forks
+#: nothing. Hadoop's ``.crc`` files and Spark's checkpoint checksums are
+#: unchanged.
+DRAIN_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
+
+
+@contextmanager
+def drain_conf(spark: SparkSession, extra: dict[str, str] | None = None):
+    """Hold the drain confs on ``spark`` for the with-block: the
+    streaming shuffle sizing (``SPARK_GRAFT_STREAM_SHUFFLE``, default 4;
+    see ``core.run_to_memory``), :data:`DRAIN_CONF` and ``extra``.
+    ``start()`` clones the session's conf, so the block must enclose it.
+    Afterwards, also when the block raises, each key gets its previous
+    value back, and a key the session never set is unset again."""
+    confs = {
+        "spark.sql.shuffle.partitions":
+            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
+        **DRAIN_CONF,
+        **(extra or {}),
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_drain(stream: DataFrame, process, ckpt: str) -> None:
     """Drain ``stream`` to completion through ``process`` (a
-    foreachBatch(batch, batch_id) callable) under the streaming shuffle
-    sizing (SPARK_GRAFT_STREAM_SHUFFLE — state-store instances are fixed
-    at query start from shuffle.partitions and each pays per-batch
-    commit overhead); the batch setting is restored after the drain.
+    foreachBatch(batch, batch_id) callable) under :func:`drain_conf`.
+
+    The checkpoint is written through the FileSystem-based manager of
+    :data:`DRAIN_CONF`, which forks no ``readlink`` per file rename. What
+    the default FileContext manager adds is an atomic fail-if-exists
+    rename, which only catches a second writer on the same checkpoint.
+    ``ckpt`` has one writer by construction: it lives under a root from
+    :func:`prepare_root` (a fresh tmpdir, or a durable root one resuming
+    caller owns), and within one SparkContext Spark keeps at most one
+    active run per checkpoint id (a second start either stops the first
+    run or is rejected).
 
     (Measured and rejected, r13: disabling AQE inside the drain — the
     per-shuffle query-stage jobs looked like pure driver round-trip
     overhead at delta scale, but an interleaved same-process A/B over
     curation/delta-join-ttl/semantic-neardup measured no win outside
     box noise, so the conf stays at the session default.)"""
-    spark = stream.sparkSession
-    stream_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle)
-    try:
+    with drain_conf(stream.sparkSession):
         q = (
             stream.writeStream.foreachBatch(process)
             .option("checkpointLocation", ckpt)
@@ -218,8 +265,6 @@ def run_drain(stream: DataFrame, process, ckpt: str) -> None:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def collect_out(

@@ -292,6 +292,24 @@ def test_pq_topk_default_shortlist_is_rows_independent(
     assert stream_out.count() == 50
 
 
+def test_pq_stream_topk_rejects_duplicate_query_id(spark, sf_dir, tmp_path):
+    """Like similarity.pq_topk, the streaming index's rerank re-attaches
+    query vectors by query_id: a repeated id fails the search instead of
+    multiplying rows."""
+    from flink_spark.streaming.ann_stream import pq_ingest_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    cands = _cands(spark, sf_dir)
+    _land(cands, tmp_path, src, "b0")
+    stream = spark.readStream.schema(cands.schema).parquet(str(src))
+    idx = pq_ingest_stream(stream, root=str(tmp_path / "pq_root"))
+    q = _queries(spark, sf_dir)
+    with pytest.raises(Exception, match="duplicate query_id"):
+        idx.topk(q.unionByName(q.limit(1)), k=3).collect()
+    assert idx.topk(q, k=3).count() == 30
+
+
 def test_ivf_empty_batch_after_training_leaves_store_identical(
     spark, sf_dir, tmp_path
 ):

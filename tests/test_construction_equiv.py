@@ -64,7 +64,7 @@ def test_ranked_cells_matches_both_old_forms(spark):
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
     new = df.select(
-        "id", _ranked_cells(F.col("v"), cents).alias("r")
+        "id", _ranked_cells(spark, F.col("v"), cents).alias("r")
     ).collect()
     old = df.select("id", _old_ranked(F.col("v"), cents).alias("r")).collect()
     old_sql = df.select(
@@ -218,3 +218,36 @@ def test_expr_memo_columns_reusable_across_frames(spark):
     # K agg columns present on both
     assert sum(c.startswith("mh_") for c in w1[0].asDict()) == 32
     assert sum(c.startswith("mh_") for c in w2[0].asDict()) == 32
+
+
+def test_literal_builders_use_the_dataframes_session(spark, monkeypatch):
+    """Built in a thread with no active session, the centroid ranking is
+    still one Literal node: the builder passes the DataFrame's session to
+    double_array_lit, where ``getActiveSession()`` would be None and
+    silently take the O(elements) fallback."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from flink_spark import exprutil
+    from flink_spark.llm.clustering import assign_clusters
+
+    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    df = spark.createDataFrame([(1, [0.5, 1.5])], "id long, v array<double>")
+    out = {}
+
+    def build():
+        out["active"] = SparkSession.getActiveSession()
+        out["df"] = assign_clusters(df, [[0.25, 1.0], [2.0, -3.0]], "v")
+
+    t = threading.Thread(target=build)
+    t.start()
+    t.join()
+    assert out["active"] is None
+    (col,) = exprutil._LIT_MEMO.values()
+    node = (
+        spark.range(1).select(col.alias("c"))._jdf.queryExecution()
+        .analyzed().expressions().apply(0).child()
+    )
+    assert node.getClass().getSimpleName() == "Literal"
+    assert [r["cluster"] for r in out["df"].collect()] == [0]

@@ -660,6 +660,10 @@ def test_watermark_alignment_throttles_fast_source(spark, tmp_path):
 # -- trailing watermark-only micro-batch ------------------------------------
 
 _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+_CKPT_MGR = "spark.sql.streaming.checkpointFileManagerClass"
+_MGR_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FS_MGR = _MGR_PKG + "FileSystemBasedCheckpointFileManager"
+_FC_MGR = _MGR_PKG + "FileContextBasedCheckpointFileManager"
 
 
 @pytest.fixture(scope="module")
@@ -804,10 +808,23 @@ def test_drain_trailing_batch(spark, sf_dir, drain_batches, name, prefix,
     assert spark.conf.get(_NO_DATA) == "true"
 
 
-def test_drain_restores_no_data_batches_conf(spark, ev_stream):
+def test_drain_restores_no_data_batches_conf(spark, ev_stream,
+                                             monkeypatch):
     """A skipping drain restores the session's setting afterwards, also
     when the drain raises, and never overrides a session that turned the
-    trailing batch off itself."""
+    trailing batch off itself. Every drain starts on the FileSystem-based
+    checkpoint manager; afterwards the key is unset again when the
+    session never had it and gets back a value the session set."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        started.append(self._spark.conf.get(_CKPT_MGR, None))
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
     ok = ev_stream().select("event_id")
     bad = ev_stream().select(
         F.when(F.col("event_id") == 3, F.raise_error(F.lit("boom")))
@@ -815,15 +832,54 @@ def test_drain_restores_no_data_batches_conf(spark, ev_stream):
     assert not emits_on_watermark_advance(
         bad._jdf.queryExecution().analyzed().treeString())
     assert spark.conf.get(_NO_DATA) == "true"
+    assert spark.conf.get(_CKPT_MGR, None) is None
     assert run_to_memory(ok, "append", "nodata_ok").count() == 20
     assert spark.conf.get(_NO_DATA) == "true"
+    assert spark.conf.get(_CKPT_MGR, None) is None
     with pytest.raises(Exception, match="boom"):
         run_to_memory(bad, "append", "nodata_bad")
     assert spark.conf.get(_NO_DATA) == "true"
+    assert spark.conf.get(_CKPT_MGR, None) is None
     spark.conf.set(_NO_DATA, "false")
+    spark.conf.set(_CKPT_MGR, _FC_MGR)
     try:
         agg = ev_stream().groupBy(F.window("ts", "5 minutes")).count()
         run_to_memory(agg, "append", "nodata_off").count()
         assert spark.conf.get(_NO_DATA) == "false"
+        assert spark.conf.get(_CKPT_MGR) == _FC_MGR
+        with pytest.raises(Exception, match="boom"):
+            run_to_memory(bad, "append", "nodata_bad_set")
+        assert spark.conf.get(_CKPT_MGR) == _FC_MGR
     finally:
         spark.conf.set(_NO_DATA, "true")
+        spark.conf.unset(_CKPT_MGR)
+    assert started == [_FS_MGR] * 4
+
+
+@pytest.mark.parametrize("before", [None, _FC_MGR], ids=["unset", "set"])
+def test_run_drain_checkpoint_manager_conf(spark, ev_stream, tmp_path,
+                                           before):
+    """foreachBatch drains run on the FileSystem-based checkpoint manager
+    (the batch's session shows it), and the session's own setting comes
+    back afterwards, also when the callback raises."""
+    from flink_spark.streaming.storeutil import run_drain
+
+    if before:
+        spark.conf.set(_CKPT_MGR, before)
+    seen = []
+
+    def record(batch, _bid):
+        seen.append(batch.sparkSession.conf.get(_CKPT_MGR))
+
+    def fail(batch, _bid):
+        raise RuntimeError("boom")
+
+    try:
+        run_drain(ev_stream(), record, str(tmp_path / "ok"))
+        assert seen and set(seen) == {_FS_MGR}
+        assert spark.conf.get(_CKPT_MGR, None) == before
+        with pytest.raises(Exception, match="boom"):
+            run_drain(ev_stream(), fail, str(tmp_path / "bad"))
+        assert spark.conf.get(_CKPT_MGR, None) == before
+    finally:
+        spark.conf.unset(_CKPT_MGR)
