@@ -1,23 +1,18 @@
 """Protobuf format mapping (reference flink-formats/flink-protobuf:
 PbDecodingFormat / PbEncodingFormat, PbCodegenSerializer/Deserializer).
 
-Two execution paths, chosen by capability:
+The codec is a self-contained proto3 *wire-format* codec for scalar
+fields, run as an Arrow-batched ``mapInPandas`` (no row-at-a-time UDFs,
+no google.protobuf dependency): varint (int32/int64/bool), fixed64
+(double), fixed32 (float), length-delimited (string/bytes); proto3
+default-value omission on encode, default fill on decode, unknown fields
+skipped. ``descriptor_set`` hand-builds the binary FileDescriptorSet (it
+is itself a protobuf message — no protoc needed) that Spark's native
+``to_protobuf``/``from_protobuf`` (spark-protobuf module) take.
 
-  1. JVM path — Spark's native ``to_protobuf``/``from_protobuf``
-     (spark-protobuf module). We hand-build the binary FileDescriptorSet
-     (it is itself a protobuf message, encoded by ``descriptor_set`` —
-     no protoc needed). Used when the spark-protobuf data source is
-     loaded in the session.
-  2. Python path — a self-contained proto3 *wire-format* codec for scalar
-     fields, run as an Arrow-batched ``mapInPandas`` (no row-at-a-time
-     UDFs, no google.protobuf dependency). Wire-compatible with path 1:
-     varint (int32/int64/bool), fixed64 (double), fixed32 (float),
-     length-delimited (string/bytes); proto3 default-value omission on
-     encode, default fill on decode, unknown fields skipped.
-
-Both paths produce/consume the same bytes, so data encoded here decodes
-with any standard protobuf runtime and vice versa. Scale: the Python
-path is a narrow mapInPandas over the binary column only — it keeps
+The bytes are standard proto3 wire format, so data encoded here decodes
+with any standard protobuf runtime and vice versa. Scale: the codec is a
+narrow mapInPandas over the binary column only — it keeps
 filter/project pushdown on every other column and batches via Arrow.
 
 proto3 semantics note: scalar fields have no null; NULL inputs encode as
@@ -26,8 +21,7 @@ the default value (0 / "" / b"" / false) and decode back as defaults.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 #: proto3 scalar type name → (wire type, FieldDescriptorProto.Type enum)
 _TYPES = {
@@ -97,19 +91,6 @@ def descriptor_set(
     # FileDescriptorProto: name=1, message_type=4, syntax=12
     fdp = _ld(1, proto_file.encode()) + _ld(4, msg) + _ld(12, b"proto3")
     return _ld(1, fdp)  # FileDescriptorSet.file (repeated) = 1
-
-
-def jvm_protobuf_available(spark) -> bool:
-    """True if the spark-protobuf data source is loaded in this session."""
-    try:
-        from pyspark.sql.protobuf.functions import to_protobuf
-
-        spark.range(1).select(
-            to_protobuf(F.struct(F.lit(1).alias("x")), "T", None)
-        )
-        return True
-    except Exception:
-        return False
 
 
 # ----------------------------------------------------- python wire codec --
@@ -263,20 +244,3 @@ def decode_protobuf(
             yield out
 
     return df.mapInPandas(run, schema)
-
-
-def to_protobuf_col(
-    spark, struct_col: Column, message: str,
-    fields: list[tuple[str, int, str]], desc_path: str,
-) -> Column | None:
-    """JVM-native ``to_protobuf`` over a struct column, or None when the
-    spark-protobuf data source is absent (callers fall back to
-    ``encode_protobuf``). ``desc_path`` receives the generated
-    FileDescriptorSet."""
-    if not jvm_protobuf_available(spark):
-        return None
-    from pyspark.sql.protobuf.functions import to_protobuf
-
-    with open(desc_path, "wb") as fh:
-        fh.write(descriptor_set(message, fields))
-    return to_protobuf(struct_col, message, desc_path)

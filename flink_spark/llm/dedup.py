@@ -160,25 +160,6 @@ def minhash_signatures_wide(df: DataFrame, text_col: str = "text",
     return hashed.groupBy(id_col).agg(*_mh_agg_cols())
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """K-row minhash table (doc_id, i, mh) — the long-format view of
-    ``minhash_signatures_wide`` (explode is per-row, no extra shuffle)."""
-    wide = minhash_signatures_wide(df, text_col, id_col)
-    sig_pairs = _EXPR_MEMO.get("sig_pairs")
-    if sig_pairs is None:
-        sig_pairs = F.array(
-            *[
-                F.struct(F.lit(i).alias("i"), F.col(f"mh_{i}").alias("mh"))
-                for i in range(MH_K)
-            ]
-        )
-        _EXPR_MEMO["sig_pairs"] = sig_pairs
-    return wide.select(id_col, F.explode(sig_pairs).alias("p")).select(
-        id_col, F.col("p.i").alias("i"), F.col("p.mh").alias("mh")
-    )
-
-
 def band_rows(wide: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """LSH band rows (id, band, sig) off a wide signature table: band key
     = concatenated minhashes of the band's MH_BAND_ROWS positions — a

@@ -27,21 +27,6 @@ def tokens(col) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def bpe_ish_tokens(col) -> Column:
-    """BPE-ish sub-word split: words plus punctuation as separate tokens
-    (regex token boundary model, the pre-pass real BPE tokenizers use)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # match sequences of word chars OR single non-space punctuation
-    return F.expr(
-        f"regexp_extract_all({c._jc.toString() if hasattr(c, '_jc') else col}, "
-        "'[a-zA-Z0-9]+|[^a-zA-Z0-9\\\\s]', 0)"
-    )
-
-
-def token_count(col) -> Column:
-    return F.size(tokens(col))
-
-
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-score features: length, token stats, stopword ratio,
     punctuation ratio, mean word length. Mirrors common pretraining-data

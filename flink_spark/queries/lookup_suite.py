@@ -118,10 +118,10 @@ def format_protobuf_roundtrip(spark, sf_dir):
     """Protobuf format (reference flink-formats/flink-protobuf
     PbCodegenSerializer/Deserializer): events rows serialized to proto3
     wire bytes and decoded back, then aggregated — the aggregate equals
-    the one over the original table iff the codec is lossless. Uses the
-    JVM spark-protobuf path when that data source is loaded, else the
-    Arrow-batched pure-Python wire codec (flink_spark/formats/protobuf.py)
-    — both emit standard proto3 wire format."""
+    the one over the original table iff the codec is lossless. The codec
+    is the Arrow-batched pure-Python wire codec
+    (flink_spark/formats/protobuf.py), which emits standard proto3 wire
+    format."""
     from flink_spark.formats.protobuf import decode_protobuf, encode_protobuf
     from flink_spark.queries.util import dsum
 

@@ -1908,6 +1908,7 @@ def stream_state_reader(spark, sf_dir):
 
     from flink_spark.streaming.core import stream_table
     from flink_spark.streaming.state_reader import read_keyed_state
+    from flink_spark.streaming.storeutil import drain_conf
 
     ev = stream_table(spark, sf_dir, "events").filter(
         F.col("user_id") <= 50
@@ -1920,13 +1921,16 @@ def stream_state_reader(spark, sf_dir):
     )
     ckpt = tempfile.mkdtemp(prefix="flink_spark_statereader_")
     try:
-        q = (
-            agg.writeStream.outputMode("update").format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        # an update-mode sink, which run_drain's foreachBatch does not
+        # give: start under the drain confs directly
+        with drain_conf(spark):
+            q = (
+                agg.writeStream.outputMode("update").format("noop")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         st = read_keyed_state(spark, ckpt)
         return st.select(
             F.col("key_event_type").alias("event_type"),

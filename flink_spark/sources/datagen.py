@@ -1,11 +1,13 @@
-"""DataGen / print / blackhole connector surface.
+"""DataGen / blackhole connector surface.
 
 Reference connectors (SURVEY §2.1):
   - datagen   ↔ DataGenTableSourceFactory (rate-limited random/sequence
     per-column synthesis) → Spark ``rate`` source + deterministic column
     expressions over the monotonically increasing ``value``.
-  - print     ↔ PrintTableSinkFactory → ``format("console")``.
   - blackhole ↔ BlackHoleTableSinkFactory → ``format("noop")``.
+
+The print connector (PrintTableSinkFactory) is the SQL
+``'connector' = 'print'`` sink in ``catalog.py``.
 
 Field generators are JVM expressions (hash-mix of the sequence number), so
 the stream is reproducible given the same row indices — the property
@@ -26,10 +28,6 @@ def _mix(seq: Column, salt: int) -> Column:
 
 def sequence_field(name: str, start: int = 0) -> tuple[str, "Column"]:
     return name, F.col("value") + F.lit(start)
-
-
-def random_long_field(name: str, lo: int, hi: int, salt: int = 0) -> tuple[str, Column]:
-    return name, (_mix(F.col("value"), salt) % (hi - lo)) + F.lit(lo)
 
 
 def random_double_field(name: str, lo: float, hi: float, salt: int = 1) -> tuple[str, Column]:
@@ -61,14 +59,9 @@ def datagen(
     return src.select(*cols)
 
 
-def print_sink(df: DataFrame, **options):
-    """Console sink (reference print connector); returns the query handle."""
-    return df.writeStream.format("console").options(**options).start()
-
-
 def blackhole_sink(df: DataFrame, trigger_available_now: bool = False):
     """No-op sink (reference blackhole connector) — throughput testing."""
-    w = df.writeStream.format("noop")
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    from flink_spark.streaming.triggers import start_stream
+
+    mode = "drain" if trigger_available_now else "on-watermark"
+    return start_stream(df, "noop", mode=mode)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_spark.session import prepare_session
+from flink_spark.streaming import storeutil
 from flink_spark.streaming.storeutil import drain_conf
 
 _COUNTER = itertools.count()
@@ -353,25 +354,6 @@ def chunked_table_stream(
     return df
 
 
-def run_files_in_batches(
-    spark: SparkSession,
-    dir_path: str,
-    schema,
-    transform,
-    output_mode: str = "append",
-    files_per_trigger: int = 1,
-    prefix: str = "fs_batched",
-) -> DataFrame:
-    """Stream a directory one file per micro-batch (watermark advances
-    between batches — the late-data test harness)."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(dir_path)
-    )
-    return run_to_memory(transform(src), output_mode, prefix)
-
-
 def with_current_watermark(
     stream: DataFrame, key_cols: list[str], out_col: str = "wm"
 ) -> DataFrame:
@@ -439,17 +421,16 @@ def side_output_late(
     same ``root`` (the restart path) classifies late data against the
     watermark the first run reached instead of silently resetting to
     None. Pass ``root`` to make the query restartable; the default keeps
-    the one-shot tmp-dir behavior."""
-    import shutil as _sh
-    import tempfile
+    the one-shot tmp-dir behavior. Both channels are ``__bid``-partitioned
+    stores (``storeutil.write_bid_partition``), so a replayed batch
+    overwrites its own channel rows instead of appending them twice."""
+    import shutil
 
     import pandas as pd
 
     spark = stream.sparkSession
     delay_td = pd.Timedelta(delay)
-    owns_root = root is None
-    if root is None:
-        root = tempfile.mkdtemp(prefix=f"flink_spark_{prefix}_")
+    root, persistent = storeutil.prepare_root(prefix, root)
     on_dir, late_dir, ckpt = f"{root}/on", f"{root}/late", f"{root}/ckpt"
     wm_dir = f"{root}/wm"
     os.makedirs(wm_dir, exist_ok=True)
@@ -492,14 +473,12 @@ def side_output_late(
             else:
                 late = batch.filter(F.col(ts_col) < _wm_lit(wm))
                 on_time = batch.filter(~(F.col(ts_col) < _wm_lit(wm)))
-            # the two channel appends and the batch-max aggregate are
+            # the two channel writes and the batch-max aggregate are
             # independent jobs over the persisted batch — overlap them
             # (storeutil.run_parallel, guide §2.6) so the batch pays
             # ~max instead of 3 sequential job costs; the watermark
             # sidecar still commits strictly AFTER all three (a crashed
             # batch must never leave a sidecar ahead of its data)
-            from flink_spark.streaming.storeutil import run_parallel
-
             holder: dict = {}
 
             def _agg():
@@ -507,9 +486,10 @@ def side_output_late(
                     batch.agg(F.max(ts_col).alias("m")).collect()[0].m
                 )
 
-            run_parallel(
-                lambda: on_time.write.mode("append").parquet(on_dir),
-                lambda: late.write.mode("append").parquet(late_dir),
+            write = storeutil.write_bid_partition
+            storeutil.run_parallel(
+                lambda: write(on_time, on_dir, batch_id),
+                lambda: write(late, late_dir, batch_id),
                 _agg,
             )
             mx = holder["mx"]
@@ -521,22 +501,15 @@ def side_output_late(
         finally:
             batch.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    empty = spark.createDataFrame([], stream.schema)
-    on_df = (
-        spark.read.parquet(on_dir).localCheckpoint(eager=True)
-        if os.path.isdir(on_dir) else empty
-    )
-    late_df = (
-        spark.read.parquet(late_dir).localCheckpoint(eager=True)
-        if os.path.isdir(late_dir) else empty
-    )
-    if owns_root:
-        _sh.rmtree(root, ignore_errors=True)
+    storeutil.run_drain(stream, process, ckpt)
+
+    def channel(d: str) -> DataFrame:
+        if not storeutil.has_parquet(d):
+            return spark.createDataFrame([], stream.schema)
+        rows = storeutil.read_store(spark, d).drop(storeutil.BID)
+        return rows.localCheckpoint(eager=True)
+
+    on_df, late_df = channel(on_dir), channel(late_dir)
+    if not persistent:
+        shutil.rmtree(root, ignore_errors=True)
     return on_df, late_df

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_spark.streaming.core import _STREAM_DIR_ROOT
+from flink_spark.streaming.storeutil import read_store, run_drain
 
 
 def tagged_ts_chunk_stream(
@@ -152,13 +153,7 @@ def combined_watermark_trace(
 
     ckpt = tempfile.mkdtemp(prefix="flink_spark_idleness_ckpt_")
     try:
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_drain(stream, process, ckpt)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     cols = ", ".join(f"{s}_active boolean" for s in sources)
@@ -206,8 +201,6 @@ def aligned_union_trace(
     all come out of the single gated aggregate.)"""
     import shutil
     import tempfile
-
-    from flink_spark.streaming.storeutil import read_store
 
     spark = stream.sparkSession
     drift_td = pd.Timedelta(max_drift)
@@ -309,22 +302,17 @@ def aligned_union_trace(
         )
         state["bid"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(lambda b, _i: run_round(b))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    flush_rounds = 0
-    while state["buf"] is not None:
-        flush_rounds += 1
-        if flush_rounds > 1000:
-            raise ValueError("alignment flush did not terminate")
-        run_round(None)
+    try:
+        run_drain(stream, lambda b, _i: run_round(b), ckpt)
+        flush_rounds = 0
+        while state["buf"] is not None:
+            flush_rounds += 1
+            if flush_rounds > 1000:
+                raise ValueError("alignment flush did not terminate")
+            run_round(None)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     cols = ", ".join(f"{s}_processed long" for s in sources)
-    out = spark.createDataFrame(
+    return spark.createDataFrame(
         state["trace"], f"batch_id long, {cols}, combined_max timestamp_ntz"
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out

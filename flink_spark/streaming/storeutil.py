@@ -1,8 +1,9 @@
 """Shared machinery for foreachBatch parquet state stores.
 
-The replay-exactness discipline established by streaming/deltajoin.py and
-streaming/dedup_jvm.py, factored out for every foreachBatch operator that
-keeps durable state as a batch-id-partitioned parquet table:
+The one replay-exactness discipline of every foreachBatch operator that
+keeps durable state as a batch-id-partitioned parquet table (users:
+streaming/deltajoin.py, dedup_jvm.py, curation_stream.py,
+neardup_stream.py, ann_stream.py and ``core.side_output_late``):
 
   - writes are ``__bid``-keyed dynamic partition overwrites, so a
     re-delivered micro-batch overwrites its own partition with identical

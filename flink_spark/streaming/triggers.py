@@ -15,8 +15,9 @@ mapping, expressed here as one helper:
 | table.exec.emit.early-fire.delay = 0ms     | Continuous (experimental; stateless maps/filters only) |
 | CountTriggers.of(n)                        | no Spark analog — count_window (operators/windows.py) covers count-based *windows*; count-based *emission* is documented out |
 
-``start_stream`` is the one writeStream path the repo's streaming
-operators share; tests drive every supported mode.
+``start_stream`` is the user-facing trigger API; tests drive every
+supported mode. The engine's own drains start in ``storeutil.run_drain``
+or ``core.run_to_memory`` instead.
 """
 
 from __future__ import annotations

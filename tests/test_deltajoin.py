@@ -342,34 +342,81 @@ def test_delta_join_empty_result_prunes_temp_root(spark, tmp_path):
 
 
 def test_delta_join_rejects_old_store_layout(spark, tmp_path):
-    """A durable root whose stores predate the __dj_bid layout must fail
+    """A durable root whose stores predate the __bid layout must fail
     with a clear layout error at start, not an opaque unresolved-column
-    error mid-batch."""
+    error mid-batch: both a marker-less root and a layout-v2 root whose
+    stores still use the former __dj_bid batch partition."""
     import pytest
 
-    root = tmp_path / "old_root"
-    (root / "left").mkdir(parents=True)
+    unversioned = tmp_path / "old_root"
+    (unversioned / "left").mkdir(parents=True)
     pd.DataFrame({"lk": [1], "lv": ["a"], "__dj_bucket": [0]}).to_parquet(
-        root / "left" / "part-0.parquet", index=False
+        unversioned / "left" / "part-0.parquet", index=False
     )
+    dj_bid = tmp_path / "dj_bid_root"
+    part = dj_bid / "left" / "__dj_bid=0" / "__dj_bucket=0"
+    part.mkdir(parents=True)
+    pd.DataFrame({"lk": [1], "lv": ["a"]}).to_parquet(
+        part / "part-0.parquet", index=False
+    )
+    (dj_bid / "_flink_spark_layout").write_text("2")
     left_pdf = pd.DataFrame({"lk": [1], "lv": ["a"]})
     right_pdf = pd.DataFrame({"rk": [1], "rv": ["w"]})
     lt = _chunked_stream(spark, tmp_path, "l", left_pdf, 1)
     rt = _chunked_stream(spark, tmp_path, "r", right_pdf, 1)
     tagged = tag_union(lt, rt, ["lk", "lv"], ["rk", "rv"])
-    # prepare_root's layout-version gate fires first (data, no marker);
-    # the __dj_bid-specific guard remains as defense-in-depth behind a
-    # manually-accepted marker
-    with pytest.raises(ValueError, match="layout"):
-        delta_join(tagged, ["lk", "lv"], ["rk", "rv"], ["lk"], ["rk"],
-                   root=str(root))
+    # the marker-less root trips prepare_root's layout-version gate (data,
+    # no marker); the marked __dj_bid root passes it and trips
+    # delta_join's own check for __bid partitions
+    for root in (unversioned, dj_bid):
+        with pytest.raises(ValueError, match="layout"):
+            delta_join(tagged, ["lk", "lv"], ["rk", "rv"], ["lk"], ["rk"],
+                       root=str(root))
+        # rejected before any batch ran: no checkpoint, no output
+        assert not (root / "ckpt").exists()
+        assert not (root / "out").exists()
+
+
+def test_delta_join_compaction_without_ttl_folds_stores(spark, tmp_path):
+    """compact_every without ttl folds each side store's strictly-earlier
+    __bid partitions into __bid=-1, so a long drain keeps a bounded
+    number of batch partitions instead of one per batch; the join stays
+    exact."""
+    import os
+
+    left_pdf = pd.DataFrame(
+        {"lk": [i % 3 for i in range(12)], "lv": [f"l{i}" for i in range(12)]}
+    )
+    right_pdf = pd.DataFrame(
+        {"rk": [i % 4 for i in range(12)], "rv": [f"r{i}" for i in range(12)]}
+    )
+    # 6 batches > 2 * compact_every: folds run after batches 1, 3 and 5
+    lt = _chunked_stream(spark, tmp_path, "l", left_pdf, 6)
+    rt = _chunked_stream(spark, tmp_path, "r", right_pdf, 6)
+    root = tmp_path / "root"
+    got = delta_join(
+        tag_union(lt, rt, ["lk", "lv"], ["rk", "rv"]),
+        ["lk", "lv"], ["rk", "rv"], ["lk"], ["rk"], num_buckets=2,
+        compact_every=2, root=str(root),
+    )
+    for side in ("left", "right"):
+        parts = [d for d in os.listdir(root / side) if "=" in d]
+        assert "__bid=-1" in parts and len(parts) <= 2, (side, parts)
+    got_rows = sorted((r.lk, r.lv, r.rk, r.rv) for r in got.collect())
+    expect = sorted(
+        (lr.lk, lr.lv, rr.rk, rr.rv)
+        for _, lr in left_pdf.iterrows()
+        for _, rr in right_pdf.iterrows()
+        if lr.lk == rr.rk
+    )
+    assert got_rows == expect
 
 
 def test_delta_join_crash_between_store_writes(spark, tmp_path, monkeypatch):
     """r10: the fail-between-writes pattern for deltajoin's THREE
     per-batch writes (out, left store, right store) — inject the crash
     after the out partition commits but before the left store write, so
-    the replayed batch must overwrite its own __dj_bid partitions with
+    the replayed batch must overwrite its own __bid partitions with
     identical content and the drain must still equal the batch join."""
     import pytest
     from pyspark.sql.readwriter import DataFrameWriter

@@ -236,7 +236,7 @@ def test_deltajoin_ttl_compaction_crash_exact_on_object_store(
     """Deltajoin's TTL compaction swap through the nastiest window (a
     TORN store copy): recovery restores the complete pre-compaction
     store (a superset the join's band predicate filters exactly), the
-    replayed batch overwrites its own __dj_bid partitions, and the
+    replayed batch overwrites its own __bid partitions, and the
     result equals the batch interval join."""
     import pandas as pd
 

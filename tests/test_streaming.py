@@ -607,6 +607,62 @@ def test_side_output_late_watermark_survives_restart(spark, tmp_path):
     assert sorted(r.id for r in on2.collect()) == [1, 3]  # dirs accumulate
 
 
+def test_side_output_late_exact_after_crash(spark, tmp_path, monkeypatch):
+    """A batch whose channel writes landed but whose checkpoint commit
+    did not is re-delivered on resume; it must overwrite its own channel
+    rows, not append them a second time."""
+    import pandas as pd
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from flink_spark.streaming.core import side_output_late
+
+    base = pd.Timestamp("2024-01-01 10:00:00")
+    chunks = [
+        [(1, base + pd.Timedelta(minutes=30))],              # wm := 10:20
+        [(2, base + pd.Timedelta(minutes=40)),               # on time
+         (3, base - pd.Timedelta(hours=1))],                 # late
+    ]
+    d = tmp_path / "late_crash_src"
+    d.mkdir()
+    for i, rows in enumerate(chunks):
+        pdf = pd.DataFrame(rows, columns=["id", "ts"])
+        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+        p = d / f"part-{i}.parquet"
+        pdf.to_parquet(p, index=False)
+        os.utime(p, (1_600_000_000 + 60 * i,) * 2)
+    root = str(tmp_path / "late_crash_root")
+
+    def run():
+        schema = spark.read.parquet(str(d)).schema
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d))
+        )
+        return side_output_late(stream, "ts", "10 minutes", root=root)
+
+    real = DataFrameWriter.parquet
+    on_writes = []
+
+    def crash_after_second_on_write(self, path, *a, **k):
+        out = real(self, path, *a, **k)
+        if path.endswith("/on"):
+            on_writes.append(path)
+            if len(on_writes) == 2:  # batch 1's on-time rows have landed
+                raise RuntimeError("injected crash after channel write")
+        return out
+
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", crash_after_second_on_write
+    )
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    on_time, late = run()  # resume: batch 1 is re-delivered
+    assert sorted(r.id for r in on_time.collect()) == [1, 2]
+    assert sorted(r.id for r in late.collect()) == [3]
+
+
 def test_watermark_alignment_throttles_fast_source(spark, tmp_path):
     """Watermark alignment (reference withWatermarkAlignment): a source
     ahead of the group frontier by more than max_drift defers its rows;
@@ -883,3 +939,73 @@ def test_run_drain_checkpoint_manager_conf(spark, ev_stream, tmp_path,
         assert spark.conf.get(_CKPT_MGR, None) == before
     finally:
         spark.conf.unset(_CKPT_MGR)
+
+
+# -- one drain path ----------------------------------------------------------
+
+#: (module under flink_spark/, enclosing function) of every
+#: ``availableNow`` trigger. Drains go through ``run_drain`` (foreachBatch)
+#: or ``run_to_memory`` (memory sink), which start them under
+#: ``storeutil.drain_conf``; ``start_stream`` is the user-facing trigger
+#: API, and ``stream_state_reader`` needs an update-mode sink (it holds
+#: ``drain_conf`` itself).
+_DRAIN_SITES = [
+    ("queries/streaming_suite.py", "stream_state_reader"),
+    ("streaming/core.py", "run_to_memory"),
+    ("streaming/storeutil.py", "run_drain"),
+    ("streaming/triggers.py", "start_stream"),
+]
+
+
+def _available_now_sites(root):
+    """Sorted (relpath, innermost function) of every ``availableNow=``
+    keyword argument in the .py files under ``root``."""
+    import ast
+
+    sites = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            funcs = [
+                n for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for node in ast.walk(tree):
+                if not (isinstance(node, ast.keyword)
+                        and node.arg == "availableNow"):
+                    continue
+                inner = [
+                    f for f in funcs
+                    if f.lineno <= node.value.lineno <= f.end_lineno
+                ]
+                innermost = max(inner, key=lambda f: f.lineno, default=None)
+                sites.append((rel, innermost and innermost.name))
+    return sorted(sites)
+
+
+def test_drains_start_only_through_drain_helpers():
+    """A new AvailableNow drain must go through run_drain/run_to_memory
+    (and so through drain_conf), not start its own writeStream."""
+    import flink_spark
+
+    pkg = os.path.dirname(flink_spark.__file__)
+    assert _available_now_sites(pkg) == _DRAIN_SITES
+
+
+def test_drain_site_scan_flags_new_site(tmp_path):
+    """The scan sees a direct drain (also nested in a callback), and not
+    a mention in a comment or docstring."""
+    (tmp_path / "op.py").write_text(
+        "def op(df):\n"
+        "    \"\"\"Drains with trigger(availableNow=True).\"\"\"\n"
+        "    def go():\n"
+        "        # .trigger(availableNow=True)\n"
+        "        return df.writeStream.trigger(availableNow=True).start()\n"
+        "    return go()\n"
+    )
+    assert _available_now_sites(str(tmp_path)) == [("op.py", "go")]
