@@ -40,14 +40,42 @@ carry no -0.0 on the test corpus.)
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-#: content-keyed memo of constructed literal Columns (expressions only —
-#: never row data; the values are plan-time constants by definition)
-_LIT_MEMO: dict[str, Column] = {}
+#: The engine's one memo of batch-independent plan pieces: expression
+#: Columns (literals, minhash/sketch/PQ/Gopher trees) and inferred read
+#: schemas. Metadata only, never row data. foreachBatch rebuilds every
+#: micro-batch's plan from scratch, and each functions.* call is a py4j
+#: round trip, so rebuilding these per batch is pure driver cost. An LRU
+#: of 256 entries: a full bench pass holds ~60 live keys, and what it
+#: evicts are schemas of deleted tmp store roots.
+_MEMO_CAP = 256
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def memo(key, build):
+    """The value memoized under ``key``, calling ``build()`` on a miss.
+    Keys lead with a tag naming their call site (``("lit", sql)``).
+    ``build`` runs outside the lock (store reads call this from
+    ``run_parallel`` threads); two threads that miss together both
+    build, and the later value wins."""
+    with _MEMO_LOCK:
+        if key in _MEMO:
+            _MEMO.move_to_end(key)
+            return _MEMO[key]
+    val = build()
+    with _MEMO_LOCK:
+        _MEMO[key] = val
+        _MEMO.move_to_end(key)
+        if len(_MEMO) > _MEMO_CAP:
+            _MEMO.popitem(last=False)
+    return val
 
 
 def _d_suffix_sql(value) -> str:
@@ -68,9 +96,10 @@ def double_array_lit(spark: SparkSession, value) -> Column:
     form (same values, O(elements) tree) if the classic-mode internals
     ever move."""
     sql = _d_suffix_sql(value)
-    col = _LIT_MEMO.get(sql)
-    if col is not None:
-        return col
+    return memo(("lit", sql), lambda: _literal_column(spark, sql))
+
+
+def _literal_column(spark: SparkSession, sql: str) -> Column:
     try:
         alias = (
             spark.sql("SELECT " + sql + " AS v")
@@ -79,14 +108,11 @@ def double_array_lit(spark: SparkSession, value) -> Column:
         lit = alias.child()  # ConstantFolding left Alias(Literal, "v")
         if not lit.getClass().getSimpleName() == "Literal":
             raise ValueError("constant folding did not yield a Literal")
-        jc = spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(
-            lit
+        return Column(
+            spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit)
         )
-        col = Column(jc)
     except (Py4JError, AttributeError, TypeError, ValueError):
         # version drift: a moved internal (AttributeError/Py4JError, or a
         # TypeError calling a JVM class that no longer exists) or a plan
         # the optimizer did not fold to one Literal (ValueError above)
-        col = F.expr(sql)
-    _LIT_MEMO[sql] = col
-    return col
+        return F.expr(sql)

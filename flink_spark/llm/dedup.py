@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import memo
+
 # MinHash parameters — shared verbatim with the SQL oracles.
 MH_PRIME = 2147483647  # 2^31 - 1
 MH_K = 32  # signature length
@@ -92,61 +94,38 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-# Batch-independent Column trees, built ONCE per process (lazily) and
-# reused across every plan that embeds them. Column objects are immutable
-# unresolved-expression wrappers, so sharing them between DataFrames is
-# safe; building them is NOT free — each functions.* call is a py4j
-# round trip (~1-2 ms on the bench box), and the K=32 minhash family
-# costs several hundred round trips per construction. The streaming
-# operators rebuild their per-batch plans inside foreachBatch, so before
-# this memo every micro-batch re-paid the full construction (measured:
-# ~0.9 s of the ~2.0 s per-batch plan-build in batch_neardup_plan —
-# guide §1.2 step 2: per-task work includes the DRIVER's per-batch work).
-_EXPR_MEMO: dict = {}
-
-
-def _memo(key, build):
-    val = _EXPR_MEMO.get(key)
-    if val is None:
-        val = build()
-        _EXPR_MEMO[key] = val
-    return val
+# Batch-independent Column trees, built ONCE per process (lazily, through
+# exprutil.memo) and reused across every plan that embeds them. Column
+# objects are immutable unresolved-expression wrappers, so sharing them
+# between DataFrames is safe; building them is NOT free — each
+# functions.* call is a py4j round trip (~1-2 ms on the bench box), and
+# the K=32 minhash family costs several hundred round trips per
+# construction. The streaming operators rebuild their per-batch plans
+# inside foreachBatch, so before this memo every micro-batch re-paid the
+# full construction (measured: ~0.9 s of the ~2.0 s per-batch plan-build
+# in batch_neardup_plan).
 
 
 def _mh_agg_cols() -> list:
     """The K min-aggregate columns of the wide signature table."""
-    cols = _EXPR_MEMO.get("mh_agg")
-    if cols is None:
-        cols = [
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % MH_PRIME).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(MH_PARAMS)
-        ]
-        _EXPR_MEMO["mh_agg"] = cols
-    return cols
+    return memo(("dedup", "mh_agg"), lambda: [
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MH_PRIME).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(MH_PARAMS)
+    ])
 
 
 def _band_structs() -> Column:
     """The bands array (band id, concatenated band signature)."""
-    col = _EXPR_MEMO.get("band_structs")
-    if col is None:
-        n_bands = MH_K // MH_BAND_ROWS
-        col = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh_{b * MH_BAND_ROWS + r}").cast("string")
-                            for r in range(MH_BAND_ROWS)
-                        ],
-                    ).alias("sig"),
-                )
-                for b in range(n_bands)
-            ]
+    return memo(("dedup", "band_structs"), lambda: F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(",", *[
+                F.col(f"mh_{b * MH_BAND_ROWS + r}").cast("string")
+                for r in range(MH_BAND_ROWS)
+            ]).alias("sig"),
         )
-        _EXPR_MEMO["band_structs"] = col
-    return col
+        for b in range(MH_K // MH_BAND_ROWS)
+    ]))
 
 
 def minhash_signatures_wide(df: DataFrame, text_col: str = "text",
@@ -185,9 +164,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # batch-independent Column lists, built once per (id_col) and reused
     # (same py4j-round-trip economics as _mh_agg_cols — this function is
     # called per bench pass and inside dedup_clusters)
-    ba = bands.select(*_memo(("ba", id_col), lambda: [
+    ba = bands.select(*memo(("dedup", "ba", id_col), lambda: [
         F.col(id_col).alias("doc_a"), F.col("band"), F.col("sig")]))
-    bb = bands.select(*_memo(("bb", id_col), lambda: [
+    bb = bands.select(*memo(("dedup", "bb", id_col), lambda: [
         F.col(id_col).alias("doc_b"), F.col("band"), F.col("sig")]))
     cand = (
         ba.join(bb, ["band", "sig"])
@@ -197,15 +176,15 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     )
     # verification: two wide-row joins + a 32-term agreement expression —
     # no per-position explode, no (doc, i) join
-    wa = wide.select(*_memo(("wa", id_col), lambda: [
+    wa = wide.select(*memo(("dedup", "wa", id_col), lambda: [
         F.col(id_col).alias("doc_a"),
         *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(MH_K)],
     ]))
-    wb = wide.select(*_memo(("wb", id_col), lambda: [
+    wb = wide.select(*memo(("dedup", "wb", id_col), lambda: [
         F.col(id_col).alias("doc_b"),
         *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(MH_K)],
     ]))
-    n_agree_col = _memo("n_agree_named", lambda: sum(
+    n_agree_col = memo(("dedup", "n_agree_named"), lambda: sum(
         (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int")
         for i in range(MH_K)
     ).alias("n_agree"))
@@ -333,7 +312,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    pot_col = _memo("cc_potential", lambda: F.sum(
+    pot_col = memo(("dedup", "cc_potential"), lambda: F.sum(
         F.col("comp").cast("decimal(38,0)")).alias("s"))
 
     def _potential(lbl: DataFrame):

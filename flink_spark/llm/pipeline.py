@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import memo
 from flink_spark.llm.text import LANG_STOPWORDS
 
 # ---------------------------------------------------------------------------
@@ -75,44 +76,39 @@ GOPHER_MAX_SYMBOL_RATIO = 0.1
 GOPHER_MIN_STOPWORD_TYPES = 2
 
 
-#: flag Column lists keyed by text_col — built once per process and
-#: reused (Columns are immutable; each functions.* call is a py4j round
-#: trip, and the streaming curation chain calls this per micro-batch)
-_GOPHER_COLS: dict = {}
-
-
 def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-rules quality filter (word count band, mean word length band,
     symbol-to-char ratio, stopword-presence) → per-rule booleans + keep.
     All JVM expressions; the filter itself is a codegen'd predicate that
-    Catalyst can push below later joins."""
-    flag_cols = _GOPHER_COLS.get(text_col)
-    if flag_cols is None:
-        toks = F.split(F.trim(F.col(text_col)), r"\s+")
-        n_words = F.size(toks)
-        mean_wl = (F.length(F.col(text_col)) - n_words + 1) / n_words
-        n_symbols = F.length(F.col(text_col)) - F.length(
-            F.regexp_replace(F.col(text_col), r"[#@\.\*]", "")
-        )
-        stop = F.array([F.lit(w) for w in LANG_STOPWORDS["en"]])
-        n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop))
-        ok_words = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
-        ok_wl = (mean_wl >= GOPHER_MEAN_WORD_LEN_MIN) & (
-            mean_wl <= GOPHER_MEAN_WORD_LEN_MAX
-        )
-        ok_sym = (
-            n_symbols / F.length(F.col(text_col))
-        ) <= GOPHER_MAX_SYMBOL_RATIO
-        ok_stop = n_stop >= GOPHER_MIN_STOPWORD_TYPES
-        flag_cols = [
-            ok_words.alias("ok_word_count"),
-            ok_wl.alias("ok_mean_word_len"),
-            ok_sym.alias("ok_symbol_ratio"),
-            ok_stop.alias("ok_stopwords"),
-            (ok_words & ok_wl & ok_sym & ok_stop).alias("keep"),
-        ]
-        _GOPHER_COLS[text_col] = flag_cols
-    return df.select("*", *flag_cols)
+    Catalyst can push below later joins. The flag Columns are memoized
+    per ``text_col`` (each functions.* call is a py4j round trip, and the
+    streaming curation chain calls this per micro-batch)."""
+    return df.select("*", *memo(("gopher", text_col),
+                                lambda: _gopher_flag_cols(text_col)))
+
+
+def _gopher_flag_cols(text_col: str) -> list:
+    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    n_words = F.size(toks)
+    mean_wl = (F.length(F.col(text_col)) - n_words + 1) / n_words
+    n_symbols = F.length(F.col(text_col)) - F.length(
+        F.regexp_replace(F.col(text_col), r"[#@\.\*]", "")
+    )
+    stop = F.array([F.lit(w) for w in LANG_STOPWORDS["en"]])
+    n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop))
+    ok_words = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
+    ok_wl = (mean_wl >= GOPHER_MEAN_WORD_LEN_MIN) & (
+        mean_wl <= GOPHER_MEAN_WORD_LEN_MAX
+    )
+    ok_sym = n_symbols / F.length(F.col(text_col)) <= GOPHER_MAX_SYMBOL_RATIO
+    ok_stop = n_stop >= GOPHER_MIN_STOPWORD_TYPES
+    return [
+        ok_words.alias("ok_word_count"),
+        ok_wl.alias("ok_mean_word_len"),
+        ok_sym.alias("ok_symbol_ratio"),
+        ok_stop.alias("ok_stopwords"),
+        (ok_words & ok_wl & ok_sym & ok_stop).alias("keep"),
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import double_array_lit, memo
+
 # Exact cross-engine dot product / norm over double arrays WITHOUT decimal
 # arithmetic: Spark's `aggregate` is a sequential left fold (0.0 + x1 + x2
 # + …) and DuckDB's `list_reduce` folds the same order starting from x1;
@@ -75,15 +77,6 @@ def brute_force_topk(
     )
 
 
-#: memoized sketch-bucket Columns keyed by (vec, n_planes, dim, table) —
-#: see hyperplane_sketch docstring
-_SKETCH_MEMO: dict = {}
-
-#: memoized PQ code/recon expression Columns keyed by (m, sub, books
-#: content) — see _pq_encode_with_books docstring
-_PQ_ENC_MEMO: dict = {}
-
-
 def hyperplane_plane(table: int, j: int, dim: int = 64) -> list[float]:
     """Plane r_j of family ``table``: ±1 per dimension from the first 8
     md5 hex digits of "table:j:i" — the same numbers the in-engine
@@ -118,33 +111,32 @@ def hyperplane_sketch(df: DataFrame, vec: str, n_planes: int = 16,
     per micro-batch, and constructing the n_planes literal folds costs
     ~0.1 s of py4j round trips each time while the expression itself is
     batch-independent."""
-    key = (vec, n_planes, dim, table)
-    bucket = _SKETCH_MEMO.get(key)
-    if bucket is None:
-        from flink_spark.exprutil import double_array_lit
-
-        bucket = None
-        vcol = F.expr(vec)
-        for j in range(n_planes):
-            # each plane is ONE array<double> Literal node
-            # (exprutil.double_array_lit), not dim CAST('…') nodes:
-            # plan analysis is tree-size-proportional and re-runs at
-            # every downstream operator — same economics (and
-            # bit-equivalence; ±1.0 has no -0.0 hazard) as
-            # clustering._ranked_cells
-            arr = double_array_lit(
-                df.sparkSession, hyperplane_plane(table, j, dim))
-            dot = F.aggregate(
-                F.zip_with(vcol, arr,
-                           lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            bit = F.when(dot > 0, F.shiftleft(F.lit(1), j)).otherwise(F.lit(0))
-            bucket = bit if bucket is None else bucket + bit
-        bucket = bucket.cast("int")
-        _SKETCH_MEMO[key] = bucket
+    bucket = memo(
+        ("sketch", vec, n_planes, dim, table),
+        lambda: _sketch_bucket(df.sparkSession, vec, n_planes, dim, table),
+    )
     return df.withColumn("bucket", bucket)
+
+
+def _sketch_bucket(spark, vec: str, n_planes: int, dim: int,
+                   table: int) -> Column:
+    bucket = None
+    vcol = F.expr(vec)
+    for j in range(n_planes):
+        # each plane is ONE array<double> Literal node
+        # (exprutil.double_array_lit), not dim CAST('…') nodes: plan
+        # analysis is tree-size-proportional and re-runs at every
+        # downstream operator — same economics (and bit-equivalence;
+        # ±1.0 has no -0.0 hazard) as clustering._ranked_cells
+        arr = double_array_lit(spark, hyperplane_plane(table, j, dim))
+        dot = F.aggregate(
+            F.zip_with(vcol, arr, lambda x, y: x.cast("double") * y),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bit = F.when(dot > 0, F.shiftleft(F.lit(1), j)).otherwise(F.lit(0))
+        bucket = bit if bucket is None else bucket + bit
+    return bucket.cast("int")
 
 
 def lsh_topk(
@@ -484,79 +476,77 @@ def _pq_encode_with_books(cv: DataFrame, cand_id: str, m: int, sub: int,
     O(1). Values are bit-identical — see exprutil for the construction
     and the ±0.0 nuance (unobservable: codebook elements only feed the
     squared-difference fold and cosine sums)."""
-    memo_key = (m, sub, str(books))
-    cached = _PQ_ENC_MEMO.get(memo_key)
-    if cached is None:
-        from flink_spark.exprutil import double_array_lit
-
-        bl = double_array_lit(
-            cv.sparkSession,
-            [[[float(x) for x in cent] for cent in book] for book in books],
-        )
-        cvc = F.col("__cv")
-
-        def argmin(j):
-            # per-subspace code: ascending (d, i) struct sort = lowest
-            # code among equal distances; +1 → the 1-based stored code
-            cents = F.element_at(bl, j + F.lit(1))
-            subv = F.slice(cvc, j * F.lit(sub) + F.lit(1), F.lit(sub))
-            ranked = F.sort_array(F.transform(
-                cents,
-                lambda c, i: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            subv, c,
-                            lambda x, y: (x.cast("double") - y)
-                            * (x.cast("double") - y),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ).alias("d"),
-                    i.alias("i"),
-                ),
-            ))
-            return (ranked[0]["i"] + F.lit(1)).cast("int")
-
-        # dim guard (ADVICE r12): the saved-books path derives sub from
-        # the books and never probes the data, so a caller whose vectors
-        # don't match m×sub would silently encode null-padded garbage
-        # (zip_with pads, null distances sort first). One size()
-        # comparison per row — negligible next to the m×ks distance
-        # folds — turns that into a clean error; the train path's
-        # d % m check is unchanged.
-        dim_ok = cvc.isNull() | (F.size(cvc) == F.lit(m * sub))
-        dim_err = F.raise_error(F.concat(
-            F.lit("pq_encode: vector dim "),
-            F.size(cvc).cast("string"),
-            F.lit(f" does not match saved codebooks (m={m} × sub={sub} "
-                  f"= {m * sub})"),
-        ))
-        seq = F.sequence(F.lit(0), F.lit(m - 1))
-        code_col = F.when(dim_ok, F.transform(seq, argmin)) \
-            .otherwise(dim_err)
-        # recon embeds its own per-subspace argmin instead of
-        # referencing __code: a column reference here would be INLINED
-        # by projection collapse — each of the m element_at(__code, ·)
-        # lookups would re-evaluate the full m-subspace codes transform
-        # (m× the work, measured 17 s vs 1 s on the bench box).
-        # Self-contained, a caller that prunes to __recon alone
-        # evaluates each distance exactly once.
-        recon_col = F.when(
-            dim_ok,
-            F.flatten(F.transform(
-                seq,
-                lambda j: F.element_at(
-                    F.element_at(bl, j + F.lit(1)), argmin(j)
-                ),
-            )),
-        ).otherwise(dim_err)
-        cached = (code_col, recon_col)
-        _PQ_ENC_MEMO[memo_key] = cached
-    code_col, recon_col = cached
+    code_col, recon_col = memo(
+        ("pq_enc", m, sub, str(books)),
+        lambda: _pq_enc_cols(cv.sparkSession, m, sub, books),
+    )
     return cv.select(
         cand_id, "__cv",
         code_col.alias("__code"), recon_col.alias("__recon"),
     )
+
+
+def _pq_enc_cols(spark, m: int, sub: int, books: list) -> tuple:
+    bl = double_array_lit(
+        spark, [[[float(x) for x in cent] for cent in book] for book in books]
+    )
+    cvc = F.col("__cv")
+
+    def argmin(j):
+        # per-subspace code: ascending (d, i) struct sort = lowest
+        # code among equal distances; +1 → the 1-based stored code
+        cents = F.element_at(bl, j + F.lit(1))
+        subv = F.slice(cvc, j * F.lit(sub) + F.lit(1), F.lit(sub))
+        ranked = F.sort_array(F.transform(
+            cents,
+            lambda c, i: F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        subv, c,
+                        lambda x, y: (x.cast("double") - y)
+                        * (x.cast("double") - y),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                ).alias("d"),
+                i.alias("i"),
+            ),
+        ))
+        return (ranked[0]["i"] + F.lit(1)).cast("int")
+
+    # dim guard (ADVICE r12): the saved-books path derives sub from
+    # the books and never probes the data, so a caller whose vectors
+    # don't match m×sub would silently encode null-padded garbage
+    # (zip_with pads, null distances sort first). One size()
+    # comparison per row — negligible next to the m×ks distance
+    # folds — turns that into a clean error; the train path's
+    # d % m check is unchanged.
+    dim_ok = cvc.isNull() | (F.size(cvc) == F.lit(m * sub))
+    dim_err = F.raise_error(F.concat(
+        F.lit("pq_encode: vector dim "),
+        F.size(cvc).cast("string"),
+        F.lit(f" does not match saved codebooks (m={m} × sub={sub} "
+              f"= {m * sub})"),
+    ))
+    seq = F.sequence(F.lit(0), F.lit(m - 1))
+    code_col = F.when(dim_ok, F.transform(seq, argmin)).otherwise(dim_err)
+    # recon embeds its own per-subspace argmin instead of
+    # referencing __code: a column reference here would be INLINED
+    # by projection collapse — each of the m element_at(__code, ·)
+    # lookups would re-evaluate the full m-subspace codes transform
+    # (m× the work, measured 17 s vs 1 s on the bench box).
+    # Self-contained, a caller that prunes to __recon alone
+    # evaluates each distance exactly once.
+    recon_col = F.when(
+        dim_ok,
+        F.flatten(F.transform(
+            seq,
+            lambda j: F.element_at(
+                F.element_at(bl, j + F.lit(1)), argmin(j)
+            ),
+        )),
+    ).otherwise(dim_err)
+    return code_col, recon_col
 
 
 def unique_queries(q: DataFrame, query_id: str, caller: str) -> DataFrame:

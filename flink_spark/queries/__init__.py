@@ -35,629 +35,16 @@ from flink_spark.queries import tpcds_shapes  # noqa: F401
 from flink_spark.queries import ddl_suite  # noqa: F401
 from flink_spark.queries import tpcds_shapes2  # noqa: F401
 
-# Round-8 verification rotation: the driver samples the FIRST 50
-# registered queries. 241 names carry external CORRECTNESS rows (r1-r7);
-# 110 have never been sampled. This head promotes (a) the full
-# never-sampled streaming tail (14), both CEP variants, the verdict-named
-# specials (agg_group_id, ml_evaluate_metrics, llm_vector_search_sql_ann
-# — the latter deliberately rows-only: its recall gate is not
-# SQL-expressible, and the judge asked for its external row anyway),
-# (b) the r7-new DDL/function/operator gates (fn_* construct suites,
-# bitmap aggs, datastream/compile-plan/statement-set/datagen/mt-schema
-# DDL, skew-salted join, video frame sampling, multimodal meta, async
-# calc, temporal table fn SQL, sliding-rows over frame), (c) the r8-new
-# fn_type_precision_suite (DECIMAL p=38 edge / CHAR pad-trim /
-# TIMESTAMP(n) truncation — SURVEY §7.3 ⑦ closed this round), and
-# (d) 13 TPC-DS shapes. tpch_q1_pricing_summary stays first (entry()
-# runs it). All 50 verified locally vs DuckDB at sf0.01 under the
-# dtype-strict + non-scalar-rejecting gate before promotion; r9's head
-# retires the remaining ~60.
-VERIFICATION_ROTATION_R8 = [
-    "tpch_q1_pricing_summary",
-    # r8-new precision-corner gate
-    "fn_type_precision_suite",
-    # streaming tail — every never-sampled stream_* query
-    "stream_cep_click_purchase",
-    "stream_static_lookup_join",
-    "stream_over_rows_bounded",
-    "stream_over_range_bounded",
-    "stream_interval_join_left",
-    "stream_drop_update_before",
-    "stream_session_dynamic_gap",
-    "stream_temporal_sort_ttl",
-    "stream_cep_ttl",
-    "stream_session_window_join",
-    "stream_delta_join_full",
-    "stream_window_dedup",
-    "stream_current_watermark",
-    "stream_dedup_first_tws",
-    # CEP variants
-    "cep_error_triples",
-    "cep_alternation_funnel",
-    # verdict-named specials
-    "agg_group_id",
-    "ml_evaluate_metrics",
-    "llm_vector_search_sql_ann",
-    # over-window / temporal-fn tail
-    "over_sliding_rows_frame",
-    "temporal_table_function_sql",
-    # r7-new function/agg gates
-    "fn_hash_json_random_suite",
-    "fn_object_of_suite",
-    "fn_json_construct_suite",
-    "agg_bitmap_build",
-    "agg_bitmap_merge_family",
-    "async_calc_enrich",
-    # r7-new DDL/operator gates
-    "ddl_mt_schema_roundtrip",
-    "ddl_datagen_sequence",
-    "datastream_pipeline",
-    "ddl_compile_execute_plan",
-    "ddl_statement_set",
-    "join_skew_salted",
-    # multimodal
-    "llm_video_frame_sample",
-    "llm_multimodal_meta",
-    # TPC-DS shapes (13 of the 44 never-sampled; r9 takes the rest)
-    "tpcds_q22_inventory_rollup",
-    "tpcds_q37_inventory_instock",
-    "tpcds_q92_excess_discount",
-    "tpcds_q53_quarterly_class_deviation",
-    "tpcds_q1_return_threshold",
-    "tpcds_q25_buy_return_rebuy",
-    "tpcds_q17_quantity_deviation",
-    "tpcds_q90_am_pm_ratio",
-    "tpcds_q9_bucket_stats",
-    "tpcds_q44_best_worst_rank",
-    "tpcds_q62_latency_bands",
-    "tpcds_q41_attribute_combos",
-    "tpcds_q13_band_disjunction_avgs",
-]
-
-# Round-7 rotation, kept for provenance (spent — 50/50 green in r7).
-# (Historical comment:) the driver samples the FIRST 50
-# registered queries. 193 names carry external CORRECTNESS rows (r1-r6);
-# 105 have never been sampled. This head promotes (a) the three r7 DML/
-# DDL surfaces — ddl_delete_update_roundtrip re-promoted because its
-# oracle CHANGED this round (NULL-predicate DELETE leg, the r6 verdict's
-# one confirmed bug), plus the new ddl_pk_upsert_dml and
-# ddl_connection_roundtrip — and (b) 46 never-externally-verified
-# exact-oracled tail queries: the verdict-named specials
-# (pipe_longsubstring_*, fn_overlaps_suite, fn_json_table), the three
-# remaining format gates, eight ddl/explain/tableapi gates, and 31
-# TPC-DS shapes. tpch_q1_pricing_summary stays first (entry() runs it).
-# All 50 verified exact vs DuckDB at sf0.01 under the dtype-strict +
-# non-scalar-rejecting gate before promotion. r8 retires ~49 of the
-# remaining ~56.
-VERIFICATION_ROTATION_R7 = [
-    "tpch_q1_pricing_summary",
-    # r7 changed/new surfaces
-    "ddl_delete_update_roundtrip",
-    "ddl_pk_upsert_dml",
-    "ddl_connection_roundtrip",
-    # verdict-named specials, never sampled
-    "pipe_longsubstring_spans",
-    "pipe_longsubstring_filter",
-    "fn_overlaps_suite",
-    "fn_json_table",
-    # remaining format gates
-    "format_avro_confluent_roundtrip",
-    "format_sequence_file_roundtrip",
-    "format_compressed_write",
-    # ddl / explain / tableapi gates
-    "materialized_table_refresh",
-    "ctas_roundtrip",
-    "ddl_catalog_module_roundtrip",
-    "explain_plan_advice_gate",
-    "ddl_alter_partition_roundtrip",
-    "ddl_create_function_sql",
-    "tableapi_pricing_summary",
-    "ddl_distributed_join",
-    # TPC-DS shapes (31 of the 57 never-sampled)
-    "tpcds_q3_brand_year_report",
-    "tpcds_q7_star_profile",
-    "tpcds_q19_cross_nation_brand",
-    "tpcds_q23_frequent_parts_best_customers",
-    "tpcds_q33_channel_union_brand",
-    "tpcds_q36_margin_rollup_rank",
-    "tpcds_q48_disjunct_bands",
-    "tpcds_q88_timeband_pivot",
-    "tpcds_q34_linecount_band_buyers",
-    "tpcds_q5_multi_channel_rollup",
-    "tpcds_q93_net_after_returns",
-    "tpcds_q10_exists_two_facts",
-    "tpcds_q97_channel_overlap",
-    "tpcds_q38_channel_intersect",
-    "tpcds_q74_yoy_growth",
-    "tpcds_q47_moving_deviation",
-    "tpcds_q50_returns_latency",
-    "tpcds_q58_balanced_channels",
-    "tpcds_q78_net_of_returns",
-    "tpcds_q95_multi_supplier_orders",
-    "tpcds_q54_spend_bands",
-    "tpcds_q31_qoq_growth",
-    "tpcds_q35_active_rollup",
-    "tpcds_q14_cross_channel_items",
-    "tpcds_q40_pivot_around_date",
-    "tpcds_q66_monthly_pivot",
-    "tpcds_q75_yoy_decline",
-    "tpcds_q70_share_rank_rollup",
-    "tpcds_q49_return_ratio_rank",
-    "tpcds_q16_semi_anti_report",
-    "tpcds_q21_inventory_ratio",
-]
-
-# Round-6 rotation, kept for provenance (spent — 50/50 green in r6).
-# (Historical comment:) the driver samples the FIRST 50
-# registered queries. 145 names now carry external CORRECTNESS rows
-# (r1-r5). This head promotes (a) the five queries repaired after r5's
-# red row — fn_array_suite2 crashed the driver canonicalizer on
-# array-typed cells, so every gated query now renders arrays via
-# ARRAY_JOIN; the other four had the same latent trap — and (b) 44
-# never-externally-verified exact-oracled queries from the tail:
-# over-window frames, window evictors/offsets/count windows, batch
-# interval/window/session joins, LLM text-analysis + multimodal +
-# near-dup operators, the streaming TTL twins and watermark machinery,
-# CEP/MATCH_RECOGNIZE variants, protobuf/avro formats, and the r5-new
-# join_hints_gate + row-level DELETE/UPDATE DML.
-# tpch_q1_pricing_summary stays first (entry() runs it). All 50
-# verified exact vs DuckDB at sf0.01 under the dtype-strict +
-# non-scalar-rejecting gate before promotion.
-VERIFICATION_ROTATION_R6 = [
-    "tpch_q1_pricing_summary",
-    # repaired after the r5 red row (array-typed cells -> ARRAY_JOIN)
-    "fn_array_suite2",
-    "fn_map_suite2",
-    "fn_string_extra_suite",
-    "fn_name_parity_suite",
-    "agg_variance_family",
-    # over windows / rank / dedup tail
-    "over_ntile_cume_percent",
-    "over_running_rows_frame",
-    "dedup_keep_last",
-    "topn_variable_rank_range",
-    # batch interval/window/session joins + count windows + evictors
-    "interval_join_events",
-    "window_join_events",
-    "window_count_tumble",
-    "window_tumble_offset",
-    "session_window_join",
-    "window_time_evictor",
-    "window_count_evictor",
-    "window_delta_evictor",
-    # LLM text analysis / near-dup / multimodal
-    "llm_fingerprint",
-    "llm_quality_score",
-    "llm_lang_id",
-    "llm_ngram_jaccard_pairs",
-    "llm_cosine_neardup_pairs",
-    "llm_multimodal_decode",
-    "llm_image_resize",
-    # streaming machinery tail (TTL twins, watermark ops, over-agg)
-    "stream_over_rows",
-    "ptf_event_gaps",
-    "stream_temporal_sort",
-    "stream_multiway_join",
-    "stream_coprocess_threshold",
-    "stream_cumulate_agg",
-    "cdc_ogg_materialize",
-    "stream_window_join",
-    "stream_dedup_first_ttl",
-    "stream_topn_ttl",
-    "stream_delta_join_left",
-    "stream_window_topn",
-    "stream_source_idleness",
-    "stream_watermark_alignment",
-    # CEP / MATCH_RECOGNIZE variants
-    "cep_browse_then_buy",
-    "cep_clean_conversion",
-    "sql_match_subset_union",
-    # formats
-    "format_protobuf_roundtrip",
-    "format_avro_roundtrip",
-    # aggregates / functions / pipeline tail
-    "agg_json_objectagg",
-    "fn_misc_suite",
-    "pipe_pii_redact",
-    "pipe_incremental_dedup",
-    # r5-new surfaces not yet externally sampled
-    "join_hints_gate",
-    "ddl_delete_update_roundtrip",
-]
-
-# Round-5 rotation, kept for provenance (spent — 49/50 green in r5; the
-# 50th, fn_array_suite2, is repaired and re-promoted above).
-# (Historical comment:) the driver samples the FIRST 50
-# registered queries. r1-r3 covered the TPC-H/relational prefix, r4 the
-# streaming/CEP/window/LLM block; this head promotes (a) the four queries
-# repaired after r4's red rows (fn_array_suite, llm_minhash_lsh_pairs,
-# both sequence-pack twins) so the fixes earn green rows, (b) the new r5
-# surfaces (changelog-mode gate, VECTOR_SEARCH SQL, legacy group
-# windows), and (c) ~40 never-externally-verified exact-oracled queries
-# from the tail (fn suites 2-5, ml/agg/lookup, pipeline/LLM, over/set,
-# TPC-DS shapes, delta-join TTL with the new store compaction).
-# tpch_q1_pricing_summary stays first (entry() runs it). All 50 verified
-# exact vs DuckDB at sf0.01 under the dtype-strict gate before promotion.
-VERIFICATION_ROTATION_R5 = [
-    "tpch_q1_pricing_summary",
-    # repaired after r4 red rows
-    "fn_array_suite",
-    "llm_minhash_lsh_pairs",
-    "pipe_sequence_pack",
-    "pipe_sequence_pack_ranged",
-    # new r5 surfaces
-    "explain_changelog_mode_gate",
-    "llm_vector_search_sql",
-    "window_tumble_legacy_sql",
-    "window_session_legacy_sql",
-    # scalar-function families (incl. the dtype-sweep repairs)
-    "fn_math_suite",
-    "fn_conditional_suite",
-    "fn_bitwise_suite",
-    "fn_map_suite",
-    "fn_string_suite2",
-    "fn_array_suite2",
-    "fn_json_suite2",
-    "fn_datetime_suite2",
-    "fn_url_inet_suite",
-    "fn_trig_hyper_suite",
-    "fn_temporal_extract_suite",
-    "fn_numeric_extra_suite",
-    "fn_json_variant_suite",
-    # ML / aggregates / lookup joins
-    "ml_predict_linear",
-    "ml_predict_sql",
-    "agg_split_distinct",
-    "agg_table_agg_top2",
-    "agg_collect_multiset",
-    "lookup_join_events",
-    "async_lookup_join_events",
-    # LLM-pipeline operators
-    "pipe_repetition_stats",
-    "pipe_source_mix",
-    "pipe_interp_logprob",
-    "pipe_stratified_sample",
-    "pipe_url_dedup",
-    "pipe_decontaminate",
-    "llm_dedup_clusters",
-    "llm_matryoshka_truncate",
-    # over windows / set ops / sort
-    "over_lead_lag_first_last",
-    "over_range_interval_frame",
-    "set_except_distinct",
-    "sort_limit_offset",
-    # TVF windows
-    "window_dedup",
-    "window_session_tvf_sql",
-    # TPC-DS shapes
-    "tpcds_q59_week_over_week",
-    "tpcds_q39_inventory_covariance",
-    "tpcds_q64_snowflake_two_year",
-    # changelog-conversion PTFs (new r5 surface; replaces tpcds q17/q90,
-    # both already independently re-verified by the r4 judge)
-    "changelog_from_changelog",
-    "changelog_to_changelog",
-    # streaming state + DDL sinks (delta-join TTL now compacts its store)
-    "stream_delta_join_ttl",
-    "ddl_upsert_sink",
-]
-
-# Round-4 rotation, kept for provenance (spent — every name below has an
-# external CORRECTNESS row from r4).
-VERIFICATION_ROTATION_R4 = [
-    "tpch_q1_pricing_summary",
-    # streaming changelog / watermark machinery
-    "stream_tumble_agg",
-    "stream_hop_agg",
-    "stream_session_agg",
-    "stream_interval_join",
-    "stream_dedup_first",
-    "stream_changelog_normalize",
-    "stream_topn_changelog",
-    "stream_upsert_materialize",
-    "stream_late_side_output",
-    "stream_cep_timeout",
-    "cdc_debezium_materialize",
-    "stream_delta_join",
-    "stream_state_reader",
-    "hybrid_source_backfill",
-    # CEP / MATCH_RECOGNIZE
-    "cep_click_purchase_adjacent",
-    "cep_error_burst",
-    "sql_match_all_rows_pairs",
-    "cep_abandoned_click",
-    # TVF windows / temporal joins
-    "window_tumble",
-    "window_hop",
-    "window_session",
-    "window_cumulate",
-    "window_topn",
-    "asof_join_events",
-    # over-agg / rank / dedup
-    "over_rank_suite",
-    "topn_per_group",
-    "dedup_keep_first",
-    "lateral_topk_per_nation",
-    # scalar-function families
-    "fn_string_suite",
-    "fn_datetime_suite",
-    "fn_json_suite",
-    "fn_array_suite",
-    "fn_regexp_suite",
-    # LLM-data-pipeline operators
-    "llm_dedup_exact",
-    "llm_minhash_lsh_pairs",
-    "llm_simhash_pairs",
-    "llm_cosine_topk",
-    "llm_token_stats",
-    "llm_lsh_recall_gate",
-    "llm_embedding_quantize",
-    "llm_audio_decode",
-    "pipe_quality_filter",
-    "pipe_sequence_pack",
-    "pipe_tfidf_top_terms",
-    # TPC-DS two-fact / rollup shapes
-    "tpcds_q72_two_fact_correlation",
-    "tpcds_q51_cumulative_channels",
-    "tpcds_q67_rollup_topn",
-    # imperative aggregates
-    "agg_percentile_family",
-    "agg_bitmap_ops",
-]
-#: Round-9 head (promoted below): entry + all 15 never-sampled
-#: non-TPC-DS gates + 34 TPC-DS shapes; the 15-query remainder
-#: (VERIFICATION_ROTATION_R10_TAIL) retires in round 10. Every entry
-#: carries an exact DuckDB oracle — the four previously rows-only
-#: members (llm_ivf_topk, llm_pq_topk, pipe_kmeans_clusters,
-#: pipe_semantic_neardup) were exactified this round by unrolling the
-#: deterministic Lloyd's iteration into DuckDB CTEs (queries/annsql.py),
-#: so no head slot burns a `no_oracle` row. All 50 re-verified locally
-#: vs DuckDB at sf0.01 under the dtype-strict + non-scalar-rejecting
-#: gate before promotion.
-VERIFICATION_ROTATION_R9 = [
-    "tpch_q1_pricing_summary",
-    "llm_lsh_topk",
-    "llm_multimodal_features",
-    "llm_ivf_topk",
-    "llm_ivf_recall_gate",
-    "llm_pq_topk",
-    "llm_pq_recall_gate",
-    "pipe_normalize",
-    "pipe_vocab_top100",
-    "pipe_kmeans_clusters",
-    "pipe_semantic_neardup",
-    "pipe_passage_dedup",
-    "pipe_unigram_logprob",
-    "pipe_bigram_logprob",
-    "ddl_watermark_strategies",
-    "hint_state_ttl_gate",
-    "tpcds_q65_low_revenue_parts",
-    "tpcds_q98_class_revenue_share",
-    "tpcds_q6_above_average_price",
-    "tpcds_q15_regional_big_spenders",
-    "tpcds_q96_time_band_count",
-    "tpcds_q2_weekday_yoy",
-    "tpcds_q4_three_channel_growth",
-    "tpcds_q30_state_return_outliers",
-    "tpcds_q45_zip_or_subquery",
-    "tpcds_q61_promo_ratio",
-    "tpcds_q84_income_band_lookup",
-    "tpcds_q87_distinct_except_chain",
-    "tpcds_q46_cross_nation_trips",
-    "tpcds_q8_preferred_zips",
-    "tpcds_q12_class_revenue_ratio",
-    "tpcds_q18_demographic_rollup_avgs",
-    "tpcds_q26_demographic_item_avgs",
-    "tpcds_q42_category_year_report",
-    "tpcds_q43_weekday_pivot_per_store",
-    "tpcds_q69_active_without_web",
-    "tpcds_q71_brand_by_hour_channels",
-    "tpcds_q76_null_key_channel_counts",
-    "tpcds_q77_channel_profit_rollup",
-    "tpcds_q24_paid_above_global_avg",
-    "tpcds_q32_excess_discount_per_item",
-    "tpcds_q11_two_channel_growth_customers",
-    "tpcds_q27_state_brand_rollup_avgs",
-    "tpcds_q28_band_distinct_stats",
-    "tpcds_q55_brand_month_report",
-    "tpcds_q94_multi_supplier_no_returns",
-    "tpcds_q20_windowed_class_share",
-    "tpcds_q29_quantity_funnel",
-    "tpcds_q52_brand_year_report",
-    "tpcds_q56_item_channel_union",
-]
-
 __all__ = ["QUERIES", "query", "get_queries", "get_oracles", "promote_first"]
 
-#: Staged r10 head tail (NOT promoted — promote at the start of round
-#: 10, prepended with tpch_q1_pricing_summary so entry() stays first):
-#: the last never-externally-sampled gated queries (15 TPC-DS shapes +
-#: the r9-new stream_group_agg_retract gate). Promoting these retires
-#: the external-verification debt to zero.
-VERIFICATION_ROTATION_R10_TAIL = [
-    "stream_minhash_neardup",
-    "stream_semantic_neardup",
-    "stream_curation_e2e",
-    "stream_ivf_ingest",
-    "stream_pq_ingest",
-    "stream_group_agg_retract",
-    "stream_group_agg_retract_ttl",
-    "datastream_v2_pipeline",
-    "pipe_curation_e2e",
-    "llm_audio_spectral",
-    "llm_image_neardup",
-    "llm_video_dedup",
-    "tpcds_q60_category_channel_union",
-    "tpcds_q57_event_daily_deviation",
-    "tpcds_q63_monthly_brand_deviation",
-    "tpcds_q89_series_abs_deviation",
-    "tpcds_q68_trip_tax_report",
-    "tpcds_q79_same_nation_trips",
-    "tpcds_q73_small_basket_buyers",
-    "tpcds_q80_windowed_channel_rollup",
-    "tpcds_q81_nation_return_outliers",
-    "tpcds_q82_store_inventory_instock",
-    "tpcds_q83_returned_parts_intersect",
-    "tpcds_q85_returns_band_disjunction",
-    "tpcds_q86_event_rollup_rank",
-    "tpcds_q91_nation_return_losses",
-    "tpcds_q99_nation_latency_bands",
-]
-
-#: Prepared r10 head (NOT promoted — promote at the start of round 10
-#: after local re-verification): entry + the full never-sampled tail
-#: above (retiring external-verification debt to zero) + 27 freshness
-#: re-verifications of high-value operators last sampled in r4-r7
-#: (streaming/changelog/delta-join/CEP-adjacent families, the LLM dedup
-#: and ANN heads, CDC, formats, MATCH_RECOGNIZE, and the plan-advice
-#: gate, which re-validates the r9-new join-strategy rule externally).
-#: All entries carry exact oracles.
-VERIFICATION_ROTATION_R10_CANDIDATES = [
-    "tpch_q1_pricing_summary",
-    *VERIFICATION_ROTATION_R10_TAIL,
-    # freshness re-verification (last sampled r4-r7)
-    "tpch_q9_product_type_profit",
-    "stream_tumble_agg",
-    "stream_interval_join",
-    "stream_topn_changelog",
-    "stream_upsert_materialize",
-    "stream_changelog_normalize",
-    "stream_delta_join",
-    "stream_delta_join_ttl",
-    "stream_multiway_join",
-    # stream_session_agg rotated out (r9 continuation) to hold the head
-    # at 50 after stream_pq_ingest joined the tail: the session-window
-    # family keeps two fresher r8-green external rows
-    # (stream_session_dynamic_gap, stream_session_window_join)
-    "llm_dedup_exact",
-    "llm_minhash_lsh_pairs",
-    "llm_dedup_clusters",
-    "llm_cosine_topk",
-    "llm_lsh_recall_gate",
-    # r9-exactified last rows-only gate: its r8 row was no_oracle; this
-    # converts it to a green external row (llm_lsh_topk and
-    # llm_multimodal_features, previously here, are already in the
-    # promoted R9 head — re-listing them would waste the two slots)
-    "llm_vector_search_sql_ann",
-    # r9 JVM keep-first rework: the r8 external row verified the old
-    # applyInPandasWithState path; re-verify the new implementation
-    "stream_dedup_first",
-    # cdc_debezium_materialize rotated out (r9 continuation) to hold the
-    # head at 50 after stream_semantic_neardup joined the tail: the CDC
-    # family keeps a freshness slot via cdc_ogg_materialize
-    # format_avro_roundtrip rotated out (r9 continuation) to hold the
-    # head at 50 after stream_curation_e2e joined the tail: formats are
-    # capability-gated with their own suite and were pass(r6/r7)
-    "cdc_ogg_materialize",
-    # agg_grouping_sets rotated out (r9 continuation) to hold the head
-    # at 50 after stream_ivf_ingest joined the tail: native Spark
-    # expansion, minimal regression risk, exact-oracled locally each run
-    "join_hints_gate",
-    "hybrid_source_backfill",
-    "pipe_decontaminate",
-    # pipe_stratified_sample rotated out (r9 continuation) to hold the
-    # head at exactly 50 after stream_minhash_neardup joined the tail:
-    # it is the lowest-risk remaining freshness slot (stateless
-    # hash-bucket sampling, exact-oracled locally every run)
-    "sql_match_all_rows_pairs",
-    "explain_plan_advice_gate",
-]
-
-#: Round-10 head (promoted below): entry + the 27 never-externally-
-#: sampled gates (VERIFICATION_ROTATION_R10_TAIL — the r9 streaming-LLM
-#: family, group-agg-retract ±TTL, DataStream V2, curation e2e ×2, the
-#: multimodal trio, 15 TPC-DS shapes) + 22 freshness re-samples of
-#: r4-r7-verified operators, including the two conversion slots
-#: (llm_vector_search_sql_ann: r8 no_oracle → green; stream_dedup_first:
-#: re-verify the r9 JVM rework externally). Promoting this head retires
-#: the external-verification debt to zero: every one of the gated
-#: queries has at least one external CORRECTNESS row after round 10.
-#: All 50 re-verified locally vs DuckDB at sf0.01 under the
-#: dtype-strict + non-scalar-rejecting gate before promotion.
-VERIFICATION_ROTATION_R10 = VERIFICATION_ROTATION_R10_CANDIDATES
-
-
-#: Round-11 head (PROMOTED below): the FIRST mechanically-assembled
-#: head, emitted by tools/next_head.py from the CORRECTNESS archive
-#: (entry first, then never-sampled — sql_not_in_disjunctive, the
-#: r10-new gate for the disjunctive NOT IN three-valued fix, and
-#: sql_not_in_projected and sql_quantified_any_all, the r11 gates for
-#: the value-position extension and the ANY/SOME/ALL quantified
-#: comparisons — then stalest-first: the queries externally verified
-#: longest ago, r3-r6: tpch q2-q22 and the agg_*/join_*/set_*
-#: relational core). Regenerated mid-round as each r11 gate landed
-#: (the policy slots new never-sampled gates right behind the entry,
-#: displacing agg_grouping_id and join_salted_skew to round 12). test_registry.py pins this constant
-#: against the policy function, so a drifted registry or archive fails
-#: CI instead of silently staging the wrong head.
-VERIFICATION_ROTATION_R11_CANDIDATES = [
-    "tpch_q1_pricing_summary",
-    "sql_not_in_disjunctive",
-    "sql_not_in_projected",
-    "sql_quantified_any_all",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_volume_customer",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_potential_promotion",
-    "tpch_q21_suppliers_waiting",
-    "tpch_q22_global_sales_opportunity",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_null_aware_anti",
-    "join_theta_band",
-    "join_cross",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except_all",
-    "set_intersect_all",
-    "agg_grouping_sets",
-    "agg_cube",
-    "agg_rollup",
-    "agg_distinct_mix",
-    "agg_min_max_by",
-    "agg_listagg",
-    "agg_stddev_var_exact",
-    "agg_approx_count_distinct",
-    "scalar_subquery",
-    "correlated_exists_having",
-    "values_inline",
-    "unnest_words",
-    "unnest_with_ordinality",
-    "pivot_status",
-]
-
-VERIFICATION_ROTATION_R11 = VERIFICATION_ROTATION_R11_CANDIDATES
-
-#: Round-12 head (PROMOTED below): mechanical output of
-#: tools/next_head.py over the r1-r11 archive, regenerated mid-round as
-#: each r12 gate landed (the policy slots never-sampled gates right
-#: behind the entry): sql_not_in_tuple (row-value [NOT] IN three-valued
-#: fix) and sql_quantified_correlated (correlated quantified
-#: comparisons), then stalest-first freshness: join_salted_skew and
-#: agg_grouping_id (the last two r3-floor queries — promoting them
-#: raises the archive-wide freshness floor to r4), then the
-#: r4-r6-verified analytic/window/function/streaming/CEP core.
-#: test_registry.py pins this constant as the policy fixpoint
-#: (recomputing over the promoted registry + r1-r11 archive must
-#: reproduce it byte-for-byte).
-VERIFICATION_ROTATION_R12_CANDIDATES = [
+#: The verification head. External correctness harnesses sample the
+#: FIRST 50 registered queries, so this list is promoted to the
+#: registry's front.
+#: It is the output of ``tools/next_head.py`` over the r1-r11
+#: CORRECTNESS archive: the entry query first (``entry()`` runs it),
+#: then the never-sampled gates, then the stalest previously-verified
+#: queries. ``tests/test_registry.py`` pins it against that policy.
+VERIFICATION_HEAD = [
     "tpch_q1_pricing_summary",
     "sql_not_in_tuple",
     "sql_quantified_correlated",
@@ -710,6 +97,4 @@ VERIFICATION_ROTATION_R12_CANDIDATES = [
     "window_session_tvf_sql",
 ]
 
-VERIFICATION_ROTATION_R12 = VERIFICATION_ROTATION_R12_CANDIDATES
-
-promote_first(VERIFICATION_ROTATION_R12)
+promote_first(VERIFICATION_HEAD)

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import memo
 from flink_spark.session import prepare_session
 
 TABLE_NAMES = [
@@ -36,22 +37,17 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Inferred parquet schemas keyed by (path, mtime): the declared-schema
-#: catalog every real deployment has (Flink DDL declares table schemas;
-#: Spark metastore tables carry theirs). Without it every
-#: ``spark.read.parquet`` launches a driver-side footer-inference job —
-#: ~0.1-0.15 s each on the bench box, one per table per query. Metadata
-#: only (a StructType), never row data; keyed on mtime so a rewritten
-#: path re-infers.
-_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
-
-
 def table_schema(spark: SparkSession, path: str):
-    """Schema of the parquet file/dir at ``path``, cached per (path,
-    mtime, nanos-mode). The nanos flag joins the key because inference
-    maps TIMESTAMP(NANOS) to bigint only under it — a session where
-    ``prepare_session`` could not set the flag must not share entries
-    with one where it could.
+    """Schema of the parquet file/dir at ``path``, memoized per (path,
+    mtime, nanos-mode): the declared-schema catalog every real deployment
+    has (Flink DDL declares table schemas; Spark metastore tables carry
+    theirs). Without it every ``spark.read.parquet`` launches a
+    driver-side footer-inference job — ~0.1-0.15 s each on the bench
+    box, one per table per query. Metadata only (a StructType), never
+    row data; keyed on mtime so a rewritten path re-infers. The nanos
+    flag joins the key because inference maps TIMESTAMP(NANOS) to bigint
+    only under it — a session where ``prepare_session`` could not set the
+    flag must not share entries with one where it could.
 
     Invalidation invariant (ADVICE r12): for a DIRECTORY path the mtime
     is the directory's own, which changes when entries are added/removed
@@ -68,12 +64,8 @@ def table_schema(spark: SparkSession, path: str):
         nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
     except Exception:
         nanos = "unset"
-    key = (path, mtime, nanos)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    return schema
+    return memo(("table_schema", path, mtime, nanos),
+                lambda: spark.read.parquet(path).schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -79,7 +79,7 @@ def curation_stream(
     )
     # batch-independent Column trees built ONCE per drain, not per
     # micro-batch (every functions.* call is a py4j round trip — same
-    # memo discipline as neardup_stream._EXPR_MEMO)
+    # economics as the exprutil.memo trees in neardup_stream)
     keep_col = F.col("keep")
     rn_col = F.row_number().over(Window.partitionBy(_FP).orderBy(id_col))
     rn_pred = F.col("__rn") == 1

@@ -93,7 +93,9 @@ def delta_join(
     Every ``compact_every`` batches (0 disables) the side stores are
     compacted: under ``ttl`` rewritten without the expired rows,
     otherwise folded into one ``__bid=-1`` partition
-    (``storeutil.fold_bid_partitions``).
+    (``storeutil.fold_bid_partitions``). The ``out`` store folds the same
+    way with or without ``ttl``: the TTL bounds which side rows can
+    still match, never which results were emitted.
     """
     import pandas as pd
 
@@ -113,7 +115,7 @@ def delta_join(
     # compacting scratch dir (see the swap ordering in process()) —
     # delegated to the store backend so object-store semantics
     # (non-atomic rename) recover correctly too
-    for store in (l_store, r_store):
+    for store in (l_store, r_store, out_dir):
         storeutil.BACKEND.recover(store)
         if storeutil.has_parquet(store) and not any(
             d.startswith(f"{BID}=") for d in os.listdir(store)
@@ -131,7 +133,8 @@ def delta_join(
 
     # batch-independent Column trees built ONCE per drain (each
     # functions.* call is a py4j round trip; foreachBatch rebuilds the
-    # per-batch plan — same memo discipline as neardup_stream)
+    # per-batch plan — same economics as the exprutil.memo trees in
+    # neardup_stream)
     l_bucket = storeutil.portable_bucket(num_buckets, *left_keys)
     r_bucket = storeutil.portable_bucket(num_buckets, *right_keys)
     l_side_pred = F.col("__side") == "L"
@@ -277,17 +280,23 @@ def delta_join(
                     # copy mid-swap
                     storeutil.BACKEND.replace_store(store, tmp)
 
-                # the two stores' compactions touch disjoint directories
+                # the three stores' compactions touch disjoint directories
                 # and recover independently (the start-of-drain sweep
                 # repairs each store's swap on its own) — overlap them
-                # (storeutil.run_parallel, guide §2.6)
-                storeutil.run_parallel(*[
+                # (storeutil.run_parallel). The out store always folds:
+                # TTL cuts apply to the side stores only.
+                folds = [
                     (lambda s=store, t=ts_col: compact(s, t))
                     for store, ts_col in (
                         (l_store, left_ts), (r_store, right_ts)
                     )
                     if storeutil.has_parquet(store)
-                ])
+                ]
+                if storeutil.has_parquet(out_dir):
+                    folds.append(lambda: storeutil.fold_bid_partitions(
+                        sess, out_dir, [], batch_id
+                    ))
+                storeutil.run_parallel(*folds)
         finally:
             batch.unpersist()
 

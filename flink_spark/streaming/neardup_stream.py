@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import memo
 from flink_spark.llm.dedup import (
     MH_K,
     band_rows,
@@ -80,36 +81,26 @@ _BUCKET = "__bucket"
 # reused by every micro-batch's plan: foreachBatch rebuilds the per-batch
 # plan from scratch, and each functions.* call is a py4j round trip
 # (~1-2 ms on the bench box) — the K=32 alias lists and the 32-term
-# agreement sum alone cost ~0.5 s per construction (same memo discipline
-# as llm/dedup._EXPR_MEMO; guide §1.2: the driver's per-batch work is
-# part of the per-task work).
-_EXPR_MEMO: dict = {}
-
-
-def _memo(key, build):
-    val = _EXPR_MEMO.get(key)
-    if val is None:
-        val = build()
-        _EXPR_MEMO[key] = val
-    return val
+# agreement sum alone cost ~0.5 s per construction (exprutil.memo, as in
+# llm/dedup).
 
 
 def _side_cols(id_col: str, alias: str) -> list:
-    return _memo(("side", id_col, alias), lambda: [
+    return memo(("neardup", "side", id_col, alias), lambda: [
         F.col(id_col).alias(alias), F.col("band"), F.col("sig"),
         F.col(_BUCKET),
     ])
 
 
 def _wide_alias_cols(id_col: str, out_id: str, prefix: str) -> list:
-    return _memo(("wide", id_col, out_id, prefix), lambda: [
+    return memo(("neardup", "wide", id_col, out_id, prefix), lambda: [
         F.col(id_col).alias(out_id),
         *[F.col(f"mh_{i}").alias(f"{prefix}_{i}") for i in range(MH_K)],
     ])
 
 
 def _n_agree():
-    return _memo("n_agree", lambda: sum(
+    return memo(("neardup", "n_agree"), lambda: sum(
         (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int")
         for i in range(MH_K)
     ))
@@ -134,8 +125,8 @@ def batch_neardup_plan(
     wide = minhash_signatures_wide(batch, text_col, id_col)
     new_bands = band_rows(wide, id_col).withColumn(
         _BUCKET,
-        _memo(("bucket", num_buckets),
-              lambda: portable_bucket(num_buckets, "sig")),
+        memo(("neardup", "bucket", num_buckets),
+             lambda: portable_bucket(num_buckets, "sig")),
     )
 
     mine = new_bands.select(*_side_cols(id_col, "__new_id"))
@@ -275,8 +266,8 @@ def semantic_neardup_stream(
 
     # batch-independent Column trees built ONCE per drain, not per
     # micro-batch (each functions.* call is a py4j round trip — same
-    # memo discipline as _EXPR_MEMO above); hyperplane_sketch memoizes
-    # its bucket expression internally
+    # economics as the exprutil.memo trees above); hyperplane_sketch
+    # memoizes its bucket expression internally
     vec_in_cols = [F.col(id_col), F.col(vec_col).alias("__v")]
     table_cols = [
         [F.col(id_col), F.lit(t).alias("__table"), F.col("bucket")]

@@ -28,39 +28,39 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BID = "__bid"
+from flink_spark.exprutil import memo
 
-#: Per-path memo of a store's READ schema (StructType, metadata only —
-#: never row data, so re-runs still compute everything from the stores).
-#: Every ``read.parquet`` without an explicit schema launches a
-#: driver-side footer-inference job; a store's schema is fixed for the
-#: life of the process (same writer, and compaction folds rewrite the
-#: same columns), so one inference per store suffices instead of one per
-#: micro-batch read (guide §1.2/§6 — the same declared-schema-catalog
-#: discipline sources/tables.py applies to source tables). Keyed on the
-#: exact path: tmp roots are mkdtemp-unique and durable roots keep their
-#: schema across drains by the resume contract.
-_SCHEMA_MEMO: dict[str, object] = {}
+BID = "__bid"
 
 
 def read_store(
     sess: SparkSession, store: str, key: str | None = None
 ) -> DataFrame:
-    """Read a store directory with the memoized schema (first read per
-    path infers and fills the memo). The memo deliberately comes from an
-    inferred read — not hand-built from the written DataFrame — so
+    """Read a store directory with its memoized schema (metadata only —
+    rows always come from disk). Every ``read.parquet`` without an
+    explicit schema launches a driver-side footer-inference job; a
+    store's schema is fixed for the life of the process (same writer,
+    and compaction folds rewrite the same columns), so one inference per
+    store suffices instead of one per micro-batch read. Keyed on the
+    exact path: tmp roots are mkdtemp-unique and durable roots keep
+    their schema across drains by the resume contract.
+
+    The schema comes from the first, inferred read — the one a miss
+    returns — not hand-built from the written DataFrame, so
     partition-column types match what discovery produces (``__bid=3``
     dirs infer back as int regardless of the literal's write-side
     type). ``key`` overrides the memo key for stores whose PATH rotates
     per version while the schema stays fixed (delta_join_outer's
     unmatched-store ``v<N>`` dirs)."""
-    memo_key = key or store
-    schema = _SCHEMA_MEMO.get(memo_key)
-    if schema is not None:
-        return sess.read.schema(schema).parquet(store)
-    df = sess.read.parquet(store)
-    _SCHEMA_MEMO[memo_key] = df.schema
-    return df
+    df = None
+
+    def infer():
+        nonlocal df
+        df = sess.read.parquet(store)
+        return df.schema
+
+    schema = memo(("store_schema", key or store), infer)
+    return df if df is not None else sess.read.schema(schema).parquet(store)
 
 
 def run_parallel(*thunks) -> None:

@@ -5,6 +5,8 @@ the same discipline as the r12 PQ-codec equivalence test."""
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -129,9 +131,9 @@ def test_double_array_lit_fallback_same_values(spark, monkeypatch):
             return spark.sql(text)
 
     vals = [[0.25, -1.5e-8, 1.0 / 3.0], [6.02e23, 5e-324, -0.0]]
-    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    monkeypatch.setattr(exprutil, "_MEMO", OrderedDict())
     fast = exprutil.double_array_lit(spark, vals)
-    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    monkeypatch.setattr(exprutil, "_MEMO", OrderedDict())
     slow = exprutil.double_array_lit(_NoJvm(), vals)
 
     def bits(col):
@@ -232,7 +234,7 @@ def test_literal_builders_use_the_dataframes_session(spark, monkeypatch):
     from flink_spark import exprutil
     from flink_spark.llm.clustering import assign_clusters
 
-    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    monkeypatch.setattr(exprutil, "_MEMO", OrderedDict())
     df = spark.createDataFrame([(1, [0.5, 1.5])], "id long, v array<double>")
     out = {}
 
@@ -244,7 +246,7 @@ def test_literal_builders_use_the_dataframes_session(spark, monkeypatch):
     t.start()
     t.join()
     assert out["active"] is None
-    (col,) = exprutil._LIT_MEMO.values()
+    (col,) = [v for k, v in exprutil._MEMO.items() if k[0] == "lit"]
     node = (
         spark.range(1).select(col.alias("c"))._jdf.queryExecution()
         .analyzed().expressions().apply(0).child()

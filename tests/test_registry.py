@@ -16,12 +16,8 @@ from __future__ import annotations
 import json
 import os
 
-from flink_spark.queries import (
-    QUERIES,
-    VERIFICATION_ROTATION_R11,
-    promote_first,
-)
-from flink_spark.queries import VERIFICATION_ROTATION_R12 as ROTATION
+from flink_spark.queries import QUERIES, promote_first
+from flink_spark.queries import VERIFICATION_HEAD as ROTATION
 import pytest
 
 # rows-only entries deliberately promoted for an external row despite
@@ -96,10 +92,11 @@ def test_freshness_slots_resample_previously_verified_queries():
         if n not in NEW_THIS_ROUND and n != "tpch_q1_pricing_summary"
     ]
     assert len(fresh) == 49 - len(NEW_THIS_ROUND)
+    r11 = _prior_round_keys([11])
     for name in fresh:
         assert name in prev, f"freshness slot {name} was never sampled before"
         # freshness means STALE: nothing re-sampled that r11 just covered
-        assert name not in VERIFICATION_ROTATION_R11, name
+        assert name not in r11, name
 
 
 def test_r12_head_raises_freshness_floor():

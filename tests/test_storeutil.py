@@ -25,6 +25,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from flink_spark import exprutil
 from flink_spark.sources.tables import load_table
 from flink_spark.streaming import storeutil
 from flink_spark.streaming.storeutil import (
@@ -497,8 +498,8 @@ def test_read_store_memoizes_schema(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     storeutil.write_bid_partition(df, store, 0)
     first = storeutil.read_store(spark, store)
-    assert store in storeutil._SCHEMA_MEMO
-    assert storeutil._SCHEMA_MEMO[store] == first.schema
+    assert ("store_schema", store) in exprutil._MEMO
+    assert exprutil._MEMO[("store_schema", store)] == first.schema
     # rows written AFTER the memo filled are served by a memoized read
     storeutil.write_bid_partition(
         spark.createDataFrame([(2, "b")], "k long, v string"), store, 1

@@ -17,7 +17,7 @@ around with everything else.
 
 Usage:  python tools/next_head.py [--repo /root/repo] [--size 50]
 prints the head as a Python list literal ready to paste into
-``flink_spark/queries/__init__.py`` as ``VERIFICATION_ROTATION_R{N}``.
+``flink_spark/queries/__init__.py`` as ``VERIFICATION_HEAD``.
 ``tests/test_registry.py`` pins the promoted head against this policy.
 """
 
