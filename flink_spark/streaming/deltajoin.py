@@ -93,9 +93,7 @@ def delta_join(
     Every ``compact_every`` batches (0 disables) the side stores are
     compacted: under ``ttl`` rewritten without the expired rows,
     otherwise folded into one ``__bid=-1`` partition
-    (``storeutil.fold_bid_partitions``). The ``out`` store folds the same
-    way with or without ``ttl``: the TTL bounds which side rows can
-    still match, never which results were emitted.
+    (``storeutil.fold_bid_partitions``).
     """
     import pandas as pd
 
@@ -115,7 +113,7 @@ def delta_join(
     # compacting scratch dir (see the swap ordering in process()) —
     # delegated to the store backend so object-store semantics
     # (non-atomic rename) recover correctly too
-    for store in (l_store, r_store, out_dir):
+    for store in (l_store, r_store):
         storeutil.BACKEND.recover(store)
         if storeutil.has_parquet(store) and not any(
             d.startswith(f"{BID}=") for d in os.listdir(store)
@@ -280,23 +278,17 @@ def delta_join(
                     # copy mid-swap
                     storeutil.BACKEND.replace_store(store, tmp)
 
-                # the three stores' compactions touch disjoint directories
+                # the two stores' compactions touch disjoint directories
                 # and recover independently (the start-of-drain sweep
                 # repairs each store's swap on its own) — overlap them
-                # (storeutil.run_parallel). The out store always folds:
-                # TTL cuts apply to the side stores only.
-                folds = [
+                # (storeutil.run_parallel, guide §2.6)
+                storeutil.run_parallel(*[
                     (lambda s=store, t=ts_col: compact(s, t))
                     for store, ts_col in (
                         (l_store, left_ts), (r_store, right_ts)
                     )
                     if storeutil.has_parquet(store)
-                ]
-                if storeutil.has_parquet(out_dir):
-                    folds.append(lambda: storeutil.fold_bid_partitions(
-                        sess, out_dir, [], batch_id
-                    ))
-                storeutil.run_parallel(*folds)
+                ])
         finally:
             batch.unpersist()
 

@@ -49,11 +49,6 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from flink_spark.session import get_spark
 
-    # The program's 48g default heap lets G1 grow the test JVM to ~14 GB
-    # RSS over the default tier, more than a 15 GB host can spare; a full
-    # GC midway through the tier leaves 1.7 GB live. An explicit
-    # SPARK_GRAFT_DRIVER_MEM still wins.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
     spark = get_spark("flink_spark-tests", cpus=cpus, shuffle_partitions=int(cpus))
     yield spark

@@ -378,10 +378,10 @@ def test_delta_join_rejects_old_store_layout(spark, tmp_path):
 
 
 def test_delta_join_compaction_without_ttl_folds_stores(spark, tmp_path):
-    """compact_every without ttl folds each side store's and the out
-    store's strictly-earlier __bid partitions into __bid=-1, so a long
-    drain keeps a bounded number of batch partitions instead of one per
-    batch; the join stays exact."""
+    """compact_every without ttl folds each side store's strictly-earlier
+    __bid partitions into __bid=-1, so a long drain keeps a bounded
+    number of batch partitions instead of one per batch; the join stays
+    exact."""
     import os
 
     left_pdf = pd.DataFrame(
@@ -399,49 +399,15 @@ def test_delta_join_compaction_without_ttl_folds_stores(spark, tmp_path):
         ["lk", "lv"], ["rk", "rv"], ["lk"], ["rk"], num_buckets=2,
         compact_every=2, root=str(root),
     )
-    for store in ("left", "right", "out"):
-        parts = [d for d in os.listdir(root / store) if "=" in d]
-        assert "__bid=-1" in parts and len(parts) <= 2, (store, parts)
+    for side in ("left", "right"):
+        parts = [d for d in os.listdir(root / side) if "=" in d]
+        assert "__bid=-1" in parts and len(parts) <= 2, (side, parts)
     got_rows = sorted((r.lk, r.lv, r.rk, r.rv) for r in got.collect())
     expect = sorted(
         (lr.lk, lr.lv, rr.rk, rr.rv)
         for _, lr in left_pdf.iterrows()
         for _, rr in right_pdf.iterrows()
         if lr.lk == rr.rk
-    )
-    assert got_rows == expect
-
-
-def test_delta_join_ttl_compaction_folds_out_store(spark, tmp_path):
-    """Under ttl the side stores are rewritten by the TTL cut, and the
-    out store still folds into __bid=-1: emitted results never expire."""
-    import os
-
-    ts = pd.Series(
-        pd.date_range("2024-01-01", periods=12, freq="1min")
-    ).astype("datetime64[us]")
-    left_pdf = pd.DataFrame({"lk": [i % 3 for i in range(12)], "lts": ts})
-    right_pdf = pd.DataFrame({"rk": [i % 4 for i in range(12)], "rts": ts})
-    lt = _chunked_stream(spark, tmp_path, "l", left_pdf, 6)
-    rt = _chunked_stream(spark, tmp_path, "r", right_pdf, 6)
-    root = tmp_path / "root"
-    got = delta_join(
-        tag_union(lt, rt, ["lk", "lts"], ["rk", "rts"]),
-        ["lk", "lts"], ["rk", "rts"], ["lk"], ["rk"], num_buckets=2,
-        ttl="3 minutes", left_ts="lts", right_ts="rts",
-        compact_every=2, root=str(root),
-    )
-    parts = [d for d in os.listdir(root / "out") if "=" in d]
-    assert "__bid=-1" in parts and len(parts) <= 2, parts
-    got_rows = sorted(
-        (r.lk, pd.Timestamp(r.lts), r.rk, pd.Timestamp(r.rts))
-        for r in got.collect()
-    )
-    expect = sorted(
-        (lr.lk, lr.lts, rr.rk, rr.rts)
-        for _, lr in left_pdf.iterrows()
-        for _, rr in right_pdf.iterrows()
-        if lr.lk == rr.rk and abs((lr.lts - rr.rts).total_seconds()) <= 180
     )
     assert got_rows == expect
 
