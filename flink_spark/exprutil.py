@@ -48,8 +48,9 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 #: The engine's one memo of batch-independent plan pieces: expression
-#: Columns (literals, minhash/sketch/PQ/Gopher trees) and inferred read
-#: schemas. Metadata only, never row data. foreachBatch rebuilds every
+#: Columns (literals, minhash/sketch/Gopher trees) and inferred read
+#: schemas, plus, in the Python-worker daemon, zip archive directories
+#: (pydaemon). Metadata only, never row data. foreachBatch rebuilds every
 #: micro-batch's plan from scratch, and each functions.* call is a py4j
 #: round trip, so rebuilding these per batch is pure driver cost. An LRU
 #: of 256 entries: a full bench pass holds ~60 live keys, and what it

@@ -5,8 +5,10 @@ corpus vocabulary statistics, and incremental (anti-join) dedup.
 
 Scale design:
   - Every per-document transform is a JVM expression (regexp/split/
-    higher-order array functions) — whole-stage codegen, no Python, linear
-    in input splits, no shuffle.
+    higher-order array functions) — no Python, linear in input splits, no
+    shuffle. The higher-order functions (transform, filter, aggregate,
+    zip_with) are CodegenFallback in Spark 4.1.2: interpreted row by row
+    inside otherwise whole-stage-codegen'd stages.
   - Corpus-level statistics (vocab, mixing weights) are classic two-phase
     aggregations: map-side partials shrink the shuffle to |vocab| /
     |sources| rows regardless of corpus size.

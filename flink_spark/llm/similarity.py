@@ -28,8 +28,10 @@ from flink_spark.exprutil import double_array_lit, memo
 # arithmetic: Spark's `aggregate` is a sequential left fold (0.0 + x1 + x2
 # + …) and DuckDB's `list_reduce` folds the same order starting from x1;
 # since 0.0 + x1 == x1 bitwise, the two IEEE-double sums are identical.
-# All-double codegen is ~10× faster than the interpreted DECIMAL(25,20)
-# fold this replaced (12.8 s → ~1 s for the sf0.1 brute-force top-k).
+# All-double arithmetic is ~10× faster than the DECIMAL(25,20) fold this
+# replaced (12.8 s → ~1 s for the sf0.1 brute-force top-k). Both run
+# interpreted: zip_with and aggregate are CodegenFallback in Spark 4.1.2,
+# so these higher-order functions are evaluated row by row.
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -321,24 +323,24 @@ def pq_encode(
     seed: int = 42,
     books: list | None = None,
     train_limit: int | None = 50_000,
+    recon: bool = True,
 ):
     """Product quantization (FAISS PQ / the VECTOR_SEARCH index family):
     split each d-dim vector into ``m`` subvectors, k-means each subspace
     into ``ks`` codes → an m-byte code per vector (d·4 bytes → m bytes,
     32× compression at d=64/m=8). Returns (encoded_df, codebooks) where
-    ``encoded_df`` carries the code AND the codebook reconstruction
-    ``__recon`` as a JVM expression over the code — the decoded form ADC
-    scoring uses.
+    ``encoded_df`` carries the code AND, unless ``recon=False``, the
+    codebook reconstruction ``__recon`` — the decoded form ADC scoring
+    uses.
 
-    Scale shape: codebooks are m·ks·(d/m) floats (tiny, a literal in the
-    plan = broadcast everywhere); encoding is one map-only pass (argmin
-    over ks literal centroids per subspace, all codegen'd); nothing
-    shuffles. Codebooks come from a DETERMINISTIC joint Lloyd's: all m
-    subspaces train in ONE plan per iteration (explode to (row, subspace)
-    pairs, argmin against the broadcast (subspace, code) centroid table,
+    Scale shape: codebooks are m·ks·(d/m) floats (tiny, shipped with the
+    task); encoding is one map-only pass, an Arrow-batched numpy kernel
+    (argmin over ks centroids per subspace); nothing shuffles. The
+    Catalyst higher-order form it replaced is interpreted
+    (``CodegenFallback``) in Spark 4.1.2. Codebooks come from a
+    DETERMINISTIC Lloyd's (:func:`pq_train`: lowest-code tie-break,
     9-digit-rounded mean updates) — deterministic where Spark ML's
-    KMeans varies run-to-run with float reduce order, and m× fewer jobs
-    than per-subspace fits.
+    KMeans varies run-to-run with float reduce order.
 
     Pass ``books`` (a previous call's return value) to skip training and
     encode against the saved codebooks — the production pattern: train
@@ -363,14 +365,14 @@ def pq_encode(
         # dim comes from the saved books — no .first() probe job on the
         # add-after-train path (one driver job per call saved)
         sub = len(books[0][0])
-        return _pq_encode_with_books(cv, cand_id, m, sub, books), books
+        return _pq_encode_with_books(cv, m, sub, books, recon), books
     d = len(candidates.select(vec).first()[0])
     if d % m:
         raise ValueError(f"pq: dim {d} not divisible by m={m}")
     sub = d // m
     books = pq_train(candidates, cand_id=cand_id, vec=vec, m=m, ks=ks,
                      train_limit=train_limit)
-    return _pq_encode_with_books(cv, cand_id, m, sub, books), books
+    return _pq_encode_with_books(cv, m, sub, books, recon), books
 
 
 #: driver-side training-sample budget in rows×dim ELEMENTS (float64):
@@ -446,107 +448,95 @@ def pq_train(
     return books
 
 
-def _pq_encode_with_books(cv: DataFrame, cand_id: str, m: int, sub: int,
-                          books: list) -> DataFrame:
-    """Map-only PQ encoding against fixed codebooks: per subspace, argmin
-    over the ks literal centroids + the reconstruction.
+def _pq_encode_with_books(cv: DataFrame, m: int, sub: int, books: list,
+                          recon: bool = True) -> DataFrame:
+    """Map-only PQ encoding against fixed codebooks: ``cv``'s (id,
+    ``__cv``) rows plus ``__code`` and, with ``recon``, the
+    reconstruction ``__recon``. One Arrow-batched numpy kernel per
+    partition; the id and ``__cv`` pass through unconverted. A caller
+    that stores only codes passes ``recon=False``: the worker output is
+    a fixed schema, so a later ``select`` would not prune ``__recon``
+    out of it.
 
-    Both outputs are ONE higher-order expression each over a single
-    3-level codebook literal, not m×ks separate parsed snippets: the old
-    per-centroid form built ~m·ks·2 aggregate() trees (the distance list
-    appeared twice inside array_position(array(...), array_min(...))),
-    which cost seconds of driver parse/analysis per call and evaluated
-    every distance twice. The struct-sort argmin evaluates each distance
-    once and keeps the exact tie-break (ascending (d, code): lowest code
-    among equal distances = array_position's first-of-min); the distance
-    itself is the same sequential zip_with/aggregate fold, so codes and
-    reconstructions are bit-identical.
+    The Catalyst form this replaced (a struct-sort argmin over
+    ``zip_with``/``aggregate`` distance folds) is interpreted row by row
+    in Spark 4.1.2, where those higher-order functions are all
+    ``CodegenFallback``. The kernel is bit-identical to it, which the
+    stored codes and the DuckDB oracles pin:
+      - distance: per subspace, ``acc = 0.0`` then
+        ``acc + (x − c)·(x − c)`` over the subdimensions in order, with
+        ``x`` widened exactly to double (a sequential fold, so no
+        pairwise ``sum``);
+      - argmin in Spark's double ordering: the smallest non-NaN distance
+        wins, ties go to the lowest code, and a subspace whose distances
+        are all NaN or null gets code 1. A null element makes the whole
+        subspace's distances null, which Spark sorted first, all tied,
+        so it is read as NaN here;
+      - a null vector gets code 1 in every subspace and recon = each
+        subspace's centroid 0;
+      - a non-null vector whose length is not m·sub raises.
 
-    The two expression Columns are memoized on the codebook CONTENT
-    (plus m/sub): streaming ingest freezes the books after batch 0 and
-    then re-encodes every micro-batch (metadata only — the expressions,
-    never data). r13 second pass: the codebooks enter the plan as ONE
-    ``array<array<array<double>>>`` Literal node
-    (flink_spark.exprutil.double_array_lit) instead of m·ks·sub
-    ``CAST('…' AS DOUBLE)`` nodes, and the output is a single ``select``
-    instead of two ``withColumn`` chains — plan ANALYSIS is proportional
-    to tree size and re-runs at every downstream operator (and every
-    micro-batch in streaming ingest), so the ~1024-node literal tree
-    cost ~0.1 s per analysis on the bench box where the Literal leaf is
-    O(1). Values are bit-identical — see exprutil for the construction
-    and the ±0.0 nuance (unobservable: codebook elements only feed the
-    squared-difference fold and cosine sums)."""
-    code_col, recon_col = memo(
-        ("pq_enc", m, sub, str(books)),
-        lambda: _pq_enc_cols(cv.sparkSession, m, sub, books),
-    )
-    return cv.select(
-        cand_id, "__cv",
-        code_col.alias("__code"), recon_col.alias("__recon"),
+    The worker code is nested here so that cloudpickle ships it by
+    value: a worker needs numpy and pyarrow, not this package on its
+    path."""
+    import numpy as np
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, IntegerType, StructField, StructType,
     )
 
+    B = np.asarray(books, dtype=np.float64)
+    ks, d = B.shape[1], m * sub
+    fields = [*cv.schema.fields,
+              StructField("__code", ArrayType(IntegerType()))]
+    if recon:
+        fields.append(
+            StructField("__recon", ArrayType(DoubleType(), False)))
+    names = [f.name for f in fields]
+    # rows per kernel call: the n×m×ks distance array stays ~8 MB
+    rows = max(1, 2 ** 20 // (m * ks))
 
-def _pq_enc_cols(spark, m: int, sub: int, books: list) -> tuple:
-    bl = double_array_lit(
-        spark, [[[float(x) for x in cent] for cent in book] for book in books]
-    )
-    cvc = F.col("__cv")
+    def kernel(vecs):
+        n = len(vecs)
+        valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+        lens = vecs.value_lengths().fill_null(d).to_numpy(
+            zero_copy_only=False)
+        bad = lens != d
+        if bad.any():
+            raise ValueError(
+                f"pq_encode: vector dim {lens[bad][0]} does not match "
+                f"saved codebooks (m={m} × sub={sub} = {d})"
+            )
+        x = np.full((n, d), np.nan)
+        x[valid] = vecs.flatten().to_numpy(
+            zero_copy_only=False).reshape(-1, d)
+        x = x.reshape(n, m, sub)
+        acc = np.zeros((n, m, ks))
+        for t in range(sub):
+            diff = x[:, :, t, None] - B[None, :, :, t]
+            acc = acc + diff * diff
+        best = np.where(np.isnan(acc), np.inf, acc).min(axis=2,
+                                                         keepdims=True)
+        code = (acc == best).argmax(axis=2)  # all-False (all NaN) → 0
+        return (code + 1).astype(np.int32), B[np.arange(m), code].reshape(n, d)
 
-    def argmin(j):
-        # per-subspace code: ascending (d, i) struct sort = lowest
-        # code among equal distances; +1 → the 1-based stored code
-        cents = F.element_at(bl, j + F.lit(1))
-        subv = F.slice(cvc, j * F.lit(sub) + F.lit(1), F.lit(sub))
-        ranked = F.sort_array(F.transform(
-            cents,
-            lambda c, i: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        subv, c,
-                        lambda x, y: (x.cast("double") - y)
-                        * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("d"),
-                i.alias("i"),
-            ),
-        ))
-        return (ranked[0]["i"] + F.lit(1)).cast("int")
+    def encode(batches):
+        import pyarrow as pa
 
-    # dim guard (ADVICE r12): the saved-books path derives sub from
-    # the books and never probes the data, so a caller whose vectors
-    # don't match m×sub would silently encode null-padded garbage
-    # (zip_with pads, null distances sort first). One size()
-    # comparison per row — negligible next to the m×ks distance
-    # folds — turns that into a clean error; the train path's
-    # d % m check is unchanged.
-    dim_ok = cvc.isNull() | (F.size(cvc) == F.lit(m * sub))
-    dim_err = F.raise_error(F.concat(
-        F.lit("pq_encode: vector dim "),
-        F.size(cvc).cast("string"),
-        F.lit(f" does not match saved codebooks (m={m} × sub={sub} "
-              f"= {m * sub})"),
-    ))
-    seq = F.sequence(F.lit(0), F.lit(m - 1))
-    code_col = F.when(dim_ok, F.transform(seq, argmin)).otherwise(dim_err)
-    # recon embeds its own per-subspace argmin instead of
-    # referencing __code: a column reference here would be INLINED
-    # by projection collapse — each of the m element_at(__code, ·)
-    # lookups would re-evaluate the full m-subspace codes transform
-    # (m× the work, measured 17 s vs 1 s on the bench box).
-    # Self-contained, a caller that prunes to __recon alone
-    # evaluates each distance exactly once.
-    recon_col = F.when(
-        dim_ok,
-        F.flatten(F.transform(
-            seq,
-            lambda j: F.element_at(
-                F.element_at(bl, j + F.lit(1)), argmin(j)
-            ),
-        )),
-    ).otherwise(dim_err)
-    return code_col, recon_col
+        def lists(a):
+            n, w = a.shape
+            return pa.ListArray.from_arrays(
+                np.arange(0, n * w + 1, w, dtype=np.int32), a.ravel())
+
+        for batch in batches:
+            for off in range(0, batch.num_rows, rows):
+                rb = batch.slice(off, rows)
+                code, rec = kernel(rb.column(1))
+                cols = [rb.column(0), rb.column(1), lists(code)]
+                if recon:
+                    cols.append(lists(rec))
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return cv.mapInArrow(encode, StructType(fields))
 
 
 def unique_queries(q: DataFrame, query_id: str, caller: str) -> DataFrame:

@@ -258,9 +258,9 @@ class PqStreamIndex:
         code array (no recon stored — m bytes per vector stay m bytes).
         One flatten/transform over a single 3-level codebook LITERAL
         node (exprutil.double_array_lit — not m·ks·sub CAST('…') nodes;
-        see similarity._pq_encode_with_books for the analysis-cost
-        economics and bit-equivalence). Code VALUES are 1-based argmin
-        positions, element_at is 1-based."""
+        see exprutil for the analysis-cost economics and
+        bit-equivalence). Code VALUES are 1-based argmin positions,
+        element_at is 1-based."""
         from flink_spark.exprutil import double_array_lit
 
         bl = double_array_lit(self.spark, self.books)
@@ -353,8 +353,8 @@ def pq_ingest_stream(
     codebooks (llm/similarity.pq_train — md5-ordered deterministic
     sample, driver-side Lloyd's under the rows×dim byte budget) and
     freezes them; every batch encodes map-only against the frozen books
-    (pq_encode's add-after-train path: argmin over literal centroids per
-    subspace, zero shuffle) and appends (id, vec, code) to the store.
+    (pq_encode's add-after-train path: a numpy argmin per subspace in
+    the worker, zero shuffle) and appends (id, vec, code) to the store.
     Search reconstructs from codes per the frozen books, shortlists by
     ADC cosine, and exact-reranks — identical semantics to the batch
     pq_topk with training pinned to batch 0."""
@@ -382,7 +382,8 @@ def pq_ingest_stream(
             )
             _save_centroids(books_path, books)
         enc, _ = pq_encode(
-            batch, cand_id=id_col, vec=vec_col, m=m, ks=ks, books=books
+            batch, cand_id=id_col, vec=vec_col, m=m, ks=ks, books=books,
+            recon=False,
         )
         write_bid_partition(
             enc.select(

@@ -314,6 +314,133 @@ def test_pq_single_expression_codec_matches_per_centroid_form(spark):
     assert got == want
 
 
+def _hof_pq_reference(df, m: int, sub: int, books: list):
+    """The Catalyst encode that pq_encode ran before its numpy kernel:
+    a struct-sort argmin over zip_with/aggregate distance folds, with
+    the dimension guard. The codebook literal is parsed SQL here, so it
+    may hold NaN and ±inf."""
+    import math
+
+    def lit(v):
+        if isinstance(v, list):
+            return "array(" + ",".join(lit(x) for x in v) + ")"
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{v!r}D"
+
+    bl = F.expr(lit(books))
+    cvc = F.col("__cv")
+
+    def argmin(j):
+        cents = F.element_at(bl, j + F.lit(1))
+        subv = F.slice(cvc, j * F.lit(sub) + F.lit(1), F.lit(sub))
+        ranked = F.sort_array(F.transform(
+            cents,
+            lambda c, i: F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        subv, c,
+                        lambda x, y: (x.cast("double") - y)
+                        * (x.cast("double") - y),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                ).alias("d"),
+                i.alias("i"),
+            ),
+        ))
+        return (ranked[0]["i"] + F.lit(1)).cast("int")
+
+    dim_ok = cvc.isNull() | (F.size(cvc) == F.lit(m * sub))
+    dim_err = F.raise_error(F.lit("dim"))
+    seq = F.sequence(F.lit(0), F.lit(m - 1))
+    code = F.when(dim_ok, F.transform(seq, argmin)).otherwise(dim_err)
+    recon = F.when(dim_ok, F.flatten(F.transform(
+        seq, lambda j: F.element_at(F.element_at(bl, j + F.lit(1)),
+                                    argmin(j)),
+    ))).otherwise(dim_err)
+    return df.select("cand_id", F.col("embedding").alias("__cv"),
+                     code.alias("__code"), recon.alias("__recon"))
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_pq_kernel_bit_identical_to_hof_expression(spark, elem):
+    """pq_encode's numpy kernel gives the codes and reconstructions of
+    the Catalyst expression it replaced, bit for bit: float32 widening,
+    the sequential distance fold, the lowest-code tie-break, Spark's
+    NaN-largest ordering, null elements and vectors, and codebooks that
+    hold NaN or ±inf."""
+    import numpy as np
+
+    from flink_spark.llm.similarity import pq_encode
+
+    m, ks, sub = 3, 5, 8  # sub ≥ 8: numpy's pairwise sum would differ
+    nan, inf = float("nan"), float("inf")
+    rng = np.random.default_rng(11)
+    books = rng.integers(-2, 3, size=(m, ks, sub)).astype(float)
+    # a pair whose distances from 0 tie under the sequential fold but
+    # not under numpy's pairwise sum
+    books[0, 0] = [-0.176, 0.133, -0.232, -0.239, -0.361, -0.26, 0.08, -0.19]
+    books[0, 1] = [-0.26, -0.19, -0.239, -0.176, -0.361, 0.08, 0.133, -0.232]
+    books[:, 3] = books[:, 1]  # a row nearest to either one ties
+    books[1, 2, 0] = nan
+    books[2, 0, 1] = inf
+    books[2, 4, 2] = -inf
+    books = books.tolist()
+    vecs = [rng.integers(-2, 3, size=m * sub).astype(float).tolist()
+            for _ in range(40)]  # small integers: many exact ties
+    vecs += [rng.normal(size=m * sub).tolist() for _ in range(40)]
+    vecs += [c * m for c in books[0]]  # distance 0 in subspace 0
+    vecs.append([0.0] * sub + rng.normal(size=(m - 1) * sub).tolist())
+    for j, special in enumerate([nan, inf, -inf, None, nan, inf]):
+        v = rng.normal(size=m * sub).tolist()
+        v[j * 2] = special
+        vecs.append(v)
+    vecs.append([nan] * (m * sub))
+    vecs.append([inf] * (m * sub))
+    vecs.append([None] * (m * sub))
+    rows = [(i, v) for i, v in enumerate(vecs)] + [(900, None), (901, None)]
+    df = spark.createDataFrame(
+        rows, f"cand_id bigint, embedding array<{elem}>")
+
+    def keyed(frame):
+        def hx(arr):
+            return None if arr is None else tuple(
+                None if v is None else float(v).hex() for v in arr)
+
+        return {
+            r["cand_id"]: (hx(r["__cv"]), tuple(r["__code"]), hx(r["__recon"]))
+            for r in frame.select("cand_id", "__cv", "__code", "__recon")
+            .collect()
+        }
+
+    enc, _ = pq_encode(df, m=m, ks=ks, books=books)
+    got, want = keyed(enc), keyed(_hof_pq_reference(df, m, sub, books))
+    assert len(got) == len(rows)
+    assert got == want
+    codes = {c for v in got.values() for c in v[1]}
+    assert codes <= set(range(1, ks + 1)) and len(codes) >= 3
+    assert got[900][1] == (1,) * m
+    assert got[900][2] == tuple(
+        float(x).hex() for j in range(m) for x in books[j][0])
+
+
+def test_pq_ingest_encode_ships_no_recon(spark):
+    """``pq_encode(recon=False)``, the streaming ingest's call (it
+    stores only ``__code``), leaves ``__recon`` out of the worker's
+    output."""
+    from flink_spark.llm.similarity import pq_encode
+
+    df = spark.createDataFrame([(1, [1.0, 2.0])],
+                               "cand_id bigint, embedding array<double>")
+    books = [[[0.0], [1.0]], [[2.0], [3.0]]]
+    enc, _ = pq_encode(df, m=2, ks=2, books=books, recon=False)
+    assert enc.columns == ["cand_id", "__cv", "__code"]
+    assert [tuple(r["__code"]) for r in enc.collect()] == [(2, 1)]
+
+
 def test_connected_components_long_chain_converges(spark):
     """Pointer jumping (r12) collapses a path graph in O(log diameter)
     rounds: a 200-node chain must converge inside the default
