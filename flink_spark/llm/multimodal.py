@@ -17,10 +17,19 @@ by `extract_features` for opaque payloads.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# The mapInPandas closures below call this module's functions
+# (_fake_decode, decode_image, encode_ppm, ...). Pickled by reference, a
+# Python worker would have to import flink_spark, which a worker started
+# without this package on its path cannot; by value, a worker needs only
+# numpy and pandas. The module imports nothing else from flink_spark.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id BIGINT, n_bytes INT, mime STRING, byte_mean DOUBLE, "

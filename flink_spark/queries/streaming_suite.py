@@ -1635,7 +1635,7 @@ def stream_delta_join_left(spark, sf_dir):
     from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import (
         apply_changelog,
-        delta_join_outer,
+        delta_join,
         tag_union,
     )
 
@@ -1648,7 +1648,7 @@ def stream_delta_join_left(spark, sf_dir):
     lc = ["o_orderkey", "o_custkey"]
     rc = ["l_orderkey", "l_linenumber", "l_quantity"]
     tagged = tag_union(o.select(*lc), li.select(*rc), lc, rc)
-    cl = delta_join_outer(
+    cl = delta_join(
         tagged, lc, rc, ["o_orderkey"], ["l_orderkey"],
         prefix="delta_join_left", how="left",
     )
@@ -1667,18 +1667,18 @@ def stream_delta_join_left(spark, sf_dir):
     """,
 )
 def stream_delta_join_full(spark, sf_dir):
-    """FULL OUTER delta join: both sides keep an unmatched store, each
-    null-padded emission is retracted when its first opposite-side match
-    arrives (reference StreamingDeltaJoinOperator + the two-sided
-    OuterJoinRecordStateView). Sides stream in orders uncorrelated with
-    the key so both stores see cross-batch retraction traffic; net
+    """FULL OUTER delta join: each side's null-padded emission is
+    retracted when its first opposite-side match arrives (reference
+    StreamingDeltaJoinOperator + the two-sided OuterJoinRecordStateView),
+    both derived from the side stores. Sides stream in orders uncorrelated
+    with the key so both sides see cross-batch retraction traffic; net
     changelog equals the batch FULL JOIN exactly (BUILDING customers
     without urgent orders and urgent orders of non-BUILDING customers
     both survive as null-padded rows)."""
     from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import (
         apply_changelog,
-        delta_join_outer,
+        delta_join,
         tag_union,
     )
 
@@ -1691,7 +1691,7 @@ def stream_delta_join_full(spark, sf_dir):
     lc = ["c_custkey", "c_name"]
     rc = ["o_orderkey", "o_custkey", "o_totalprice"]
     tagged = tag_union(c.select(*lc), o.select(*rc), lc, rc)
-    cl = delta_join_outer(
+    cl = delta_join(
         tagged, lc, rc, ["c_custkey"], ["o_custkey"],
         prefix="delta_join_full", how="full",
     )

@@ -15,30 +15,39 @@ incremental-view maintenance over insert-only inputs:
 
 Each micro-batch joins only its *deltas* against compacted side tables
 (bucket-partitioned parquet — the stand-in for the indexed lake table the
-reference looks up), appends the join delta to the sink, then appends the
-deltas to the side tables. No per-key operator state exists at all — the
+reference looks up), writes the join delta to the sink and the deltas to
+the side tables. No per-key operator state exists at all — the
 state IS the stored table, exactly the delta-join trade.
+
+Outer joins (``how='left'|'right'|'full'``) keep no extra state either:
+whether a row is still null-padded follows from the side stores. A left
+row is unmatched after batch b exactly when no right row with its key
+has ``__bid <= b``, so each batch emits, besides the ``+I`` pairs,
+
+    +I padded   left_anti(ΔL, R_before ∪ ΔR)
+    -D padded   left_anti(left_semi(L_before, ΔR), R_before)
+
+(the first match of an earlier padded row retracts it — the reference's
+OuterJoinRecordStateView protocol for late outer matches); ``right``
+mirrors this and ``full`` does both.
 
 Scale notes (100 TB): the per-batch work is |ΔL| ⋈ R + L ⋈ |ΔR| with the
 delta side small — AQE broadcasts it, and the store is partitioned by a
 key-hash bucket so a delta carrying few buckets prunes most store
 partitions at scan time (the parquet analog of the reference's index
-lookup). In :func:`delta_join` (the variant with a durable-root resume
-path) sink and store writes follow the ``storeutil`` batch-id store
-discipline (dynamic partition overwrite on a ``__bid`` partition), so a
-batch re-delivered after a crash between the writes and the checkpoint
-commit overwrites its own partition instead of double-appending — the
-standard foreachBatch idempotence pattern; a production deployment would
-land the same writes in a table format with MERGE. :func:`delta_join_outer`
-has no resume path (temp root, single availableNow drain, discarded on
-failure), so its plain appends cannot observe a re-delivered batch.
+lookup). Sink and store writes follow the ``storeutil`` batch-id store
+discipline for every ``how`` (dynamic partition overwrite on a ``__bid``
+partition, reads of strictly earlier batches only), so a batch
+re-delivered after a crash between the writes and the checkpoint commit
+overwrites its own partitions instead of double-appending, and a durable
+``root`` resumes — the standard foreachBatch idempotence pattern; a
+production deployment would land the same writes in a table format with
+MERGE.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,15 +56,6 @@ from flink_spark.streaming import storeutil
 from flink_spark.streaming.storeutil import BID
 
 _BUCKET = "__dj_bucket"
-
-
-def _bucketed(df: DataFrame, keys: list[str], num_buckets: int) -> DataFrame:
-    # md5-derived (engine-version-stable) because the bucket is persisted
-    # in the store's partition layout and join keys — see
-    # storeutil.portable_bucket (ADVICE r9)
-    return df.withColumn(
-        _BUCKET, storeutil.portable_bucket(num_buckets, *keys)
-    )
 
 
 def delta_join(
@@ -72,9 +72,15 @@ def delta_join(
     compact_every: int = 4,
     store_stats: dict | None = None,
     root: str | None = None,
+    how: str = "inner",
 ) -> DataFrame:
     """Drain a two-sided tagged stream through an incremental delta join;
-    return the append-only join result as a batch DataFrame.
+    return the result as a batch DataFrame: for ``how='inner'`` the
+    append-only pairs (``*left_cols, *right_cols``), for
+    ``'left'|'right'|'full'`` the drained changelog
+    ``__op ('+I'|'-D'), __bid, *left_cols, *right_cols`` whose net
+    (:func:`apply_changelog`) is the outer join — a null-padded row is
+    retracted in the batch that brings its first match.
 
     ``tagged`` is a streaming DataFrame shaped ``__side: 'L'|'R'`` plus the
     union of both sides' (disjoint) columns, nulls on the foreign side —
@@ -88,7 +94,8 @@ def delta_join(
     and pairs must satisfy ``|l.ts - r.ts| <= ttl`` — under in-order
     delivery a TTL'd regular join degenerates to exactly this interval
     band (the equivalence Flink's own docs draw), which is what makes
-    the TTL path exactly oracle-checkable.
+    the TTL path exactly oracle-checkable. Inner joins only: an outer
+    join's padded rows depend on every earlier row of the other side.
 
     Every ``compact_every`` batches (0 disables) the side stores are
     compacted: under ``ttl`` rewritten without the expired rows,
@@ -97,6 +104,12 @@ def delta_join(
     """
     import pandas as pd
 
+    if how not in ("inner", "left", "right", "full"):
+        raise ValueError(
+            f"delta_join: how must be inner/left/right/full, got {how!r}"
+        )
+    if ttl and how != "inner":
+        raise ValueError(f"delta_join: ttl needs how='inner', got {how!r}")
     spark = tagged.sparkSession
     ttl_delta = pd.Timedelta(ttl) if ttl else None
     # an explicit root makes the store tables + checkpoint durable
@@ -150,18 +163,44 @@ def delta_join(
         lts = F.col(f"__dj_l.{left_ts}").cast("timestamp").cast("double")
         rts = F.col(f"__dj_r.{right_ts}").cast("timestamp").cast("double")
         join_cond.append(F.abs(lts - rts) <= ttl_delta.total_seconds())
+    data_cols = left_cols + right_cols
+    data_schema = _schema_of(tagged, data_cols)
+    # outer: every changelog row leads with __op, pairs are always +I; a
+    # side's padded rows carry typed nulls for the other side's columns
+    op_col, padded_sides = [], []  # (own alias, other alias, +I, -D cols)
+    if how != "inner":
+        op_col = [F.lit("+I").alias("__op")]
+        delete = F.lit("-D").alias("__op")
+        nulls = {
+            f.name: F.lit(None).cast(f.dataType).alias(f.name)
+            for f in data_schema.fields
+        }
+        for side, own, other, cols in (
+            ("left", "__dj_l", "__dj_r",
+             [*l_out_cols, *(nulls[c] for c in right_cols)]),
+            ("right", "__dj_r", "__dj_l",
+             [*(nulls[c] for c in left_cols), *r_out_cols]),
+        ):
+            if how in (side, "full"):
+                padded_sides.append(
+                    (own, other, [*op_col, *cols], [delete, *cols])
+                )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
+        # unpersisting the batch leaves the deltas cached (no cascade),
+        # so every cached frame is released, newest first
+        cached = [batch.persist()]
         try:
             delta_l = (
                 batch.filter(l_side_pred).select(*left_cols)
                 .withColumn(_BUCKET, l_bucket)
             ).persist()
+            cached.append(delta_l)
             delta_r = (
                 batch.filter(r_side_pred).select(*right_cols)
                 .withColumn(_BUCKET, r_bucket)
             ).persist()
+            cached.append(delta_r)
             sess = batch.sparkSession
             # R_before/L_before = rows of STRICTLY EARLIER batches. The
             # bid partition makes this a pruning filter, and it is what
@@ -225,7 +264,7 @@ def delta_join(
                 # (cond/select lists hoisted to drain scope above)
                 l, r = lf.alias("__dj_l"), rf.alias("__dj_r")
                 return l.join(r, join_cond).select(
-                    *l_out_cols, *r_out_cols
+                    *op_col, *l_out_cols, *r_out_cols
                 )
 
             # ΔL ⋈ (R_before ∪ ΔR)  ∪  L_before ⋈ ΔR  — each result pair
@@ -234,6 +273,36 @@ def delta_join(
             out = join(delta_l, r_all)
             if old_l is not None:
                 out = out.unionByName(join(old_l, delta_r))
+
+            def probe(
+                df: DataFrame, own: str, other_df: DataFrame, other: str,
+                jt: str,
+            ) -> DataFrame:
+                # semi/anti probe on the join keys (the bucket equality
+                # only prunes: it is derived from the keys)
+                return df.alias(own).join(other_df.alias(other), join_cond, jt)
+
+            # outer: one side's padded rows, the same step for either
+            # side. The side stores say what was padded before this
+            # batch, so no unmatched-row state is kept.
+            sides = {"__dj_l": (delta_l, old_l), "__dj_r": (delta_r, old_r)}
+            for own, other, ins_cols, del_cols in padded_sides:
+                own_delta, own_old = sides[own]
+                other_delta, other_old = sides[other]
+                other_all = (
+                    other_delta if other_old is None
+                    else other_old.unionByName(other_delta)
+                )
+                # +I: this batch's rows with no match so far
+                fresh = probe(own_delta, own, other_all, other, "left_anti")
+                out = out.unionByName(fresh.select(*ins_cols))
+                if own_old is not None:
+                    # -D: earlier rows, padded until now, whose first
+                    # match arrives in this batch
+                    first = probe(own_old, own, other_delta, other, "left_semi")
+                    if other_old is not None:
+                        first = probe(first, own, other_old, other, "left_anti")
+                    out = out.unionByName(first.select(*del_cols))
             # the sink and the two side-store commits are independent
             # idempotent __bid overwrites (a replay overwrites exactly its
             # own partition, never double-appends) — overlap them
@@ -290,7 +359,8 @@ def delta_join(
                     if storeutil.has_parquet(store)
                 ])
         finally:
-            batch.unpersist()
+            for df in reversed(cached):
+                df.unpersist()
 
     # drain under the streaming shuffle sizing (storeutil.run_drain):
     # per-batch joins/writes at the batch shuffle.partitions fan every
@@ -310,9 +380,21 @@ def delta_join(
                     "files": nfiles,
                 }
 
-    cols = left_cols + right_cols
+    cols, schema = data_cols, data_schema
+    if how != "inner":
+        from pyspark.sql.types import (
+            IntegerType, StringType, StructField, StructType,
+        )
+
+        # __bid as partition discovery reads it back from the out store
+        cols = ["__op", BID, *data_cols]
+        schema = StructType([
+            StructField("__op", StringType()),
+            StructField(BID, IntegerType()),
+            *data_schema.fields,
+        ])
     return storeutil.collect_out(
-        spark, root, out_dir, cols, _schema_of(tagged, cols), persistent
+        spark, root, out_dir, cols, schema, persistent
     )
 
 
@@ -323,226 +405,6 @@ def _schema_of(df: DataFrame, cols: list[str]):
 
     by_name = {f.name: f for f in df.schema.fields}
     return StructType([by_name[c] for c in cols])
-
-
-def _latest_version(root: str) -> str | None:
-    if not os.path.isdir(root):
-        return None
-    vs = [d for d in os.listdir(root) if d.startswith("v")]
-    if not vs:
-        return None
-    vs.sort(key=lambda d: int(d[1:]))
-    # prune superseded versions (keep latest + one predecessor for the
-    # in-flight reader) — the compaction a MERGE-capable store would do
-    for stale in vs[:-2]:
-        shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
-    return os.path.join(root, vs[-1])
-
-
-def delta_join_outer(
-    tagged: DataFrame,
-    left_cols: list[str],
-    right_cols: list[str],
-    left_keys: list[str],
-    right_keys: list[str],
-    num_buckets: int = 16,
-    prefix: str = "delta_join_outer",
-    how: str = "left",
-) -> DataFrame:
-    """Outer delta join with changelog emission for late-arriving matches
-    (reference StreamingDeltaJoinOperator.java handles insert-only inner;
-    the outer extension mirrors Flink's OuterJoinRecordStateView null-row
-    bookkeeping for the regular streaming outer join).
-
-    Returns the drained changelog as a batch DataFrame shaped
-    ``__op ('+I'|'-D'), __bid, *left_cols, *right_cols``:
-
-    - a left row with no match so far emits ``+I`` null-padded-right and
-      is remembered in the *unmatched store*;
-    - when a matching right row later arrives, the null-padded row is
-      retracted (``-D``) and the real pair(s) emitted ``+I`` — exactly
-      the reference's retraction protocol for late outer matches;
-    - symmetric for ``how='right'``; ``how='full'`` keeps both stores.
-
-    The unmatched store is tiny relative to history (only currently
-    null-padded rows) and is rewritten per batch as a new version — at
-    100 TB that rewrite is the MERGE/compaction job of the store's table
-    format. Unlike :func:`delta_join` there is no durable-root resume
-    path here (temp root, one availableNow drain, discarded on failure),
-    so the plain append writes cannot observe a re-delivered batch."""
-    if how not in ("left", "right", "full"):
-        raise ValueError(f"delta_join_outer: how must be left/right/full, got {how!r}")
-    spark = tagged.sparkSession
-    root = tempfile.mkdtemp(prefix=f"flink_spark_{prefix}_")
-    l_store, r_store = f"{root}/left", f"{root}/right"
-    unm_l_root, unm_r_root = f"{root}/unm_l", f"{root}/unm_r"
-    out_dir, ckpt = f"{root}/out", f"{root}/ckpt"
-    ldt, rdt = dict(tagged.dtypes), dict(tagged.dtypes)
-    null_r = [F.lit(None).cast(rdt[c]).alias(c) for c in right_cols]
-    null_l = [F.lit(None).cast(ldt[c]).alias(c) for c in left_cols]
-    keymap = list(zip(left_keys, right_keys))
-    # batch-independent Column trees built ONCE per drain (py4j round
-    # trips — same memo discipline as delta_join above)
-    pj_cond = [F.col(f"__dj_l.{_BUCKET}") == F.col(f"__dj_r.{_BUCKET}")]
-    pj_cond += [
-        F.col(f"__dj_l.{lk}") == F.col(f"__dj_r.{rk}") for lk, rk in keymap
-    ]
-    pj_l_cols = [F.col(f"__dj_l.{c}") for c in left_cols]
-    pj_r_cols = [F.col(f"__dj_r.{c}") for c in right_cols]
-    l_side_pred = F.col("__side") == "L"
-    r_side_pred = F.col("__side") == "R"
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            sess = batch.sparkSession
-            delta_l = _bucketed(
-                batch.filter(l_side_pred).select(*left_cols),
-                left_keys, num_buckets,
-            ).persist()
-            delta_r = _bucketed(
-                batch.filter(r_side_pred).select(*right_cols),
-                right_keys, num_buckets,
-            ).persist()
-            old_l = (
-                storeutil.read_store(sess, l_store)
-                if storeutil.has_parquet(l_store) else None
-            )
-            old_r = (
-                storeutil.read_store(sess, r_store)
-                if storeutil.has_parquet(r_store) else None
-            )
-
-            def pair_join(lf: DataFrame, rf: DataFrame) -> DataFrame:
-                l, r = lf.alias("__dj_l"), rf.alias("__dj_r")
-                return l.join(r, pj_cond).select(*pj_l_cols, *pj_r_cols)
-
-            def key_join(
-                lf: DataFrame, lks: list[str], rf: DataFrame, rks: list[str],
-                jt: str,
-            ) -> DataFrame:
-                # semi/anti probes on the equi keys (bucket is derived
-                # from them, so it adds pruning but not semantics)
-                cond = [lf[a] == rf[b] for a, b in zip(lks, rks)]
-                return lf.join(rf, cond, jt)
-
-            r_all = old_r.unionByName(delta_r) if old_r is not None else delta_r
-            l_all = old_l.unionByName(delta_l) if old_l is not None else delta_l
-            out = pair_join(delta_l, r_all)
-            if old_l is not None:
-                out = out.unionByName(pair_join(old_l, delta_r))
-            parts = [out.select(F.lit("+I").alias("__op"), "*")]
-
-            cached = []
-            pending_writes = []
-            if how in ("left", "full"):
-                unm_v = _latest_version(unm_l_root)
-                unm_old = (
-                    storeutil.read_store(sess, unm_v, key=unm_l_root)
-                    if unm_v else None
-                )
-                # fresh feeds BOTH the changelog write and the unmatched
-                # store write — persist so the anti-join runs once
-                fresh = key_join(
-                    delta_l, left_keys, r_all, right_keys, "left_anti"
-                ).persist()
-                cached.append(fresh)
-                parts.append(
-                    fresh.select(F.lit("+I").alias("__op"), *left_cols, *null_r)
-                )
-                if unm_old is not None:
-                    gone = key_join(
-                        unm_old, left_keys, delta_r, right_keys, "left_semi"
-                    )
-                    parts.append(
-                        gone.select(F.lit("-D").alias("__op"), *left_cols, *null_r)
-                    )
-                    keep = key_join(
-                        unm_old, left_keys, delta_r, right_keys, "left_anti"
-                    )
-                    unm_new = keep.unionByName(fresh)
-                else:
-                    unm_new = fresh
-                pending_writes.append(
-                    lambda df=unm_new: df.write.mode("overwrite").parquet(
-                        f"{unm_l_root}/v{batch_id}"
-                    )
-                )
-            if how in ("right", "full"):
-                unm_v = _latest_version(unm_r_root)
-                unm_old = (
-                    storeutil.read_store(sess, unm_v, key=unm_r_root)
-                    if unm_v else None
-                )
-                fresh = key_join(
-                    delta_r, right_keys, l_all, left_keys, "left_anti"
-                ).persist()
-                cached.append(fresh)
-                parts.append(
-                    fresh.select(F.lit("+I").alias("__op"), *null_l, *right_cols)
-                )
-                if unm_old is not None:
-                    gone = key_join(
-                        unm_old, right_keys, delta_l, left_keys, "left_semi"
-                    )
-                    parts.append(
-                        gone.select(F.lit("-D").alias("__op"), *null_l, *right_cols)
-                    )
-                    keep = key_join(
-                        unm_old, right_keys, delta_l, left_keys, "left_anti"
-                    )
-                    unm_new = keep.unionByName(fresh)
-                else:
-                    unm_new = fresh
-                pending_writes.append(
-                    lambda df=unm_new: df.write.mode("overwrite").parquet(
-                        f"{unm_r_root}/v{batch_id}"
-                    )
-                )
-
-            changelog = parts[0]
-            for p in parts[1:]:
-                changelog = changelog.unionByName(p)
-
-            # Two overlap stages (guide §2.6). Stage 1: the changelog
-            # sink and the unmatched-store version writes — independent
-            # destinations, and both only READ l_store/r_store. Stage 2:
-            # the side-store appends. The stages must not merge: unlike
-            # delta_join's __bid-filtered reads, this variant's store
-            # reads are plain scans, so an append landing concurrently
-            # with a stage-1 job's scan would let the batch see its own
-            # delta in the store (double-counting ΔL⋈ΔR).
-            storeutil.run_parallel(
-                lambda: changelog.select(
-                    "__op", F.lit(batch_id).alias("__bid"),
-                    *left_cols, *right_cols
-                ).write.mode("append").parquet(out_dir),
-                *pending_writes,
-            )
-            storeutil.run_parallel(
-                lambda: delta_l.write.mode("append")
-                .partitionBy(_BUCKET).parquet(l_store),
-                lambda: delta_r.write.mode("append")
-                .partitionBy(_BUCKET).parquet(r_store),
-            )
-            for c in cached:
-                c.unpersist()
-        finally:
-            batch.unpersist()
-
-    # same streaming shuffle sizing as delta_join (see comment there)
-    storeutil.run_drain(tagged, process, ckpt)
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    data_cols = left_cols + right_cols
-    empty = StructType(
-        [StructField("__op", StringType()), StructField("__bid", LongType())]
-        + _schema_of(tagged, data_cols).fields
-    )
-    return storeutil.collect_out(
-        spark, root, out_dir, ["__op", "__bid", *data_cols], empty, False
-    )
 
 
 def apply_changelog(cl: DataFrame, cols: list[str]) -> DataFrame:

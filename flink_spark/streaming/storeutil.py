@@ -50,8 +50,8 @@ def read_store(
     partition-column types match what discovery produces (``__bid=3``
     dirs infer back as int regardless of the literal's write-side
     type). ``key`` overrides the memo key for stores whose PATH rotates
-    per version while the schema stays fixed (delta_join_outer's
-    unmatched-store ``v<N>`` dirs)."""
+    while the schema stays fixed (``idleness.aligned_union_trace``'s
+    per-round buffer dirs)."""
     df = None
 
     def infer():

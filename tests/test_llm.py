@@ -53,6 +53,50 @@ def test_multimodal_features_deterministic(spark, sf_dir):
     assert by_id[row.doc_id].feature_ok
 
 
+_VANILLA_DECODE = """
+import sys
+
+repo, sf = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo)
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "America/New_York")
+         .getOrCreate())
+import __spark_entry__ as E
+from tests.compare import assert_frames_match, run_oracle
+
+name = "llm_multimodal_decode"
+got = E.queries()[name](spark, sf).toPandas()
+assert_frames_match(got, run_oracle(E.oracle_sql()[name], sf), name)
+print("ok")
+"""
+
+
+def test_multimodal_decode_runs_where_workers_cannot_import_package(
+    tmp_path,
+):
+    """A vanilla session (no preloading daemon, so no PYTHONPATH for its
+    Python workers) whose driver runs outside the repository: the decode
+    closures must reach the workers by value, since the workers cannot
+    import flink_spark."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SMOKE_SF_DIR
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _VANILLA_DECODE, repo, SMOKE_SF_DIR],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().splitlines()[-1] == "ok"
+
+
 @pytest.mark.slow
 def test_minhash_estimates_track_true_jaccard(spark, sf_dir):
     from flink_spark.llm.dedup import minhash_lsh_pairs, ngram_jaccard_pairs

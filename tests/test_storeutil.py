@@ -531,3 +531,71 @@ def test_run_parallel_runs_all_and_propagates_errors(tmp_path):
             lambda: (_ for _ in ()).throw(RuntimeError("boom")),
         )
     assert "d" in hits
+
+
+# --- one store discipline ---------------------------------------------
+
+#: Writer methods that take the save mode as a ``mode=`` keyword.
+_SAVE_CALLS = {"parquet", "save", "saveAsTable", "csv", "json", "orc", "text"}
+
+
+def _append_writes(root):
+    """Sorted (relpath, line) of every append-mode batch write in the .py
+    files under ``root``: ``.mode("append")`` (also as ``saveMode=``) or
+    ``mode="append"`` on a writer call. A streaming ``outputMode`` is not
+    a store write and is not matched."""
+    import ast
+
+    sites = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                name = node.func.attr
+                modes = [
+                    k.value for k in node.keywords
+                    if (k.arg == "saveMode" and name == "mode")
+                    or (k.arg == "mode" and name in _SAVE_CALLS)
+                ]
+                if name == "mode":
+                    modes += node.args[:1]
+                if any(isinstance(m, ast.Constant) and m.value == "append"
+                       for m in modes):
+                    sites.append((rel, node.lineno))
+    return sorted(sites)
+
+
+def test_streaming_stores_write_only_bid_partitions():
+    """Every store under flink_spark/streaming/ is written through the
+    __bid discipline (write_bid_partition, or an overwrite fold): a plain
+    append would double a re-delivered batch's rows."""
+    import flink_spark.streaming
+
+    assert _append_writes(os.path.dirname(flink_spark.streaming.__file__)) == []
+
+
+def test_append_write_scan_flags_each_spelling(tmp_path):
+    """The scan sees .mode("append"), saveMode= and a writer's mode=, and
+    not an overwrite, a streaming outputMode, or a mention in a comment
+    or docstring."""
+    (tmp_path / "op.py").write_text(
+        "def op(df, p):\n"
+        "    \"\"\"Writes with .mode(\"append\").\"\"\"\n"
+        "    # df.write.mode(\"append\").parquet(p)\n"
+        "    df.write.mode(\"append\").parquet(p)\n"
+        "    df.write.mode(saveMode=\"append\").save(p)\n"
+        "    df.write.parquet(p, mode=\"append\")\n"
+        "    df.write.mode(\"overwrite\").parquet(p)\n"
+        "    return df.writeStream.outputMode(\"append\")\n"
+    )
+    assert _append_writes(str(tmp_path)) == [
+        ("op.py", 4), ("op.py", 5), ("op.py", 6),
+    ]
