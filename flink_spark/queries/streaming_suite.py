@@ -338,17 +338,20 @@ def stream_group_agg_retract_ttl(spark, sf_dir):
     key's accumulator SILENTLY (no retraction — Flink's TTL semantics)
     and the next row re-inserts with a restarted count. The oracle
     splits each key's timeline into TTL islands with LAG and replays the
-    prefix-sum emission sequence per island — exact, like the
-    dedup/topn TTL twins."""
-    ev = stream_table(spark, sf_dir, "events").filter(
+    prefix-sum emission sequence per island — exact, like the dedup and
+    Top-N TTL queries. Input arrives over three ts-ordered micro-batches,
+    so accumulators and expiry cross batch boundaries."""
+    from flink_spark.streaming.core import chunked_table_stream
+
+    ev = chunked_table_stream(spark, sf_dir, "events", 3, "ts").filter(
         F.col("user_id") <= 50
     ).select(
         "user_id",
         F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
         "ts", "event_id",
     )
-    out = CL.group_agg_retract_ttl(
-        ev, ["user_id"], "cents", "ts", ["event_id"], "12 hours"
+    out = CL.group_agg_retract(
+        ev, ["user_id"], "cents", ["ts", "event_id"], ttl=("ts", "12 hours")
     )
     return run_to_memory(out, "append", "gaggrt")
 
@@ -373,16 +376,8 @@ def stream_upsert_materialize(spark, sf_dir):
     )
     cl = CL.changelog_normalize(ev, ["user_id"], ["ts", "event_id"])
     collected = run_to_memory(cl, "append", "upsert")
-    ups = CL.drop_update_before(collected)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    return (
-        ups.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "ts", "event_id", "value")
+    return CL.materialize(collected, ["user_id"], ["ts", "event_id"]).select(
+        "user_id", "ts", "event_id", "value"
     )
 
 
@@ -949,7 +944,7 @@ def cdc_debezium_materialize(spark, sf_dir):
     deleted keys absent, survivors hold their last payload."""
     from pyspark.sql import Window
 
-    from flink_spark.streaming.cdc import decode_debezium, materialize_upserts
+    from flink_spark.streaming.cdc import decode_debezium
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 100)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -992,7 +987,7 @@ def cdc_debezium_materialize(spark, sf_dir):
         envelopes, "envelope",
         "user_id bigint, seq_no int, event_id bigint, value double",
     )
-    final = materialize_upserts(changelog, ["user_id"], ["seq_no"])
+    final = CL.materialize(changelog, ["user_id"], ["seq_no"])
     return final.select("user_id", "event_id", "value")
 
 
@@ -1017,7 +1012,7 @@ def cdc_ogg_materialize(spark, sf_dir):
     the identical downstream changelog machinery."""
     from pyspark.sql import Window
 
-    from flink_spark.streaming.cdc import decode_ogg, materialize_upserts
+    from flink_spark.streaming.cdc import decode_ogg
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").between(101, 200)
@@ -1062,7 +1057,7 @@ def cdc_ogg_materialize(spark, sf_dir):
         envelopes, "envelope",
         "user_id bigint, seq_no int, event_id bigint, value double",
     )
-    final = materialize_upserts(changelog, ["user_id"], ["seq_no"])
+    final = CL.materialize(changelog, ["user_id"], ["seq_no"])
     return final.select("user_id", "event_id", "value")
 
 
@@ -1203,12 +1198,16 @@ def stream_dedup_first_ttl(spark, sf_dir):
     """Keep-first dedup with 6-hour state TTL (reference StateTtlConfig
     OnReadAndWrite + table.exec.state.ttl): a user's first event emits,
     later events refresh the state silently, and after a 6-hour quiet gap
-    the next event re-emits as a fresh first."""
-    ev = stream_table(spark, sf_dir, "events").filter(F.col("user_id") <= 100).select(
-        "event_id", "ts", "user_id", "value"
-    )
-    out = CL.dedup_keep_first_ttl(
-        ev, ["user_id"], "ts", ["event_id"], ttl="6 hours"
+    the next event re-emits as a fresh first. Input arrives over three
+    ts-ordered micro-batches, so the state and expiry cross batch
+    boundaries."""
+    from flink_spark.streaming.core import chunked_table_stream
+
+    ev = chunked_table_stream(spark, sf_dir, "events", 3, "ts").filter(
+        F.col("user_id") <= 100
+    ).select("event_id", "ts", "user_id", "value")
+    out = CL.dedup_keep_first(
+        ev, ["user_id"], ["ts", "event_id"], ttl=("ts", "6 hours")
     )
     return run_to_memory(out, "append", "dedupttl")
 
@@ -1523,13 +1522,12 @@ def stream_delta_join(spark, sf_dir):
 def stream_topn_ttl(spark, sf_dir):
     """Streaming Top-N with state TTL (reference StateTtlConfig on
     StreamExecRank, `table.exec.state.ttl`): an event-time quiet gap
-    > 8h expires a partition's leaderboard silently (no retractions —
-    Flink's TTL drop), so the materialized changelog equals the union
-    over TTL islands of each island's final top-5. The oracle computes
+    > 8h expires a partition's leaderboard silently (no retractions,
+    as in Flink's TTL expiry), so the materialized changelog equals the
+    union over TTL islands of each island's final top-5. The oracle computes
     exactly that closed form (gap → island → per-island ROW_NUMBER);
     input arrives over three micro-batches so boards and expiry cross
     batch boundaries."""
-    from flink_spark.streaming.changelog import streaming_topn_ttl
     from flink_spark.streaming.core import chunked_table_stream
 
     ev = (
@@ -1537,14 +1535,13 @@ def stream_topn_ttl(spark, sf_dir):
         .filter(F.col("user_id") <= 20)
         .select("event_type", "event_id", "value", "ts")
     )
-    cl = streaming_topn_ttl(
+    cl = CL.streaming_topn(
         ev,
         partition_cols=["event_type"],
         order_cols=["value", "event_id"],
         n=5,
-        ts_col="ts",
-        ttl="8 hours",
         ascending=[False, True],
+        ttl=("ts", "8 hours"),
     )
     res = run_to_memory(cl, "append", "topn_ttl")
     member = F.sum(

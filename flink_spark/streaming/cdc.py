@@ -4,8 +4,8 @@ Reference surface: flink-formats/flink-json debezium-json format
 (DebeziumJsonDeserializationSchema — `op` c/r/u/d with before/after
 payloads → RowKind INSERT/UPDATE_BEFORE/UPDATE_AFTER/DELETE). The decoded
 stream plugs straight into the changelog layer (streaming/changelog.py):
-`changelog_normalize` materializes the final row per key, the upsert sink
-applies it exactly-once via foreachBatch MERGE.
+`changelog.materialize` folds it to the final row per key, the same fold
+the upsert sink applies exactly-once via foreachBatch MERGE.
 
 All decoding is `from_json` + column expressions — JVM-side, linear scan,
 no Python in the path.
@@ -61,33 +61,6 @@ def decode_debezium(df: DataFrame, value_col: str, payload_schema: str) -> DataF
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def materialize_upserts(changelog: DataFrame, key_cols: list[str],
-                        seq_cols: list[str]) -> DataFrame:
-    """Fold a decoded changelog into the final row per key: the last +I/+U
-    wins unless followed by -D (then the key is absent). Batch helper for
-    the oracle-checkable path; the streaming twin is
-    changelog.changelog_normalize + the foreachBatch upsert sink."""
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*[F.col(c) for c in seq_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    ranked = changelog.filter(F.col("op") != OP_UPDATE_BEFORE).withColumn(
-        "__last_op", F.last("op").over(w)
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(
-        *[F.desc(c) for c in seq_cols]
-    )
-    return (
-        ranked.filter(F.col("__last_op") != OP_DELETE)
-        .withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") == 1)
-        .drop("__last_op", "__rn", "op")
-    )
 
 
 def decode_canal(df: DataFrame, value_col: str, payload_schema: str) -> DataFrame:

@@ -16,16 +16,32 @@ reference KeyedStateBackend.java:36):
     RetractableTopNFunction.java:56 (Top-N with retractions as ranks shift).
   - ``dedup_keep_first``     ↔ StreamExecDeduplicate.java:94 keep-first
     (insert-only output; later duplicates are absorbed).
+  - ``group_agg_retract``    ↔ StreamExecGroupAggregate.java /
+    GroupAggFunction.java:140 (COUNT/SUM with -U/+U retraction pairs).
   - ``drop_update_before``   ↔ StreamExecDropUpdateBefore /
     DropUpdateBeforeFunction.java (upsert consumers don't need -U).
+  - ``materialize``          the upsert-sink fold of a collected changelog.
 
 Determinism: within a micro-batch, rows of a key are processed in
 ``seq_cols`` order (event time + id), not arrival order — so results are
 reproducible across partitionings and match the SQL oracles.
 
+State TTL (reference StateTtlConfig OnReadAndWrite, `table.exec.state.ttl`)
+is one option, not a second operator: ``dedup_keep_first``,
+``group_agg_retract`` and ``streaming_topn`` take ``ttl=(event_time_col,
+duration)``. Every row refreshes its key's last sighting; a row whose
+event-time gap since the previous sighting is strictly greater than
+``duration`` finds the state expired and resets it silently (no
+retraction). Expiry changes what is emitted, not the state size: these
+operators run under ``GroupStateTimeout.NoTimeout`` and never call
+``state.remove()``, so an expired key's state row stays in the store (a
+Top-N board is cleared only when its key gets its next row).
+``temporal_sort`` and ``cep_stream`` purge through event-time timeouts.
+
 Scale: state is partitioned by the grouping key and lives in the state
 store (RocksDB provider in production). Per-key state is O(1) rows for
-normalize / dedup and O(N) for Top-N, independent of stream length.
+normalize / dedup / group aggregation and O(N) for Top-N, independent of
+stream length.
 """
 
 from __future__ import annotations
@@ -90,25 +106,80 @@ def changelog_normalize(
     )
 
 
+def _ttl_option(
+    ttl: tuple[str, str], seq_cols: list[str] | None = None
+) -> tuple[str, int]:
+    """Unpack ``ttl=(event_time_col, duration)`` into (column,
+    microseconds). Expiry is evaluated in processing order, so an operator
+    that orders a key's rows by ``seq_cols`` needs the event-time column
+    to lead them."""
+    import pandas as pd
+
+    ts_col, duration = ttl
+    if seq_cols is not None and seq_cols[:1] != [ts_col]:
+        raise ValueError(
+            f"ttl column {ts_col!r} must be seq_cols[0], got {seq_cols}"
+        )
+    return ts_col, int(pd.Timedelta(duration).value // 1000)
+
+
+def _ttl_starts(ts, last_us, ttl_us):
+    """OnReadAndWrite expiry over one key's rows in processing order:
+    ``starts[i]`` is True where row i finds the key's state absent or
+    expired — no earlier sighting, or an event-time gap since the previous
+    sighting strictly greater than ``ttl_us``. Every row refreshes the
+    sighting; returns (starts, the last sighting in microseconds)."""
+    import pandas as pd
+
+    starts = []
+    for t in pd.to_datetime(ts).astype("int64") // 1000:
+        starts.append(last_us is None or t - last_us > ttl_us)
+        last_us = int(t)
+    return starts, last_us
+
+
 def dedup_keep_first(
-    stream: DataFrame, key_cols: list[str], seq_cols: list[str]
+    stream: DataFrame,
+    key_cols: list[str],
+    seq_cols: list[str],
+    ttl: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Event-time keep-first dedup (deterministic, unlike arrival-order
     ``dropDuplicates``): first row by ``seq_cols`` per key wins; later
-    duplicates are absorbed. Insert-only output."""
+    duplicates are absorbed. Insert-only output.
+
+    ``ttl=(event_time_col, duration)`` (reference StateTtlConfig
+    OnReadAndWrite + `table.exec.state.ttl` on StreamExecDeduplicate):
+    every sighting refreshes the key, and a row more than ``duration``
+    after the key's previous sighting re-emits as a fresh first. Closed
+    form: emit a row iff LAG(ts) IS NULL OR ts - LAG(ts) > ttl."""
     import pandas as pd
 
     schema = stream.schema
     cols = schema.fieldNames()
-    state_schema = StructType([StructField("seen", IntegerType(), True)])
+    if ttl is None:
+        state_schema = StructType([StructField("seen", IntegerType(), True)])
+    else:
+        ts_col, ttl_us = _ttl_option(ttl, seq_cols)
+        state_schema = StructType(
+            [StructField("last_seen_us", LongType(), True)]
+        )
 
     def fn(key, pdfs, state):
-        if state.exists:
+        if ttl is None and state.exists:
             return
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        first = pdf.sort_values(seq_cols, kind="mergesort").head(1)[cols]
-        state.update((1,))
-        yield first
+        pdf = pdf.sort_values(seq_cols, kind="mergesort")[cols]
+        if ttl is None:
+            state.update((1,))
+            yield pdf.head(1)
+            return
+        starts, last = _ttl_starts(
+            pdf[ts_col], state.get[0] if state.exists else None, ttl_us
+        )
+        state.update((last,))
+        if any(starts):
+            yield pdf[starts]
 
     return stream.groupBy(*key_cols).applyInPandasWithState(
         fn, schema, state_schema, "append", GroupStateTimeout.NoTimeout
@@ -120,6 +191,7 @@ def group_agg_retract(
     key_cols: list[str],
     value_col: str,
     seq_cols: list[str],
+    ttl: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Retracting streaming group aggregation (reference
     StreamExecGroupAggregate.java / GroupAggFunction.java:140: each
@@ -133,7 +205,15 @@ def group_agg_retract(
     ``seq_cols`` order within a batch, so the emitted -U/+U sequence is
     deterministic and the whole changelog gets an exact prefix-sum SQL
     oracle. State per key = (count, sum) — O(1), exactly the reference's
-    accumulator row."""
+    accumulator row.
+
+    ``ttl=(event_time_col, duration)`` (reference StateTtlConfig
+    OnReadAndWrite on StreamExecGroupAggregate): a row more than
+    ``duration`` after the key's previous sighting finds the accumulator
+    expired — reset silently, with no retraction — and re-emits as a
+    fresh +I with a restarted count. Closed form: TTL gaps split each
+    key's timeline into islands, and within an island the emissions are
+    the untimed prefix-sum sequence. State adds ``last_seen_us``."""
     import pandas as pd
 
     schema = stream.schema
@@ -146,19 +226,28 @@ def group_agg_retract(
             StructField("total", LongType(), False),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("cnt", LongType(), True),
-            StructField("total", LongType(), True),
-        ]
-    )
+    state_fields = [
+        StructField("cnt", LongType(), True),
+        StructField("total", LongType(), True),
+    ]
+    if ttl is not None:
+        ts_col, ttl_us = _ttl_option(ttl, seq_cols)
+        state_fields.append(StructField("last_seen_us", LongType(), True))
+    state_schema = StructType(state_fields)
 
     def fn(key, pdfs, state):
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values(seq_cols, kind="mergesort")[cols]
-        cnt, total = state.get if state.exists else (0, 0)
+        stored = tuple(state.get) if state.exists else (0, 0, None)
+        cnt, total = stored[:2]
+        if ttl is None:
+            starts = [False] * len(pdf)
+        else:
+            starts, last = _ttl_starts(pdf[ts_col], stored[2], ttl_us)
         out = []
-        for v in pdf[value_col]:
+        for v, start in zip(pdf[value_col], starts):
+            if start:
+                cnt, total = 0, 0  # expired: silent reset, no retraction
             old = (cnt, total)
             cnt, total = cnt + 1, total + int(v)
             if old[0] == 0:
@@ -166,76 +255,7 @@ def group_agg_retract(
             else:
                 out.append((OP_UPDATE_BEFORE, *key, *old))
                 out.append((OP_UPDATE_AFTER, *key, cnt, total))
-        state.update((cnt, total))
-        yield pd.DataFrame(
-            out, columns=["op", *key_cols, "cnt", "total"]
-        )
-
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def group_agg_retract_ttl(
-    stream: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    ts_col: str,
-    tiebreak_cols: list[str],
-    ttl: str,
-) -> DataFrame:
-    """Retracting group aggregation with state TTL (reference
-    StateTtlConfig OnReadAndWrite on StreamExecGroupAggregate /
-    `table.exec.state.ttl`): the key's accumulator refreshes on every
-    sighting; once the event-time gap since the last sighting exceeds
-    ``ttl`` the state is expired — dropped SILENTLY, with no retraction
-    (exactly Flink's TTL semantics) — and the next row re-emits as a
-    fresh +I with a restarted count.
-
-    Closed form (what makes the oracle exact): TTL gaps split each key's
-    timeline into islands (LAG(ts) IS NULL OR ts - LAG(ts) > ttl starts
-    one); within an island the emissions are the prefix-sum sequence of
-    :func:`group_agg_retract`."""
-    import pandas as pd
-
-    ttl_us = int(pd.Timedelta(ttl).value // 1000)
-    schema = stream.schema
-    cols = schema.fieldNames()
-    out_schema = StructType(
-        [
-            OP_FIELD,
-            *[schema[c] for c in key_cols],
-            StructField("cnt", LongType(), False),
-            StructField("total", LongType(), False),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cnt", LongType(), True),
-            StructField("total", LongType(), True),
-            StructField("last_seen_us", LongType(), True),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values([ts_col, *tiebreak_cols],
-                              kind="mergesort")[cols]
-        cnt, total, last = state.get if state.exists else (0, 0, None)
-        ts_us = pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-        out = []
-        for v, t in zip(pdf[value_col], ts_us):
-            if last is not None and t - last > ttl_us:
-                cnt, total = 0, 0  # silent expiry, no retraction
-            old = (cnt, total)
-            cnt, total = cnt + 1, total + int(v)
-            if old[0] == 0:
-                out.append((OP_INSERT, *key, cnt, total))
-            else:
-                out.append((OP_UPDATE_BEFORE, *key, *old))
-                out.append((OP_UPDATE_AFTER, *key, cnt, total))
-            last = int(t)  # OnReadAndWrite: every sighting refreshes
-        state.update((cnt, total, last))
+        state.update((cnt, total) if ttl is None else (cnt, total, last))
         yield pd.DataFrame(
             out, columns=["op", *key_cols, "cnt", "total"]
         )
@@ -251,6 +271,7 @@ def streaming_topn(
     order_cols: list[str],
     n: int,
     ascending: list[bool] | None = None,
+    ttl: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Streaming Top-N emitting a changelog of rank movements.
 
@@ -259,15 +280,27 @@ def streaming_topn(
     and -U/+U pairs for surviving rows whose rank moved (rank in payload).
     ``ascending`` gives per-column sort direction (default all-descending);
     pass an ascending id tiebreak for determinism.
+
+    ``ttl=(event_time_col, duration)`` (reference StateTtlConfig on
+    StreamExecRank): the batch is processed in event-time order (then the
+    other columns), and a row more than ``duration`` after the
+    partition's previous row finds the board expired — cleared silently,
+    with no retractions — and starts a fresh one. Closed form: the
+    materialized changelog is the union over TTL islands of each
+    island's final top-n. State adds ``last_us``.
     """
     import pandas as pd
 
     asc = ascending if ascending is not None else [False] * len(order_cols)
     schema = stream.schema
     cols = schema.fieldNames()
-    state_schema = StructType(
-        [StructField(f.name, ArrayType(f.dataType), True) for f in schema.fields]
-    )
+    state_fields = [
+        StructField(f.name, ArrayType(f.dataType), True) for f in schema.fields
+    ]
+    if ttl is not None:
+        ts_col, ttl_us = _ttl_option(ttl)
+        state_fields.append(StructField("last_us", LongType(), True))
+    state_schema = StructType(state_fields)
     out_schema = StructType(
         [OP_FIELD, StructField("rank", IntegerType(), False), *schema.fields]
     )
@@ -295,23 +328,40 @@ def streaming_topn(
         new = pd.concat(list(pdfs), ignore_index=True)[cols]
         if state.exists:
             stored = state.get
-            old = pd.DataFrame({c: list(stored[i]) for i, c in enumerate(cols)})
+            board = pd.DataFrame({c: list(stored[i]) for i, c in enumerate(cols)})
         else:
-            old = pd.DataFrame({c: pd.Series(dtype=new[c].dtype) for c in cols})
-        ranked = rank(pd.concat([old, new], ignore_index=True))
-        state.update(tuple(list(ranked[c]) for c in cols))
-        old_ranks = keyed(rank(old)) if len(old) else {}
-        new_ranks = keyed(ranked)
+            stored = None
+            board = pd.DataFrame({c: pd.Series(dtype=new[c].dtype) for c in cols})
+        if ttl is None:
+            starts = [False] * len(new)
+        else:
+            new = new.sort_values(
+                [ts_col, *[c for c in cols if c != ts_col]], kind="mergesort"
+            ).reset_index(drop=True)
+            starts, last = _ttl_starts(
+                new[ts_col], stored[len(cols)] if stored else None, ttl_us
+            )
+        # one segment per TTL island (the whole batch when untimed)
+        bounds = sorted({0, len(new), *(i for i, s in enumerate(starts) if s)})
         out = []
-        for (row, _occ), rk in old_ranks.items():
-            if (row, _occ) not in new_ranks:
-                out.append((OP_DELETE, rk, *row))
-        for (row, _occ), rk in new_ranks.items():
-            if (row, _occ) not in old_ranks:
-                out.append((OP_INSERT, rk, *row))
-            elif old_ranks[(row, _occ)] != rk:
-                out.append((OP_UPDATE_BEFORE, old_ranks[(row, _occ)], *row))
-                out.append((OP_UPDATE_AFTER, rk, *row))
+        for lo, hi in zip(bounds, bounds[1:]):
+            if starts[lo]:
+                board = board.iloc[0:0]  # expired: cleared, no retractions
+            ranked = rank(pd.concat([board, new.iloc[lo:hi]], ignore_index=True))
+            old_ranks = keyed(rank(board)) if len(board) else {}
+            new_ranks = keyed(ranked)
+            for (row, occ), rk in old_ranks.items():
+                if (row, occ) not in new_ranks:
+                    out.append((OP_DELETE, rk, *row))
+            for (row, occ), rk in new_ranks.items():
+                if (row, occ) not in old_ranks:
+                    out.append((OP_INSERT, rk, *row))
+                elif old_ranks[(row, occ)] != rk:
+                    out.append((OP_UPDATE_BEFORE, old_ranks[(row, occ)], *row))
+                    out.append((OP_UPDATE_AFTER, rk, *row))
+            board = ranked
+        board_state = tuple(list(board[c]) for c in cols)
+        state.update(board_state if ttl is None else (*board_state, last))
         yield pd.DataFrame(out, columns=["op", "rank", *cols])
 
     return stream.groupBy(*partition_cols).applyInPandasWithState(
@@ -325,175 +375,24 @@ def drop_update_before(changelog: DataFrame) -> DataFrame:
 
 
 def materialize(changelog: DataFrame, key_cols: list[str], seq_cols: list[str]) -> DataFrame:
-    """Batch-fold a collected changelog back to a table: the latest +I/+U
-    version (by ``seq_cols``) per key wins. (Test/sink helper — the
-    foreachBatch MERGE upsert sink applies the same fold per batch.)"""
+    """Batch-fold a collected changelog back to a table — what the
+    foreachBatch MERGE upsert sink leaves: per key, the last +I/+U by
+    ``seq_cols`` wins, unless the key's last row is a -D (then the key is
+    absent). -U rows are ignored."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in seq_cols])
+    w = (
+        Window.partitionBy(*key_cols)
+        .orderBy(*[F.col(c) for c in seq_cols])
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    ranked = drop_update_before(changelog).withColumn(
+        "__last_op", F.last("op").over(w)
+    )
+    w2 = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in seq_cols])
     return (
-        drop_update_before(changelog)
-        .filter(F.col("op") != OP_DELETE)
-        .withColumn("__rn", F.row_number().over(w))
+        ranked.filter(F.col("__last_op") != OP_DELETE)
+        .withColumn("__rn", F.row_number().over(w2))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "op")
-    )
-
-
-def dedup_keep_first_ttl(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    tiebreak_cols: list[str],
-    ttl: str,
-) -> DataFrame:
-    """Keep-first dedup with state TTL (reference StateTtlConfig
-    OnReadAndWrite + `table.exec.state.ttl` on StreamExecDeduplicate):
-    the key's state refreshes on every sighting, and once the event-time
-    gap since the last sighting exceeds ``ttl`` the state is considered
-    expired — the next row re-emits as a fresh "first".
-
-    Equivalent closed form (what makes the oracle exact): emit a row iff
-    it has no predecessor for the key within ``ttl``
-    (LAG(ts) IS NULL OR ts - LAG(ts) > ttl)."""
-    import pandas as pd
-
-    ttl_us = int(pd.Timedelta(ttl).value // 1000)
-    schema = stream.schema
-    cols = schema.fieldNames()
-    state_schema = StructType([StructField("last_seen_us", LongType(), True)])
-
-    def fn(key, pdfs, state):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values([ts_col, *tiebreak_cols], kind="mergesort")[cols]
-        last = state.get[0] if state.exists else None
-        keep = []
-        ts_us = pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
-        for i, t in enumerate(ts_us):
-            if last is None or t - last > ttl_us:
-                keep.append(i)
-            last = int(t)  # OnReadAndWrite: every sighting refreshes
-        state.update((last,))
-        if keep:
-            yield pdf.iloc[keep]
-
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        fn, schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_topn_ttl(
-    stream: DataFrame,
-    partition_cols: list[str],
-    order_cols: list[str],
-    n: int,
-    ts_col: str,
-    ttl: str,
-    ascending: list[bool] | None = None,
-) -> DataFrame:
-    """Streaming Top-N with state TTL (reference StateTtlConfig on
-    StreamExecRank / `table.exec.state.ttl`): a partition whose event-time
-    quiet gap exceeds ``ttl`` has its leaderboard state dropped — silently,
-    with no retractions, exactly Flink's TTL semantics — and the next row
-    starts a fresh board.
-
-    Closed form (what makes the oracle exact): TTL gaps split each
-    partition's timeline into islands; the materialized fold of the
-    changelog is the union over islands of each island's final top-n
-    (expired boards were emitted and never retracted).
-
-    Rows are processed in event-time order inside each batch, so expiry
-    is arrival-schedule-independent; state per key is the board (≤ n
-    rows) plus one timestamp."""
-    import pandas as pd
-
-    asc = ascending if ascending is not None else [False] * len(order_cols)
-    ttl_us = int(pd.Timedelta(ttl).value // 1000)
-    schema = stream.schema
-    cols = schema.fieldNames()
-    state_schema = StructType(
-        [StructField(f.name, ArrayType(f.dataType), True) for f in schema.fields]
-        + [StructField("last_us", LongType(), True)]
-    )
-    out_schema = StructType(
-        [OP_FIELD, StructField("rank", IntegerType(), False), *schema.fields]
-    )
-
-    def rank(pdf):
-        return (
-            pdf.sort_values(order_cols, ascending=asc, kind="mergesort")
-            .head(n)
-            .reset_index(drop=True)
-        )
-
-    def keyed(pdf):
-        counts: dict = {}
-        out = {}
-        for i, r in enumerate(pdf.itertuples(index=False, name=None)):
-            occ = counts.get(r, 0)
-            counts[r] = occ + 1
-            out[(r, occ)] = i + 1
-        return out
-
-    def diffs(old, new):
-        old_ranks = keyed(old) if len(old) else {}
-        new_ranks = keyed(new)
-        out = []
-        for (row, occ), rk in old_ranks.items():
-            if (row, occ) not in new_ranks:
-                out.append((OP_DELETE, rk, *row))
-        for (row, occ), rk in new_ranks.items():
-            if (row, occ) not in old_ranks:
-                out.append((OP_INSERT, rk, *row))
-            elif old_ranks[(row, occ)] != rk:
-                out.append((OP_UPDATE_BEFORE, old_ranks[(row, occ)], *row))
-                out.append((OP_UPDATE_AFTER, rk, *row))
-        return out
-
-    def fn(key, pdfs, state):
-        new = pd.concat(list(pdfs), ignore_index=True)[cols]
-        new = new.sort_values(
-            [ts_col, *[c for c in cols if c != ts_col]], kind="mergesort"
-        ).reset_index(drop=True)
-        if state.exists:
-            stored = state.get
-            board = pd.DataFrame(
-                {c: list(stored[i]) for i, c in enumerate(cols)}
-            )
-            last_us = stored[len(cols)]
-        else:
-            board = pd.DataFrame(
-                {c: pd.Series(dtype=new[c].dtype) for c in cols}
-            )
-            last_us = None
-        ts_us = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        # split the batch at TTL gaps (vs the running last-activity time)
-        breaks = [0]
-        prev = last_us
-        for i, t in enumerate(ts_us):
-            if prev is not None and t - prev > ttl_us:
-                breaks.append(i)
-            prev = int(t)
-        breaks.append(len(new))
-        out = []
-        for bi in range(len(breaks) - 1):
-            lo, hi = breaks[bi], breaks[bi + 1]
-            if lo == hi:
-                continue
-            seg = new.iloc[lo:hi]
-            # any segment after the first begins at a TTL gap (a gap on
-            # the very first row shows up as a duplicate break at 0,
-            # making the pre-gap segment empty and skipped above)
-            if bi > 0:
-                board = board.iloc[0:0]  # TTL drop: no retractions
-            merged = rank(pd.concat([board, seg], ignore_index=True))
-            out.extend(diffs(rank(board) if len(board) else board, merged))
-            board = merged
-        if len(ts_us):
-            last_us = int(ts_us.iloc[-1])
-        state.update(tuple(list(board[c]) for c in cols) + (last_us,))
-        yield pd.DataFrame(out, columns=["op", "rank", *cols])
-
-    return stream.groupBy(*partition_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        .drop("__last_op", "__rn", "op")
     )

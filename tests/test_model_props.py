@@ -561,10 +561,11 @@ _CDC_OPS = st.lists(
                                           "ogg"]))
 def test_cdc_envelopes_match_state_model(spark, ops, fmt):
     """Random change sequences encoded as each CDC envelope format,
-    decoded, and folded with materialize_upserts == a python dict
+    decoded, and folded with changelog.materialize == a python dict
     replay of the same sequence (the four decoders must agree on
     RowKind emission for the fold to land on the same final state)."""
     from flink_spark.streaming import cdc
+    from flink_spark.streaming.changelog import materialize
 
     # build envelopes + the reference state by replaying the ops
     state: dict[int, int] = {}
@@ -614,7 +615,7 @@ def test_cdc_envelopes_match_state_model(spark, ops, fmt):
     decode = {"debezium": cdc.decode_debezium, "canal": cdc.decode_canal,
               "maxwell": cdc.decode_maxwell, "ogg": cdc.decode_ogg}[fmt]
     changelog = decode(df, "value", "k int, v int, seq long")
-    final = cdc.materialize_upserts(changelog, ["k"], ["seq"])
+    final = materialize(changelog, ["k"], ["seq"])
     got = {r.k: r.v for r in final.collect()}
     assert got == state, (fmt, ops, got, state)
 
@@ -926,26 +927,49 @@ def test_streaming_topn_changelog_net_state_matches_batch(spark, tmp_path):
     """streaming_topn's rank-movement changelog, net-applied, lands on
     the batch Top-N: per emitted row, #(+I) − #(−D) ∈ {0,1}, and the
     net survivors equal the batch top-n multiset — across profiles
-    with ties, displacement chains, and per-key partitions."""
+    with ties, displacement chains, and per-key partitions. With
+    ``ttl``, the survivors are the union over TTL islands of each
+    island's top-n: a partition's rows, in (batch, per-batch ts) order,
+    split where the gap since the previous row is > ttl (expired boards
+    are never retracted; a gap of exactly ttl does not expire)."""
     from flink_spark.streaming import changelog as CL
 
     profiles = [
-        [[("g", 10, 1)], [("g", 20, 2)], [("g", 30, 3)]],     # displace
-        [[("g", 10, 1), ("g", 10, 2)], [("g", 10, 3)]],       # ties
-        [[("a", 5, 1), ("b", 7, 2)], [("a", 9, 3), ("b", 1, 4)]],
-        [[("g", 3, 1), ("g", 2, 2), ("g", 1, 3)], [("g", 0, 4)]],
+        # chunks of (g, score, rid, minute), ttl in minutes or None
+        ([[("g", 10, 1, 1)], [("g", 20, 2, 2)], [("g", 30, 3, 3)]],
+         None),                                               # displace
+        ([[("g", 10, 1, 1), ("g", 10, 2, 2)], [("g", 10, 3, 3)]],
+         None),                                               # ties
+        ([[("a", 5, 1, 1), ("b", 7, 2, 2)], [("a", 9, 3, 3), ("b", 1, 4, 4)]],
+         None),
+        ([[("g", 3, 1, 1), ("g", 2, 2, 2), ("g", 1, 3, 3)], [("g", 0, 4, 4)]],
+         None),
+        # TTL gap across a batch boundary
+        ([[("g", 10, 1, 0), ("g", 20, 2, 1), ("g", 30, 3, 2)],
+          [("g", 5, 4, 20), ("g", 1, 5, 21)]], 10),
+        # TTL gap inside one batch; h's 9-minute gaps never expire
+        ([[("g", 10, 1, 0), ("g", 20, 2, 1), ("g", 5, 3, 15),
+           ("g", 7, 4, 16), ("h", 1, 5, 0), ("h", 2, 6, 9),
+           ("h", 3, 7, 18)], [("g", 8, 8, 20)]], 10),
+        # gaps of exactly ttl: one island, 10 is displaced with a -D
+        ([[("g", 10, 1, 0)], [("g", 20, 2, 10), ("g", 30, 3, 20)]], 10),
     ]
     n = 2
-    for case, chunks in enumerate(profiles):
-        d = _land_chunks(spark, tmp_path, f"tn{case}", chunks,
-                         "g string, score long, rid long")
+    schema = "g string, score long, rid long, ts timestamp"
+    for case, (chunks, ttl) in enumerate(profiles):
+        d = _land_chunks(
+            spark, tmp_path, f"tn{case}",
+            [[(g, s_, rid, _mins(m)) for g, s_, rid, m in c] for c in chunks],
+            schema,
+        )
         stream = (
-            spark.readStream.schema("g string, score long, rid long")
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(str(d))
         )
         out = CL.streaming_topn(
             stream, ["g"], ["score", "rid"], n,
             ascending=[False, True],
+            ttl=None if ttl is None else ("ts", f"{ttl} minutes"),
         )
         rows = _drain_to(spark, out, tmp_path / f"tns{case}",
                          tmp_path / f"tnc{case}").collect()
@@ -958,15 +982,20 @@ def test_streaming_topn_changelog_net_state_matches_batch(spark, tmp_path):
                 net[t] = net.get(t, 0) - 1
         assert all(v in (0, 1) for v in net.values()), (case, net)
         survivors = sorted(t for t, v in net.items() if v == 1)
-        # batch model: per group, top-n by (-score, rid)
-        allrows = [r for c in chunks for r in c]
-        exp = []
-        groups: dict = {}
-        for g, s, rid in allrows:
-            groups.setdefault(g, []).append((s, rid))
-        for g, lst in groups.items():
-            top = sorted(lst, key=lambda t: (-t[0], t[1]))[:n]
-            exp.extend((g, s, rid) for s, rid in top)
+        # model: per group, split into TTL islands, top-n by (-score, rid)
+        islands: dict = {}
+        last: dict = {}
+        for batch in chunks:
+            for g, s_, rid, m in sorted(batch, key=lambda r: (r[3], *r[:3])):
+                if g not in last or (ttl is not None and m - last[g] > ttl):
+                    islands.setdefault(g, []).append([])
+                islands[g][-1].append((s_, rid))
+                last[g] = m
+        exp = [
+            (g, s_, rid)
+            for g, isl in islands.items() for lst in isl
+            for s_, rid in sorted(lst, key=lambda t: (-t[0], t[1]))[:n]
+        ]
         assert survivors == sorted(exp), (case, survivors, sorted(exp))
 
 
@@ -974,38 +1003,53 @@ def test_dedup_keep_first_matches_arrival_model(spark, tmp_path):
     """dedup_keep_first == the arrival model: the FIRST batch containing
     a key contributes its seq-min row; later batches are absorbed even
     when they carry an earlier seq (state already holds the winner) —
-    the documented event-time-within-arrival contract."""
+    the documented event-time-within-arrival contract. With ``ttl``,
+    every row refreshes the key and a row more than ttl after the key's
+    previous row re-emits (a gap of exactly ttl does not)."""
     from flink_spark.streaming import changelog as CL
 
     profiles = [
-        [[(1, 3, "a"), (1, 1, "b")], [(1, 0, "late")]],
-        [[(1, 2, "a")], [(2, 9, "b"), (2, 1, "c")], [(1, 1, "d")]],
-        [[(1, 1, "x"), (2, 2, "y"), (1, 0, "z")]],
+        # chunks of (k, minute, v), ttl in minutes or None
+        ([[(1, 3, "a"), (1, 1, "b")], [(1, 0, "late")]], None),
+        ([[(1, 2, "a")], [(2, 9, "b"), (2, 1, "c")], [(1, 1, "d")]], None),
+        ([[(1, 1, "x"), (2, 2, "y"), (1, 0, "z")]], None),
+        # TTL gap across a batch boundary
+        ([[(1, 0, "a"), (1, 5, "b")], [(1, 20, "c"), (1, 25, "d")]], 10),
+        # TTL gap inside one batch
+        ([[(1, 0, "a"), (1, 11, "b"), (1, 12, "c"), (2, 3, "x")]], 10),
+        # a gap of exactly ttl does not expire
+        ([[(1, 0, "a")], [(1, 10, "b"), (1, 21, "c")]], 10),
     ]
-    for case, chunks in enumerate(profiles):
-        d = _land_chunks(spark, tmp_path, f"df{case}", chunks,
-                         "k int, seq int, v string")
+    schema = "k int, ts timestamp, v string"
+    for case, (chunks, ttl) in enumerate(profiles):
+        d = _land_chunks(
+            spark, tmp_path, f"df{case}",
+            [[(k, _mins(m), v) for k, m, v in c] for c in chunks], schema,
+        )
         stream = (
-            spark.readStream.schema("k int, seq int, v string")
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(str(d))
         )
-        out = CL.dedup_keep_first(stream, ["k"], ["seq"])
+        out = CL.dedup_keep_first(
+            stream, ["k"], ["ts"],
+            ttl=None if ttl is None else ("ts", f"{ttl} minutes"),
+        )
         got = sorted(
             map(tuple, _drain_to(
                 spark, out, tmp_path / f"dfs{case}",
                 tmp_path / f"dfc{case}").collect())
         )
-        exp = {}
+        exp = []
+        last: dict = {}
         for batch in chunks:
-            batch_keys: dict = {}
-            for k, seq, v in batch:
-                if k in exp:
-                    continue
-                cur = batch_keys.get(k)
-                if cur is None or (seq, v) < (cur[1], cur[2]):
-                    batch_keys[k] = (k, seq, v)
-            exp.update(batch_keys)
-        assert got == sorted(exp.values()), (case, got)
+            for k, m, v in sorted(batch, key=lambda r: r[1]):
+                if k not in last or (ttl is not None and m - last[k] > ttl):
+                    exp.append((k, _mins(m), v))
+                last[k] = m
+        assert got == sorted(exp), (case, got, sorted(exp))
+    with pytest.raises(ValueError, match="seq_cols"):
+        CL.dedup_keep_first(stream, ["k"], ["v", "ts"],
+                            ttl=("ts", "10 minutes"))
 
 
 # --- ML_PREDICT == numpy model (r12, audit sev-1) --------------------------------
@@ -1064,22 +1108,37 @@ def test_group_agg_retract_matches_replay_model(spark, tmp_path):
     """group_agg_retract == the accumulator replay: per key, rows in
     (batch order, per-batch seq order) emit +I(first) then
     -U(old agg)/+U(new agg) per update, with (count, sum) chaining
-    across batches."""
+    across batches. With ``ttl``, a row more than ttl after the key's
+    previous row resets the accumulator silently and re-emits +I (a
+    gap of exactly ttl does not)."""
     from flink_spark.streaming import changelog as CL
 
     profiles = [
-        [[(1, 1, 10)], [(1, 2, 5)], [(1, 3, -2)]],
-        [[(1, 2, 4), (1, 1, 6), (2, 1, 1)], [(2, 2, 3), (1, 3, 0)]],
-        [[(1, 1, 7), (2, 1, 8), (1, 2, 9)]],
+        # chunks of (k, minute, v), ttl in minutes or None
+        ([[(1, 1, 10)], [(1, 2, 5)], [(1, 3, -2)]], None),
+        ([[(1, 2, 4), (1, 1, 6), (2, 1, 1)], [(2, 2, 3), (1, 3, 0)]], None),
+        ([[(1, 1, 7), (2, 1, 8), (1, 2, 9)]], None),
+        # TTL gap across a batch boundary
+        ([[(1, 0, 10), (1, 5, 5)], [(1, 20, 3), (1, 25, 1)]], 10),
+        # TTL gap inside one batch
+        ([[(1, 0, 4), (1, 11, 6), (1, 12, 1), (2, 3, 2)]], 10),
+        # a gap of exactly ttl does not expire
+        ([[(1, 0, 7)], [(1, 10, 8), (1, 21, 9)]], 10),
     ]
-    for case, chunks in enumerate(profiles):
-        d = _land_chunks(spark, tmp_path, f"gar{case}", chunks,
-                         "k int, seq int, v long")
+    schema = "k int, ts timestamp, v long"
+    for case, (chunks, ttl) in enumerate(profiles):
+        d = _land_chunks(
+            spark, tmp_path, f"gar{case}",
+            [[(k, _mins(m), v) for k, m, v in c] for c in chunks], schema,
+        )
         stream = (
-            spark.readStream.schema("k int, seq int, v long")
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(str(d))
         )
-        out = CL.group_agg_retract(stream, ["k"], "v", ["seq"])
+        out = CL.group_agg_retract(
+            stream, ["k"], "v", ["ts"],
+            ttl=None if ttl is None else ("ts", f"{ttl} minutes"),
+        )
         got = sorted(
             map(tuple, _drain_to(
                 spark, out, tmp_path / f"gars{case}",
@@ -1088,15 +1147,20 @@ def test_group_agg_retract_matches_replay_model(spark, tmp_path):
         exp = []
         state: dict = {}
         for batch in chunks:
-            for k, seq, v in sorted(batch, key=lambda r: r[1]):
-                cnt, total = state.get(k, (0, 0))
+            for k, m, v in sorted(batch, key=lambda r: r[1]):
+                cnt, total, last = state.get(k, (0, 0, None))
+                if ttl is not None and last is not None and m - last > ttl:
+                    cnt, total = 0, 0
                 if cnt:
                     exp.append((CL.OP_UPDATE_BEFORE, k, cnt, total))
                     exp.append((CL.OP_UPDATE_AFTER, k, cnt + 1, total + v))
                 else:
                     exp.append((CL.OP_INSERT, k, 1, v))
-                state[k] = (cnt + 1, total + v)
+                state[k] = (cnt + 1, total + v, m)
         assert got == sorted(exp), (case, got, sorted(exp))
+    with pytest.raises(ValueError, match="seq_cols"):
+        CL.group_agg_retract(stream, ["k"], "v", ["v", "ts"],
+                             ttl=("ts", "10 minutes"))
 
 
 def test_streaming_over_rows_matches_prefix_model(spark, tmp_path):

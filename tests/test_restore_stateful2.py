@@ -340,13 +340,17 @@ def test_restore_stream_interval_join(spark, sf_dir, tmp_path):
     assert cross > 0
 
 
-def test_restore_group_agg_retract(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "ttl", [None, ("ts", "12 hours")], ids=["untimed", "ttl"]
+)
+def test_restore_group_agg_retract(spark, sf_dir, tmp_path, ttl):
     """Retracting group aggregation (reference
     restore-tests/stream-exec-group-aggregate; GroupAggFunction state =
     the per-key accumulator row): the first run-2 row of a key seen in
     run 1 must emit -U of the RUN-1 aggregate value — a lost accumulator
     would restart the count at +I(1). The combined two-run retraction
-    sequence equals the uninterrupted run exactly."""
+    sequence equals the uninterrupted run exactly — with ``ttl`` too,
+    whose state row also carries the key's last sighting."""
     src = tmp_path / "src"
     src.mkdir()
     ev = (
@@ -364,7 +368,7 @@ def test_restore_group_agg_retract(spark, sf_dir, tmp_path):
     def run(sink, ckpt):
         stream = spark.readStream.schema(schema).parquet(str(src))
         out = CL.group_agg_retract(
-            stream, ["event_type"], "cents", ["ts", "event_id"]
+            stream, ["event_type"], "cents", ["ts", "event_id"], ttl=ttl
         )
         _drain(out, sink, ckpt)
 
@@ -381,6 +385,8 @@ def test_restore_group_agg_retract(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, solid.collect())
     )
+    if ttl is not None:
+        return  # TTL expiry legitimately re-inserts
     # every key appears in both halves (5 event types x thousands of
     # rows), so each key must emit exactly ONE +I across the restart —
     # a lost accumulator re-inserts at the run boundary; and the run-2

@@ -599,3 +599,52 @@ def test_append_write_scan_flags_each_spelling(tmp_path):
     assert _append_writes(str(tmp_path)) == [
         ("op.py", 4), ("op.py", 5), ("op.py", 6),
     ]
+
+
+def _ttl_twins(root):
+    """(module, name) of each public ``<name>_ttl`` function defined at
+    module level next to a public ``<name>``: state TTL is an option on
+    one operator, not a second copy of it."""
+    import ast
+
+    twins = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            names = {
+                node.name for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not node.name.startswith("_")
+            }
+            twins += [(rel, n) for n in names
+                      if n.endswith("_ttl") and n[:-len("_ttl")] in names]
+    return sorted(twins)
+
+
+def test_streaming_operators_have_no_ttl_twins():
+    """No module under flink_spark/streaming/ forks an operator into a
+    ``<name>_ttl`` copy; TTL is a ``ttl=`` option on ``<name>``."""
+    import flink_spark.streaming
+
+    assert _ttl_twins(os.path.dirname(flink_spark.streaming.__file__)) == []
+
+
+def test_ttl_twin_scan_flags_a_twin(tmp_path):
+    """The scan sees a public ``<name>_ttl`` beside ``<name>``, and not a
+    private pair, a lone ``_ttl`` function, or a method."""
+    (tmp_path / "op.py").write_text(
+        "def op(df):\n    return df\n"
+        "def op_ttl(df, ttl):\n    return df\n"
+        "def _p(df):\n    return df\n"
+        "def _p_ttl(df):\n    return df\n"
+        "def lone_ttl(df):\n    return df\n"
+        "class C:\n"
+        "    def m(self):\n        pass\n"
+        "    def m_ttl(self):\n        pass\n"
+    )
+    assert _ttl_twins(str(tmp_path)) == [("op.py", "op_ttl")]

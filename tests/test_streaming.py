@@ -164,6 +164,18 @@ def test_materialize_folds_changelog(spark, tmp_path):
         (r.k, r.val) for r in CL.materialize(cl, ["k"], ["seq"]).collect()
     }
     assert final == {(1, 20), (2, 5)}
+    # a -D after the key's last +I removes it, as the upsert sink's MERGE
+    # would; -U rows never count as a version
+    deleted = cl.unionByName(
+        spark.createDataFrame(
+            [(CL.OP_DELETE, 2, 2, 5)], "op string, k long, seq long, val long"
+        )
+    )
+    final = {
+        (r.k, r.val)
+        for r in CL.materialize(deleted, ["k"], ["seq"]).collect()
+    }
+    assert final == {(1, 20)}
 
 
 def test_datagen_and_blackhole(spark):
@@ -330,12 +342,10 @@ def test_cdc_decimal_payload_schema(spark):
 
 
 def test_streaming_topn_ttl_islands(spark):
-    """TTL expiry drops the board without retractions: two activity
+    """TTL expiry clears the board without retractions: two activity
     islands separated by a > ttl quiet gap each keep their own final
     top-2; rank movements inside an island still retract."""
     import pandas as pd
-
-    from flink_spark.streaming.changelog import streaming_topn_ttl
 
     rows = [
         # island 1 (t=0..2min): values 5, 9, 7 → final top2 = 9, 7
@@ -361,9 +371,9 @@ def test_streaming_topn_ttl_islands(spark):
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    cl = streaming_topn_ttl(
-        src, ["k"], ["value", "event_id"], n=2, ts_col="ts", ttl="1 hour",
-        ascending=[False, True],
+    cl = CL.streaming_topn(
+        src, ["k"], ["value", "event_id"], n=2, ascending=[False, True],
+        ttl=("ts", "1 hour"),
     )
     from flink_spark.streaming.core import run_to_memory
 
