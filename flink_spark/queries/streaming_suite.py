@@ -341,9 +341,7 @@ def stream_group_agg_retract_ttl(spark, sf_dir):
     prefix-sum emission sequence per island — exact, like the dedup and
     Top-N TTL queries. Input arrives over three ts-ordered micro-batches,
     so accumulators and expiry cross batch boundaries."""
-    from flink_spark.streaming.core import chunked_table_stream
-
-    ev = chunked_table_stream(spark, sf_dir, "events", 3, "ts").filter(
+    ev = stream_table(spark, sf_dir, "events", n_chunks=3, order="ts").filter(
         F.col("user_id") <= 50
     ).select(
         "user_id",
@@ -533,10 +531,10 @@ def stream_late_side_output(spark, sf_dir):
     batch start (max prior event time − 10 min) land on the late channel.
     The oracle reproduces the exact chunk assignment (same md5 order,
     same ¼ splits) and the per-chunk running-max watermark in SQL."""
-    from flink_spark.streaming.core import chunked_table_stream, side_output_late
+    from flink_spark.streaming.core import side_output_late
 
-    ev = chunked_table_stream(
-        spark, sf_dir, "events", 4, "event_id", order_hash=True
+    ev = stream_table(
+        spark, sf_dir, "events", n_chunks=4, order="event_id", order_hash=True
     ).select("user_id", "event_id", "ts")
     _on_time, late = side_output_late(ev, "ts", "10 minutes")
     return late.select("user_id", "event_id", "ts")
@@ -1201,9 +1199,7 @@ def stream_dedup_first_ttl(spark, sf_dir):
     the next event re-emits as a fresh first. Input arrives over three
     ts-ordered micro-batches, so the state and expiry cross batch
     boundaries."""
-    from flink_spark.streaming.core import chunked_table_stream
-
-    ev = chunked_table_stream(spark, sf_dir, "events", 3, "ts").filter(
+    ev = stream_table(spark, sf_dir, "events", n_chunks=3, order="ts").filter(
         F.col("user_id") <= 100
     ).select("event_id", "ts", "user_id", "value")
     out = CL.dedup_keep_first(
@@ -1478,13 +1474,12 @@ def stream_delta_join(spark, sf_dir):
     over two micro-batches here to prove the cross-batch algebra. Store
     tables are key-hash-bucket partitioned (the parquet analog of the
     reference's source-index lookup)."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import delta_join, tag_union
 
-    o = chunked_table_stream(spark, sf_dir, "orders", 2, "o_orderkey").filter(
+    o = stream_table(spark, sf_dir, "orders", n_chunks=2, order="o_orderkey").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    li = chunked_table_stream(spark, sf_dir, "lineitem", 2, "l_orderkey").filter(
+    li = stream_table(spark, sf_dir, "lineitem", n_chunks=2, order="l_orderkey").filter(
         F.col("l_quantity") > 40
     )
     left_cols = ["o_orderkey", "o_custkey", "o_orderpriority"]
@@ -1528,10 +1523,8 @@ def stream_topn_ttl(spark, sf_dir):
     exactly that closed form (gap → island → per-island ROW_NUMBER);
     input arrives over three micro-batches so boards and expiry cross
     batch boundaries."""
-    from flink_spark.streaming.core import chunked_table_stream
-
     ev = (
-        chunked_table_stream(spark, sf_dir, "events", 3, "ts")
+        stream_table(spark, sf_dir, "events", n_chunks=3, order="ts")
         .filter(F.col("user_id") <= 20)
         .select("event_type", "event_id", "value", "ts")
     )
@@ -1577,12 +1570,11 @@ def stream_delta_join_ttl(spark, sf_dir):
     the joinable pairs are exactly the |Δts| ≤ ttl interval band, which
     is the exact oracle here (clicks × purchases per user within 1h,
     streamed over three micro-batches each side)."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import delta_join, tag_union
 
-    base = lambda: chunked_table_stream(spark, sf_dir, "events", 3, "ts").filter(
-        F.col("user_id") <= 100
-    )
+    base = lambda: stream_table(
+        spark, sf_dir, "events", n_chunks=3, order="ts"
+    ).filter(F.col("user_id") <= 100)
     clicks = base().filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -1629,18 +1621,17 @@ def stream_delta_join_left(spark, sf_dir):
     emitted. The right side streams in l_extendedprice order (uncorrelated
     with the join key) so retractions genuinely cross batch boundaries;
     the materialized net changelog must equal the batch LEFT JOIN."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import (
         apply_changelog,
         delta_join,
         tag_union,
     )
 
-    o = chunked_table_stream(spark, sf_dir, "orders", 2, "o_orderkey").filter(
+    o = stream_table(spark, sf_dir, "orders", n_chunks=2, order="o_orderkey").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    li = chunked_table_stream(
-        spark, sf_dir, "lineitem", 2, "l_extendedprice"
+    li = stream_table(
+        spark, sf_dir, "lineitem", n_chunks=2, order="l_extendedprice"
     ).filter(F.col("l_quantity") > 49)
     lc = ["o_orderkey", "o_custkey"]
     rc = ["l_orderkey", "l_linenumber", "l_quantity"]
@@ -1672,17 +1663,16 @@ def stream_delta_join_full(spark, sf_dir):
     changelog equals the batch FULL JOIN exactly (BUILDING customers
     without urgent orders and urgent orders of non-BUILDING customers
     both survive as null-padded rows)."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.deltajoin import (
         apply_changelog,
         delta_join,
         tag_union,
     )
 
-    c = chunked_table_stream(spark, sf_dir, "customer", 2, "c_name").filter(
+    c = stream_table(spark, sf_dir, "customer", n_chunks=2, order="c_name").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = chunked_table_stream(spark, sf_dir, "orders", 3, "o_totalprice").filter(
+    o = stream_table(spark, sf_dir, "orders", n_chunks=3, order="o_totalprice").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     lc = ["c_custkey", "c_name"]
@@ -1812,12 +1802,9 @@ def stream_current_watermark(spark, sf_dir):
     so the exact oracle reconstructs each batch's watermark as the
     ms-truncated max event time of all prior batches minus the 1-minute
     delay (epoch 1970 before the first watermark)."""
-    from flink_spark.streaming.core import (
-        chunked_table_stream,
-        with_current_watermark,
-    )
+    from flink_spark.streaming.core import with_current_watermark
 
-    ev = chunked_table_stream(spark, sf_dir, "events", 3, "ts")
+    ev = stream_table(spark, sf_dir, "events", n_chunks=3, order="ts")
     ev = ev.select("event_id", "user_id", "ts").withColumn(
         "ts", F.col("ts").cast("timestamp")
     ).withWatermark("ts", "1 minute")
@@ -1903,7 +1890,6 @@ def stream_state_reader(spark, sf_dir):
     import shutil
     import tempfile
 
-    from flink_spark.streaming.core import stream_table
     from flink_spark.streaming.state_reader import read_keyed_state
     from flink_spark.streaming.storeutil import drain_conf
 
@@ -2020,12 +2006,11 @@ def stream_watermark_alignment(spark, sf_dir):
     the invariant triple, same discipline as the ANN recall gates; the
     exact per-round semantics are pinned by the hand-computed trace in
     tests/test_streaming.py."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.idleness import aligned_union_trace
 
     ev = (
-        chunked_table_stream(spark, sf_dir, "events", 4, "event_id",
-                             order_hash=True)
+        stream_table(spark, sf_dir, "events", n_chunks=4, order="event_id",
+                     order_hash=True)
         .filter(F.col("user_id") <= 150)
         .select(
             F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("src"),
@@ -2219,10 +2204,9 @@ def stream_minhash_neardup(spark, sf_dir):
     semantics close to 'D survives iff no smaller-id doc is band-matched
     and >=16/32-signature-verified against D', which the oracle states
     directly — the result is invariant to the micro-batch partitioning."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.neardup_stream import minhash_neardup_stream
 
-    docs = chunked_table_stream(spark, sf_dir, "documents", 3, "doc_id")
+    docs = stream_table(spark, sf_dir, "documents", n_chunks=3, order="doc_id")
     out = minhash_neardup_stream(docs)
     return out.select("doc_id", "lang", "source", "n_chars")
 
@@ -2247,9 +2231,8 @@ def stream_ivf_ingest(spark, sf_dir):
     batch-0 Lloyd's and probe into DuckDB CTEs."""
     from flink_spark.sources.tables import load_table as _lt
     from flink_spark.streaming.ann_stream import ivf_ingest_stream
-    from flink_spark.streaming.core import chunked_table_stream
 
-    emb = chunked_table_stream(spark, sf_dir, "embeddings", 3, "vec_id")
+    emb = stream_table(spark, sf_dir, "embeddings", n_chunks=3, order="vec_id")
     idx = ivf_ingest_stream(emb.filter(F.col("vec_id") >= 10))
     q = _lt(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2279,9 +2262,8 @@ def stream_pq_ingest(spark, sf_dir):
     slice)."""
     from flink_spark.sources.tables import load_table as _lt
     from flink_spark.streaming.ann_stream import pq_ingest_stream
-    from flink_spark.streaming.core import chunked_table_stream
 
-    emb = chunked_table_stream(spark, sf_dir, "embeddings", 3, "vec_id")
+    emb = stream_table(spark, sf_dir, "embeddings", n_chunks=3, order="vec_id")
     idx = pq_ingest_stream(emb.filter(F.col("vec_id") >= 10))
     q = _lt(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2350,10 +2332,9 @@ def stream_semantic_neardup(spark, sf_dir):
     >= 0.35; survivors emit insert-only. Boundary-invariant closed form:
     'survives iff no smaller-id vector is bucket-matched and
     cosine-verified' — stated directly by the oracle."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.neardup_stream import semantic_neardup_stream
 
-    emb = chunked_table_stream(spark, sf_dir, "embeddings", 3, "vec_id")
+    emb = stream_table(spark, sf_dir, "embeddings", n_chunks=3, order="vec_id")
     out = semantic_neardup_stream(
         emb, n_planes=_SEM_PLANES, n_tables=_SEM_TABLES,
         threshold=_SEM_TAU,
@@ -2377,10 +2358,9 @@ def stream_curation_e2e(spark, sf_dir):
     Seen-based, id-monotone stages close to the batch chain's `surv`
     set, which the oracle (the pipe_curation_e2e CTE chain with a
     row-level final select) states directly."""
-    from flink_spark.streaming.core import chunked_table_stream
     from flink_spark.streaming.curation_stream import curation_stream
 
-    docs = chunked_table_stream(spark, sf_dir, "documents", 3, "doc_id")
+    docs = stream_table(spark, sf_dir, "documents", n_chunks=3, order="doc_id")
     out = curation_stream(docs)
     return out.select(
         "doc_id", "source", F.length("text").alias("n_chars_m")

@@ -63,6 +63,17 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 48g: a local driver
+    shares the host with its Python workers, and a heap past the host's
+    memory gets the JVM killed instead of a task failed."""
+    try:
+        host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(host_mb // 2, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "flink_spark",
     cpus: int | str | None = None,
@@ -95,7 +106,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "flink_spark.pydaemon")

@@ -8,6 +8,11 @@ a batch table ("batch is a special case of streaming") is exactly
 Structured Streaming's ``Trigger.AvailableNow`` over a file source: the
 same operators run watermark-driven, then the query drains and stops.
 
+``stream_table`` builds every test-table stream: ``_chunk_dir`` writes
+each copy and ``_open_stream`` opens each source directory (the idleness
+stream goes through both). All copies live under ``_STREAM_DIR_ROOT``,
+read at call time, so rebinding it moves them all.
+
 ``run_to_memory`` is the test/driver bridge: execute a streaming plan to
 completion on bounded input and hand back the result as a batch DataFrame —
 which is what lets the DuckDB oracle gate value-check *streaming* operators.
@@ -78,12 +83,40 @@ def _source_files(file_path: str) -> list[str]:
     return [file_path]
 
 
-def _as_dir(file_path: str, suffix: str = "") -> str:
-    """The file stream source requires a flat *directory*; expose the
-    table's file(s) through a stable symlink directory under /tmp."""
+def _stream_dir(file_path: str, suffix: str) -> str:
+    """The source directory for one copy of ``file_path``, under the
+    stream root as it is bound at call time."""
     key = file_path.strip("/").replace("/", "_") + suffix
     d = os.path.join(_STREAM_DIR_ROOT, key)
     os.makedirs(d, exist_ok=True)
+    return d
+
+
+def _sentinel(schema, wm_col: str):
+    """One arrow row of ``schema``: ``wm_col`` at the year-2100 sentinel
+    time, every other column NULL."""
+    import datetime
+
+    import pyarrow as pa
+
+    ts_val = datetime.datetime.fromisoformat(_SENTINEL_ISO)
+    arrays = []
+    for field in schema:
+        val = None
+        if field.name == wm_col:
+            val = ts_val
+            if not pa.types.is_timestamp(field.type):
+                # int64 epoch-nanos variant of the events table
+                val = int(ts_val.timestamp() * 1_000_000_000)
+        arrays.append(pa.array([val], type=field.type))
+    return pa.table(arrays, schema=schema)
+
+
+def _linked_dir(file_path: str, wm_col: str | None) -> str:
+    """The file stream source requires a flat *directory*: expose the
+    table's own file(s) through symlinks, plus, for ``wm_col``, a
+    sentinel file of one row (see :func:`_sentinel`)."""
+    d = _stream_dir(file_path, f"_closed_{wm_col}" if wm_col else "")
     for src in _source_files(file_path):
         link = os.path.join(d, os.path.basename(src))
         if not os.path.islink(link):
@@ -91,40 +124,112 @@ def _as_dir(file_path: str, suffix: str = "") -> str:
                 os.symlink(src, link)
             except FileExistsError:
                 pass
+    sentinel = os.path.join(d, "zz_watermark_sentinel.parquet")
+    if wm_col is not None and not os.path.exists(sentinel):
+        import pyarrow.parquet as pq
+
+        sch = pq.read_schema(_source_files(file_path)[0]).remove_metadata()
+        pq.write_table(_sentinel(sch, wm_col), sentinel + ".tmp")
+        os.replace(sentinel + ".tmp", sentinel)
     return d
 
 
-def _closed_dir(file_path: str, wm_col: str) -> str:
-    """A stream-source directory for ``file_path`` plus one *sentinel* row
-    whose event time (2100) out-runs every real row. Draining it under
-    AvailableNow advances the final watermark past every real window's end,
-    so ``append``-mode stateful operators fire-and-purge all state — the
-    micro-batch analog of Flink's end-of-input MAX_WATERMARK flush
-    (reference flink-core/.../eventtime/Watermark.java MAX_WATERMARK,
-    emitted by SourceOperator on bounded input end)."""
+def _chunk_dir(
+    file_path: str, suffix: str, n_chunks: int, arrange,
+    wm_col: str | None = None,
+) -> str:
+    """Copy ``file_path`` once into ``n_chunks`` parquet files
+    ``part-<i>`` and return their directory.
+
+    ns timestamps become µs first: truncation matches DuckDB's parquet
+    ns→µs read exactly, and frees the stream from the session's
+    nanosAsLong setting. ``arrange`` then orders (or filters, or tags)
+    the µs rows, so sub-µs precision cannot produce a tie-break order a
+    µs-reading oracle cannot reproduce. Chunk ``i`` holds rows
+    ``[i*n//n_chunks, (i+1)*n//n_chunks)``, a floor split an oracle
+    reproduces in SQL; for ``wm_col`` the last chunk ends with the
+    sentinel row (see :func:`_sentinel`)."""
+    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = _as_dir(file_path, suffix=f"_closed_{wm_col}")
-    sentinel = os.path.join(d, "zz_watermark_sentinel.parquet")
-    if not os.path.exists(sentinel):
-        sch = pq.read_schema(_source_files(file_path)[0]).remove_metadata()
-        import datetime
-
-        ts_val = datetime.datetime.fromisoformat(_SENTINEL_ISO)
-        arrays = []
-        for field in sch:
-            if field.name == wm_col:
-                if pa.types.is_timestamp(field.type):
-                    val = ts_val
-                else:  # int64 epoch-nanos variant of the events table
-                    val = int(ts_val.timestamp() * 1_000_000_000)
-                arrays.append(pa.array([val], type=field.type))
-            else:
-                arrays.append(pa.array([None], type=field.type))
-        pq.write_table(pa.table(arrays, schema=sch), sentinel + ".tmp")
-        os.replace(sentinel + ".tmp", sentinel)
+    d = _stream_dir(file_path, suffix)
+    marker = os.path.join(d, "_done")
+    if os.path.exists(marker):
+        return d
+    for f in os.listdir(d):
+        os.remove(os.path.join(d, f))
+    pdf = pd.read_parquet(file_path)
+    for c in pdf.columns:
+        if str(pdf[c].dtype).startswith("datetime64[ns"):
+            pdf[c] = pdf[c].astype("datetime64[us]")
+    tbl = pa.Table.from_pandas(arrange(pdf), preserve_index=False)
+    n = tbl.num_rows
+    for i in range(n_chunks):
+        lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
+        part = tbl.slice(lo, hi - lo)
+        if wm_col is not None and i == n_chunks - 1:
+            part = pa.concat_tables([part, _sentinel(tbl.schema, wm_col)])
+        p = os.path.join(d, f"part-{i}.parquet")
+        pq.write_table(part, p)
+        # Spark's file stream source orders files by MODIFICATION TIME;
+        # files written within the same instant tie, making batch order
+        # nondeterministic. Pin strictly increasing mtimes.
+        os.utime(p, (1_600_000_000 + i * 60,) * 2)
+    with open(marker, "w") as fh:
+        fh.write("ok")
     return d
+
+
+def _open_stream(
+    spark: SparkSession,
+    name: str,
+    src_dir: str,
+    schema_path: str,
+    n_chunks: int = 1,
+    watermark: tuple[str, str] | None = None,
+    closed: bool = False,
+) -> DataFrame:
+    """``readStream`` over ``src_dir``, one file per trigger when
+    ``n_chunks > 1``. The schema is a batch read of ``schema_path``
+    (schema inference is disabled for streaming file sources); the events
+    table's nanos→TIMESTAMP_NTZ normalization matches sources/tables.py.
+    See :func:`stream_table` for ``watermark`` and ``closed``."""
+    prepare_session(spark)
+    from flink_spark.sources.tables import table_schema
+
+    reader = spark.readStream.schema(table_schema(spark, schema_path))
+    if n_chunks > 1:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    df = reader.parquet(src_dir)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
+        )
+    if watermark is None:
+        return df
+    col, delay = watermark
+    # Spark watermarks require TIMESTAMP (LTZ). Session tz is pinned to
+    # UTC (prepare_session), so the NTZ→LTZ cast is value-preserving;
+    # window bounds are cast back to NTZ by ntz_windows() on output.
+    df = df.withColumn(col, F.col(col).cast("timestamp")).withWatermark(
+        col, delay
+    )
+    if closed:
+        # The `spark_partition_id() >= -1` conjunct is always true; it
+        # makes this filter NON-DETERMINISTIC so Catalyst cannot merge
+        # later, caller-added filters into it nor push them below the
+        # EventTimeWatermark node. Without the barrier, a filter like
+        # `user_id <= 100` (NULL for the sentinel row → false) would be
+        # pushed below the watermark and drop the sentinel *before*
+        # event-time stats are collected, silencing the final flush.
+        # (`rand() >= -1` doesn't work: the optimizer knows rand's
+        # bounds and folds it away.)
+        df = df.filter(
+            (F.spark_partition_id() >= F.lit(-1))
+            & (F.col(col) < F.lit(_SENTINEL_CUTOFF_ISO).cast("timestamp"))
+        )
+    return df
 
 
 def stream_table(
@@ -133,61 +238,68 @@ def stream_table(
     name: str,
     watermark: tuple[str, str] | None = None,
     closed: bool = False,
+    n_chunks: int = 1,
+    order: str | list[str] | None = None,
+    order_hash: bool = False,
 ) -> DataFrame:
-    """Open one test table as a *streaming* DataFrame (file source).
+    """Open one test table as a *streaming* DataFrame (file source),
+    delivered in ``n_chunks`` micro-batches.
 
-    The schema is taken from a batch read of the same path (schema
-    inference is disabled for streaming file sources); the events table's
-    nanos→TIMESTAMP_NTZ normalization matches sources/tables.py.
+    ``n_chunks=1`` streams the table's own files (symlinks, no copy), so
+    a multi-file table streams one file per part. ``n_chunks > 1``
+    streams a µs-normalized copy split into that many files, one per
+    trigger, in ``order`` (a column or a list of columns; arrival order
+    for None) — the harness for operators whose correctness must hold
+    *across* micro-batch boundaries. ``order_hash=True`` orders by the
+    md5 of the (unique) ``order`` column instead: a deterministic
+    shuffle, uncorrelated with event time, that both engines reproduce
+    (SQL: ``ORDER BY md5(CAST(col AS VARCHAR))``) — the
+    out-of-order-delivery harness.
+
     ``watermark=(col, delay)`` applies ``withWatermark`` — the Spark
     surface of Flink's WATERMARK DDL (bounded out-of-orderness).
 
     ``closed=True`` (requires ``watermark``) adds a year-2100 sentinel row
-    to the source and filters it back out *after* the watermark operator:
-    the sentinel still raises the final watermark (event-time stats are
-    collected as rows pass the EventTimeWatermark node, before the filter),
-    so append-mode windows all close on the drain — Flink's end-of-input
-    MAX_WATERMARK semantics — without the sentinel polluting any result.
+    to the source (in the last chunk) and filters it back out *after* the
+    watermark operator: the sentinel still raises the final watermark
+    (event-time stats are collected as rows pass the EventTimeWatermark
+    node, before the filter), so append-mode windows all close on the
+    drain — the micro-batch analog of Flink's end-of-input MAX_WATERMARK
+    flush (reference flink-core/.../eventtime/Watermark.java
+    MAX_WATERMARK, emitted by SourceOperator on bounded input end) —
+    without the sentinel polluting any result.
     """
-    prepare_session(spark)
+    if closed and watermark is None:
+        raise ValueError("closed=True requires a watermark")
+    if order_hash and not isinstance(order, str):
+        raise ValueError("order_hash=True requires one order column")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    from flink_spark.sources.tables import table_schema
-
-    schema = table_schema(spark, path)
-    if closed:
-        if watermark is None:
-            raise ValueError("closed=True requires a watermark")
-        src_dir = _closed_dir(path, watermark[0])
+    wm_col = watermark[0] if closed else None
+    if n_chunks == 1:
+        src_dir, schema_path = _linked_dir(path, wm_col), path
     else:
-        src_dir = _as_dir(path)
-    df = spark.readStream.schema(schema).parquet(src_dir)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
+        def arrange(pdf):
+            if order_hash:
+                import hashlib
+
+                return pdf.assign(__o=[
+                    hashlib.md5(str(v).encode()).hexdigest()
+                    for v in pdf[order]
+                ]).sort_values("__o").drop(columns="__o")
+            return pdf if order is None else pdf.sort_values(order)
+
+        cols = [order] if isinstance(order, str) else order or ["arrival"]
+        suffix = (
+            f"_chunks{n_chunks}_{'-'.join(cols)}"
+            + ("_h" if order_hash else "")
+            + (f"_closed_{wm_col}" if wm_col else "")
         )
-    if watermark is not None:
-        col, delay = watermark
-        # Spark watermarks require TIMESTAMP (LTZ). Session tz is pinned to
-        # UTC (prepare_session), so the NTZ→LTZ cast is value-preserving;
-        # window bounds are cast back to NTZ by ntz_windows() on output.
-        df = df.withColumn(col, F.col(col).cast("timestamp")).withWatermark(
-            col, delay
+        src_dir = schema_path = _chunk_dir(
+            path, suffix, n_chunks, arrange, wm_col
         )
-        if closed:
-            # The `spark_partition_id() >= -1` conjunct is always true; it
-            # makes this filter NON-DETERMINISTIC so Catalyst cannot merge
-            # later, caller-added filters into it nor push them below the
-            # EventTimeWatermark node. Without the barrier, a filter like
-            # `user_id <= 100` (NULL for the sentinel row → false) would be
-            # pushed below the watermark and drop the sentinel *before*
-            # event-time stats are collected, silencing the final flush.
-            # (`rand() >= -1` doesn't work: the optimizer knows rand's
-            # bounds and folds it away.)
-            df = df.filter(
-                (F.spark_partition_id() >= F.lit(-1))
-                & (F.col(col) < F.lit(_SENTINEL_CUTOFF_ISO).cast("timestamp"))
-            )
-    return df
+    return _open_stream(
+        spark, name, src_dir, schema_path, n_chunks, watermark, closed
+    )
 
 
 def ntz_windows(df: DataFrame, *cols: str) -> DataFrame:
@@ -265,93 +377,6 @@ def run_to_memory(
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
-
-
-def chunked_table_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    n_chunks: int = 2,
-    order_col: str | None = None,
-    order_hash: bool = False,
-) -> DataFrame:
-    """Open one test table as a streaming DataFrame delivered in
-    ``n_chunks`` micro-batches (one file per trigger). The chunked copy is
-    materialized once under /tmp, split on ``order_col`` order (arrival
-    order for None) — the harness for operators whose correctness must
-    hold *across* micro-batch boundaries."""
-    if order_hash and order_col is None:
-        raise ValueError("order_hash=True requires an order_col")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = path.strip("/").replace("/", "_") + (
-        f"_chunks{n_chunks}_{order_col or 'arrival'}"
-        + ("_h" if order_hash else "")
-    )
-    d = os.path.join(_STREAM_DIR_ROOT, key)
-    marker = os.path.join(d, f"_chunked_{n_chunks}_us")
-    if not os.path.exists(marker):
-        import pandas as pd
-
-        os.makedirs(d, exist_ok=True)
-        for f in os.listdir(d):
-            os.remove(os.path.join(d, f))
-        pdf = pd.read_parquet(path)
-        if order_col is not None and order_hash:
-            # arrival order = md5 of the (unique) order column: a
-            # deterministic shuffle both engines can reproduce
-            # (SQL: ORDER BY md5(CAST(col AS VARCHAR))), uncorrelated
-            # with event time — the out-of-order-delivery harness
-            import hashlib
-
-            pdf = (
-                pdf.assign(__o=[
-                    hashlib.md5(str(v).encode()).hexdigest()
-                    for v in pdf[order_col]
-                ])
-                .sort_values("__o")
-                .drop(columns="__o")
-                .reset_index(drop=True)
-            )
-        elif order_col is not None:
-            pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        # normalize ns timestamps to µs at write time: truncation matches
-        # DuckDB's parquet ns→µs read exactly, and frees the stream from
-        # the session's nanosAsLong setting (a vanilla session would
-        # otherwise read nanos natively and disagree on boundary rows)
-        for c in pdf.columns:
-            if str(pdf[c].dtype).startswith("datetime64[ns"):
-                pdf[c] = pdf[c].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(n_chunks):
-            part = pdf.iloc[i * n // n_chunks : (i + 1) * n // n_chunks]
-            part.to_parquet(os.path.join(d, f"part-{i}.parquet"), index=False)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    # Spark's file stream source orders files by MODIFICATION TIME; files
-    # written within the same instant tie, making batch order (and any
-    # order-sensitive operator on top) nondeterministic. Pin strictly
-    # increasing mtimes — applied on every call so pre-fix cached dirs
-    # are repaired too.
-    base = 1_600_000_000
-    for i in range(n_chunks):
-        p = os.path.join(d, f"part-{i}.parquet")
-        if os.path.exists(p):
-            os.utime(p, (base + i * 60, base + i * 60))
-    # schema from the CHUNK files (µs-normalized), not the original table:
-    # the ns-column legacy/bigint handling never applies to the chunks
-    from flink_spark.sources.tables import table_schema
-
-    schema = table_schema(spark, d)
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-        )
-    return df
 
 
 def with_current_watermark(

@@ -26,8 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_spark.streaming.core import _STREAM_DIR_ROOT
+from flink_spark.streaming import core
 from flink_spark.streaming.storeutil import read_store, run_drain
+
+#: Event-time and tie-break columns of the idleness stream.
+_TS, _ID = "ts", "event_id"
 
 
 def tagged_ts_chunk_stream(
@@ -36,57 +39,28 @@ def tagged_ts_chunk_stream(
     name: str,
     n_chunks: int = 4,
     where: str | None = None,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Open a table as a streaming DataFrame delivered in event-time order
     over ``n_chunks`` micro-batches, tagged with a two-source split: rows
-    in the first half of the event-time order are source ``'a'`` (the
-    backfill source that goes quiet), the rest source ``'b'`` — the
+    in the first half of the ``(ts, event_id)`` order are source ``'a'``
+    (the backfill source that goes quiet), the rest source ``'b'`` — the
     harness for idleness semantics, where one source's silence must stop
-    holding the watermark back. Split boundaries use the same floor
-    arithmetic as ``chunked_table_stream`` so an oracle can reproduce the
-    exact chunk and source of every row."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (
-        path.strip("/").replace("/", "_")
-        + f"_idle{n_chunks}_{(where or 'all').replace(' ', '')}"
-    )
-    d = os.path.join(_STREAM_DIR_ROOT, key)
-    marker = os.path.join(d, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        for f in os.listdir(d):
-            os.remove(os.path.join(d, f))
-        pdf = pd.read_parquet(path)
+    holding the watermark back. The copy is written and opened by
+    ``core.stream_table``'s helpers, so its chunk boundaries use the same
+    floor split and an oracle can reproduce the exact chunk and source of
+    every row."""
+
+    def arrange(pdf):
         if where is not None:
             pdf = pdf.query(where)
-        # µs-normalize BEFORE sorting: sub-µs precision must not produce a
-        # tie-break order a µs-reading oracle cannot reproduce
-        for c in pdf.columns:
-            if str(pdf[c].dtype).startswith("datetime64[ns"):
-                pdf[c] = pdf[c].astype("datetime64[us]")
-        pdf = pdf.sort_values([ts_col, id_col]).reset_index(drop=True)
+        pdf = pdf.sort_values([_TS, _ID])
         n = len(pdf)
-        pdf["src"] = ["a" if i < 2 * n // 4 else "b" for i in range(n)]
-        for i in range(n_chunks):
-            part = pdf.iloc[i * n // n_chunks : (i + 1) * n // n_chunks]
-            part.to_parquet(os.path.join(d, f"part-{i}.parquet"), index=False)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    base = 1_600_000_000
-    for i in range(n_chunks):
-        p = os.path.join(d, f"part-{i}.parquet")
-        if os.path.exists(p):
-            os.utime(p, (base + i * 60, base + i * 60))
-    from flink_spark.sources.tables import table_schema
+        return pdf.assign(src=["a" if i < 2 * n // 4 else "b" for i in range(n)])
 
-    schema = table_schema(spark, d)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    suffix = f"_idle{n_chunks}_{(where or 'all').replace(' ', '')}"
+    d = core._chunk_dir(path, suffix, n_chunks, arrange)
+    return core._open_stream(spark, name, d, d, n_chunks)
 
 
 def combined_watermark_trace(

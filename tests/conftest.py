@@ -28,7 +28,7 @@ def pytest_addoption(parser):
 def pytest_configure(config):
     # One driver heap for the whole run, set before any session or
     # subprocess starts, so a test sees the same value in any order:
-    # the program's 48g default does not fit a 15 GB host.
+    # the program's default (half the host's memory) varies by host.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     config.addinivalue_line(
         "markers",

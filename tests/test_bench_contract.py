@@ -35,3 +35,18 @@ def test_contract_line_fits_tail_and_names_hardware():
     assert got["master"] == "local[128]"
     assert got["defaultParallelism"] == 128
     assert isinstance(got["cpus"], int) and got["cpus"] > 0
+
+
+def test_default_driver_heap_fits_host(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half the host's
+    physical memory, capped at 48g: a 15 GB host gets 7.5g, not 48g."""
+    from flink_spark import session
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        return session._default_driver_mem()
+
+    assert host(15) == "7680m"
+    assert host(96) == "49152m"
+    assert host(1024) == "49152m"

@@ -521,8 +521,9 @@ def test_async_lookup_retry_exhausted_raises(spark):
 
 def test_chunk_split_closed_form_matches_iloc():
     """The SQL oracle's closed-form chunk assignment (sum of rn >= i*n//4)
-    must equal chunked_table_stream's pandas floor split
-    iloc[i*n//4:(i+1)*n//4] for EVERY row count — including counts not
+    must equal the floor split of core._chunk_dir, the chunk writer
+    behind stream_table(n_chunks=...) and the idleness stream: rows
+    [i*n//4, (i+1)*n//4) for EVERY row count — including counts not
     divisible by 4, where the old rn*4//n formula diverged."""
     for n in list(range(1, 66)) + [999, 1001, 10001]:
         bounds = [i * n // 4 for i in range(5)]
@@ -967,9 +968,9 @@ _DRAIN_SITES = [
 ]
 
 
-def _available_now_sites(root):
-    """Sorted (relpath, innermost function) of every ``availableNow=``
-    keyword argument in the .py files under ``root``."""
+def _sites(root, match):
+    """Sorted (relpath, innermost function) of every AST node under the
+    .py files in ``root`` for which ``match(node)`` holds."""
     import ast
 
     sites = []
@@ -986,16 +987,23 @@ def _available_now_sites(root):
                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
             ]
             for node in ast.walk(tree):
-                if not (isinstance(node, ast.keyword)
-                        and node.arg == "availableNow"):
+                if not match(node):
                     continue
                 inner = [
                     f for f in funcs
-                    if f.lineno <= node.value.lineno <= f.end_lineno
+                    if f.lineno <= node.lineno <= f.end_lineno
                 ]
                 innermost = max(inner, key=lambda f: f.lineno, default=None)
                 sites.append((rel, innermost and innermost.name))
     return sorted(sites)
+
+
+def _available_now_sites(root):
+    """Every ``availableNow=`` keyword argument under ``root``."""
+    import ast
+
+    return _sites(root, lambda n: isinstance(n, ast.keyword)
+                  and n.arg == "availableNow")
 
 
 def test_drains_start_only_through_drain_helpers():
@@ -1019,3 +1027,97 @@ def test_drain_site_scan_flags_new_site(tmp_path):
         "    return go()\n"
     )
     assert _available_now_sites(str(tmp_path)) == [("op.py", "go")]
+
+
+# -- one source helper -------------------------------------------------------
+
+#: (module under flink_spark/, enclosing function) of every ``readStream``
+#: and every ``"maxFilesPerTrigger"`` option. The test-table streams all
+#: open in ``core._open_stream`` (both); the other sources are the hybrid
+#: backfill/live union (both), the datagen rate stream and the catalog's
+#: rate and socket connectors.
+_SOURCE_SITES = [
+    ("catalog.py", "_source_df"),
+    ("catalog.py", "_source_df"),
+    ("sources/datagen.py", "datagen"),
+    ("sources/hybrid.py", "hybrid_stream"),
+    ("sources/hybrid.py", "hybrid_stream"),
+    ("streaming/core.py", "_open_stream"),
+    ("streaming/core.py", "_open_stream"),
+]
+
+
+def _stream_source_sites(root):
+    """Every ``.readStream`` attribute and ``"maxFilesPerTrigger"``
+    literal under ``root``."""
+    import ast
+
+    return _sites(root, lambda n: (
+        isinstance(n, ast.Attribute) and n.attr == "readStream"
+    ) or (isinstance(n, ast.Constant) and n.value == "maxFilesPerTrigger"))
+
+
+def test_streams_open_only_through_source_helpers():
+    """A new file-source stream over a table must open through
+    ``core.stream_table`` (its one chunk writer and one readStream tail),
+    not through a reader of its own."""
+    import flink_spark
+
+    pkg = os.path.dirname(flink_spark.__file__)
+    assert _stream_source_sites(pkg) == _SOURCE_SITES
+
+
+def test_source_site_scan_flags_new_site(tmp_path):
+    """The scan sees a new reader and a throttle option (also nested),
+    and not a mention in a comment or docstring."""
+    (tmp_path / "src.py").write_text(
+        "def src(spark, d):\n"
+        "    \"\"\"Opens spark.readStream with maxFilesPerTrigger.\"\"\"\n"
+        "    def go():\n"
+        "        # spark.readStream.option(\"maxFilesPerTrigger\", 1)\n"
+        "        r = spark.readStream\n"
+        "        return r.option(\"maxFilesPerTrigger\", 1).parquet(d)\n"
+        "    return go()\n"
+    )
+    assert _stream_source_sites(str(tmp_path)) == [
+        ("src.py", "go"), ("src.py", "go"),
+    ]
+
+
+def test_stream_root_moves_every_source_copy(spark, tmp_path, monkeypatch):
+    """Rebinding ``core._STREAM_DIR_ROOT`` alone moves every directory a
+    test-table stream reads: the chunk copies, the closed sentinel and the
+    idleness stream. With ``closed=True`` over chunks, the sentinel is the
+    last row of the last chunk, not a batch of its own."""
+    import pyarrow.parquet as pq
+
+    from flink_spark.streaming import core
+    from flink_spark.streaming.idleness import tagged_ts_chunk_stream
+    from tests.conftest import SMOKE_SF_DIR
+
+    monkeypatch.setattr(core, "_STREAM_DIR_ROOT", str(tmp_path))
+    wm = ("ts", "1 minute")
+    core.stream_table(spark, SMOKE_SF_DIR, "events", n_chunks=2, order="ts")
+    core.stream_table(spark, SMOKE_SF_DIR, "events", wm, closed=True)
+    core.stream_table(spark, SMOKE_SF_DIR, "events", wm, closed=True,
+                      n_chunks=2, order="ts")
+    tagged_ts_chunk_stream(spark, SMOKE_SF_DIR, "events", 2)
+
+    key = os.path.join(SMOKE_SF_DIR, "events.parquet").strip("/").replace(
+        "/", "_"
+    )
+    suffixes = ["_chunks2_ts", "_closed_ts", "_chunks2_ts_closed_ts", "_idle2_all"]
+    assert sorted(os.listdir(tmp_path)) == sorted(key + s for s in suffixes)
+
+    def rows(suffix, i):
+        return pq.read_table(tmp_path / (key + suffix) / f"part-{i}.parquet")
+
+    assert [rows("_chunks2_ts", i).num_rows for i in (0, 1)] == [500, 500]
+    last = rows("_chunks2_ts_closed_ts", 1).to_pylist()
+    assert len(last) == 501 and last[-1]["ts"].year == 2100
+    assert {k for k, v in last[-1].items() if v is not None} == {"ts"}
+    assert rows("_chunks2_ts_closed_ts", 0).num_rows == 500
+    assert os.path.exists(
+        tmp_path / (key + "_closed_ts") / "zz_watermark_sentinel.parquet"
+    )
+    assert set(rows("_idle2_all", 1).column("src").to_pylist()) == {"b"}
