@@ -1,40 +1,146 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-with decode/feature-extraction as Arrow-batched pandas UDFs.
+with decode/feature-extraction as Arrow-batched numpy kernels.
 
 Design for 100 TB: the binary column never leaves the JVM until a decode
 step genuinely needs Python; metadata (size, hash, mime) is computed with
 JVM expressions so filtering/partition pruning happens before any decode.
-The decode itself is `mapInPandas` — Arrow batches, one Python process per
-core, no per-row ser/de.
+The decode itself is `mapInArrow`: Arrow batches, one Python process per
+core, no per-row ser/de. A kernel reads a batch's binary column straight
+from its offsets and data buffers, parses each payload's header, and
+reduces all payloads of one geometry in one numpy pass; a synthesizer
+builds a batch's payloads in one buffer. Each kernel's output is bit for
+bit what decoding and reducing every payload alone gives: it sums
+integers, and float64 holds an integer sum below 2^53 exactly (a clip
+whose sum of squares is larger takes its own float mean). The video,
+resize and near-dup UDFs still decode row by row under `mapInPandas`.
 
 Decode is capability-gated per format: PPM (P6) and uncompressed 24-bit
 BMP decode natively here (pure numpy header parse + frombuffer — real
 image files, no codec library needed); jpeg/png/webp route to PIL when
-the deployment has it and raise NotImplementedError otherwise. The
-byte-level `_fake_decode` below remains as the codec-free fallback used
-by `extract_features` for opaque payloads.
+the deployment has it and raise NotImplementedError otherwise.
+`extract_features` is the codec-free path: byte statistics of opaque
+payloads.
 """
 
 from __future__ import annotations
 
 import sys
 from collections.abc import Iterator
+from functools import partial
 
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The mapInPandas closures below call this module's functions
-# (_fake_decode, decode_image, encode_ppm, ...). Pickled by reference, a
-# Python worker would have to import flink_spark, which a worker started
-# without this package on its path cannot; by value, a worker needs only
-# numpy and pandas. The module imports nothing else from flink_spark.
+# The worker code below calls this module's functions (the kernels,
+# decode_image, encode_ppm, ...). Pickled by reference, a Python worker
+# would have to import flink_spark, which a worker started without this
+# package on its path cannot; by value, a worker needs only numpy, pandas
+# and pyarrow. The module imports nothing else from flink_spark.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id BIGINT, n_bytes INT, mime STRING, byte_mean DOUBLE, "
     "byte_min INT, byte_max INT, feature_ok BOOLEAN"
 )
+
+#: rows per kernel call: bounds a call's gathered pixel blocks, and keeps
+#: a synthesized binary column's int32 offsets far from overflow, at any
+#: Arrow batch size
+KERNEL_ROWS = 1 << 14
+
+
+def _map_arrow(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """``df.mapInArrow`` that hands ``kernel`` each batch in slices of at
+    most ``KERNEL_ROWS`` rows. ``kernel`` maps a RecordBatch to one whose
+    columns carry ``schema``'s Arrow types."""
+
+    def run(batches):
+        for batch in batches:
+            for off in range(0, batch.num_rows, KERNEL_ROWS):
+                yield kernel(batch.slice(off, KERNEL_ROWS))
+
+    return df.mapInArrow(run, schema)
+
+
+def _binary_parts(col):
+    """A ``binary`` or ``large_binary`` Arrow array as (data, starts,
+    ends): a zero-copy uint8 view of the bytes its rows span, and each
+    row's byte range in it. A NULL row's range means nothing; callers
+    check ``col.is_valid()``."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(col)
+    if n == 0:
+        none = np.empty(0, np.int64)
+        return np.empty(0, np.uint8), none, none
+    _, offsets, data = col.buffers()
+    width = np.dtype(np.int64 if pa.types.is_large_binary(col.type)
+                     else np.int32)
+    offs = np.frombuffer(offsets, width, n + 1,
+                         col.offset * width.itemsize).astype(np.int64)
+    lo, hi = int(offs[0]), int(offs[-1])
+    data = np.frombuffer(data, np.uint8, hi - lo, lo)
+    return data, offs[:-1] - lo, offs[1:] - lo
+
+
+def _binary_array(data, offsets):
+    """An Arrow ``binary`` array over a uint8 buffer and its row offsets,
+    with no per-row bytes objects."""
+    import numpy as np
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(pa.binary(), len(offsets) - 1, [
+        None,
+        pa.py_buffer(np.ascontiguousarray(offsets, np.int32)),
+        pa.py_buffer(np.ascontiguousarray(data, np.uint8)),
+    ])
+
+
+def _gather(data, starts, rows: int, cols: int, stride: int):
+    """From each start in ``data``, copy ``rows`` runs of ``cols`` bytes
+    that begin ``stride`` bytes apart: a (len(starts), rows, cols) uint8
+    array. Every window of the strided view lies inside ``data``, and
+    indexing it by ``starts`` copies only the selected windows."""
+    import numpy as np
+
+    span = (rows - 1) * stride + cols
+    windows = np.lib.stride_tricks.as_strided(
+        data, (len(data) - span + 1, rows, cols), (1, stride, 1),
+        writeable=False,
+    )
+    return windows[starts]
+
+
+def _grouped(col, layout, alone, gather):
+    """The rows of binary array ``col``, decoded in groups of one
+    geometry. ``layout(payload)`` parses a payload's header into
+    (offset of its samples, geometry), or None for a payload that
+    ``alone(payload)`` must decode by itself (``payload`` is None for a
+    NULL row); ``gather(data, starts, geometry)`` decodes a group.
+
+    Yields (row indices, decoded rows, geometry). A payload decoded alone
+    is yielded when its row is reached, so the first payload to raise is
+    the first one in row order that a row-by-row decode rejects."""
+    import numpy as np
+
+    data, starts, ends = _binary_parts(col)
+    raw = data.tobytes()
+    valid = col.is_valid().to_numpy(zero_copy_only=False).tolist()
+    groups: dict = {}
+    for i, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
+        payload = raw[s:e] if valid[i] else None
+        found = None if payload is None else layout(payload)
+        if found is None:
+            yield (np.array([i]), *alone(payload))
+            continue
+        off, geometry = found
+        rows, at = groups.setdefault(geometry, ([], []))
+        rows.append(i)
+        at.append(s + off)
+    for geometry, (rows, at) in groups.items():
+        yield np.array(rows), gather(data, np.array(at), geometry), geometry
 
 
 def attach_binary(df: DataFrame, text_col: str = "text",
@@ -51,53 +157,64 @@ def attach_binary(df: DataFrame, text_col: str = "text",
     )
 
 
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic stand-in for a codec. Real deployments replace this
-    with e.g. PIL.Image.open(io.BytesIO(payload)).
-    """
-    if payload is None:
-        return {"byte_mean": None, "byte_min": None, "byte_max": None, "ok": False}
-    arr = bytearray(payload)
-    if not arr:
-        return {"byte_mean": None, "byte_min": None, "byte_max": None, "ok": False}
-    return {
-        "byte_mean": sum(arr) / len(arr),
-        "byte_min": min(arr),
-        "byte_max": max(arr),
-        "ok": True,
-    }
+def _byte_stats_kernel(batch):
+    """Byte mean, min and max of every payload of a batch at once:
+    segmented ``reduceat`` sums, mins and maxes over the data buffer.
+    The sum is an exact integer, so one float64 divide gives the bits of
+    Python's ``sum(payload) / len(payload)``."""
+    import numpy as np
+    import pyarrow as pa
+
+    col = batch.column("payload")
+    data, starts, ends = _binary_parts(col)
+    ok = col.is_valid().to_numpy(zero_copy_only=False) & (ends > starts)
+    s, e = starts[ok], ends[ok]
+    stats = np.zeros((3, len(s)), np.int64)
+    if len(s):
+        # segments [s_k, e_k) at the even positions; the odd ones span
+        # the gaps between rows (empty or NULL slots) and are dropped
+        seg = data[s[0]:e[-1]]
+        at = np.stack([s, e], axis=1).ravel()[:-1] - s[0]
+        stats[0] = np.add.reduceat(seg, at, dtype=np.int64)[::2]
+        stats[1] = np.minimum.reduceat(seg, at)[::2]
+        stats[2] = np.maximum.reduceat(seg, at)[::2]
+    n = batch.num_rows
+    mean = np.zeros(n)
+    mean[ok] = stats[0] / (e - s)
+    lo, hi = np.zeros((2, n), np.int32)
+    lo[ok], hi[ok] = stats[1], stats[2]
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("doc_id").cast(pa.int64()),
+            batch.column("n_bytes").cast(pa.int32()),
+            batch.column("mime").cast(pa.string()),
+            pa.array(mean, mask=~ok),
+            pa.array(lo, mask=~ok),
+            pa.array(hi, mask=~ok),
+            pa.array(ok),
+        ],
+        names=["doc_id", "n_bytes", "mime", "byte_mean", "byte_min",
+               "byte_max", "feature_ok"],
+    )
 
 
 def extract_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = pdf["payload"].map(_fake_decode)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    # nullable Int32: a NULL payload row arrives with
-                    # n_bytes NaN (octet_length of NULL), and a plain
-                    # int32 astype raises on non-finite values — the
-                    # null-tolerant _fake_decode branch must stay
-                    # reachable
-                    "n_bytes": pdf["n_bytes"].astype("Int32"),
-                    "mime": pdf["mime"],
-                    "byte_mean": feats.map(lambda d: d["byte_mean"]),
-                    "byte_min": feats.map(lambda d: d["byte_min"]),
-                    "byte_max": feats.map(lambda d: d["byte_max"]),
-                    "feature_ok": feats.map(lambda d: d["ok"]),
-                }
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    """Arrow-batched feature extraction over the binary column, the
+    stand-in for a codec: byte mean, min and max per payload; a NULL or
+    empty payload gets NULL stats and ``feature_ok`` false."""
+    return _map_arrow(
+        df.select("doc_id", "payload", "n_bytes", "mime"),
+        _byte_stats_kernel, FEATURE_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
 # real raster decode path (pure numpy — no codec library needed)
+
+
+def _ppm_prefix(w: int, h: int) -> bytes:
+    """The header ``encode_ppm`` writes before a w×h image's pixels."""
+    return b"P6\n%d %d\n255\n" % (w, h)
 
 
 def encode_ppm(pixels) -> bytes:
@@ -107,14 +224,12 @@ def encode_ppm(pixels) -> bytes:
 
     arr = np.asarray(pixels, dtype=np.uint8)
     h, w, _ = arr.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.tobytes()
+    return _ppm_prefix(w, h) + arr.tobytes()
 
 
-def decode_ppm(payload: bytes):
-    """Parse binary P6 PPM → (h, w, 3) uint8 ndarray. Real header parsing
-    (whitespace/comment tolerant), numpy frombuffer for pixels."""
-    import numpy as np
-
+def _ppm_header(payload: bytes) -> tuple[int, int, int]:
+    """Parse a binary P6 PPM header (whitespace/comment tolerant) →
+    (pixel offset, w, h); only 8-bit PPMs pass."""
     if payload[:2] != b"P6":
         raise ValueError("not a P6 PPM")
     i, fields = 2, []
@@ -130,21 +245,26 @@ def decode_ppm(payload: bytes):
             j += 1
         fields.append(int(payload[i:j]))
         i = j
-    i += 1  # single whitespace after maxval
     w, h, maxval = fields
     if maxval != 255:
         raise ValueError("only 8-bit PPM supported")
-    return np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i).reshape(
-        h, w, 3
-    )
+    return i + 1, w, h  # single whitespace after maxval
 
 
-def decode_bmp(payload: bytes):
-    """Parse an uncompressed 24-bit BMP (BITMAPINFOHEADER) → (h, w, 3)
-    uint8 RGB ndarray. BMP stores BGR bottom-up with 4-byte row padding."""
-    import struct
-
+def decode_ppm(payload: bytes):
+    """Parse binary P6 PPM → (h, w, 3) uint8 ndarray. Real header parsing
+    (:func:`_ppm_header`), numpy frombuffer for pixels."""
     import numpy as np
+
+    off, w, h = _ppm_header(payload)
+    return np.frombuffer(payload, dtype=np.uint8, count=w * h * 3,
+                         offset=off).reshape(h, w, 3)
+
+
+def _bmp_header(payload: bytes) -> tuple[int, int, int]:
+    """Parse an uncompressed 24-bit BMP's BITMAPINFOHEADER → (pixel
+    offset, w, signed h); rows are stored bottom-up when h > 0."""
+    import struct
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP")
@@ -154,6 +274,15 @@ def decode_bmp(payload: bytes):
     comp = struct.unpack_from("<I", payload, 30)[0]
     if bpp != 24 or comp != 0:
         raise ValueError("only uncompressed 24-bit BMP supported")
+    return pix_off, w, h
+
+
+def decode_bmp(payload: bytes):
+    """Parse an uncompressed 24-bit BMP (BITMAPINFOHEADER) → (h, w, 3)
+    uint8 RGB ndarray. BMP stores BGR bottom-up with 4-byte row padding."""
+    import numpy as np
+
+    pix_off, w, h = _bmp_header(payload)
     stride = (w * 3 + 3) & ~3
     rows = []
     flip = h > 0
@@ -191,9 +320,86 @@ def decode_image(payload: bytes, mime: str | None = None):
         ) from None
 
 
+def _pixel_layout(payload: bytes):
+    """Where a PPM or BMP payload keeps its pixels, read with the header
+    grammar of ``decode_ppm``/``decode_bmp`` (so a header they reject
+    raises the same error here): (offset, (rows, w, row stride,
+    bottom-up, BGR)), pixel row r's 3·w bytes starting at offset +
+    r·stride. None for what ``decode_image`` must decode itself: other
+    formats, an empty image, or pixel rows past the payload's end."""
+    tag = payload[:2]
+    if tag == b"P6":
+        off, w, h = _ppm_header(payload)
+        geometry = h, w, 3 * w, False, False
+    elif tag == b"BM":
+        off, w, h = _bmp_header(payload)
+        geometry = abs(h), w, (w * 3 + 3) & ~3, h > 0, True
+    else:
+        return None
+    rows, w, stride = geometry[:3]
+    if w <= 0 or rows <= 0 or off + (rows - 1) * stride + 3 * w > len(payload):
+        return None
+    return off, geometry
+
+
+def _image_alone(payload):
+    """One payload through ``decode_image`` (a NULL raises as
+    ``bytes(None)`` does): a batch of one image, no geometry."""
+    return decode_image(bytes(payload))[None], None
+
+
+def _pixels(data, starts, geometry):
+    """The (k, h, w, 3) RGB images of one pixel layout (see
+    :func:`_pixel_layout`), as ``decode_image`` returns them."""
+    rows, w, stride, bottom_up, bgr = geometry
+    px = _gather(data, starts, rows, 3 * w, stride).reshape(-1, rows, w, 3)
+    if bgr:
+        px = px[..., ::-1]
+    return px[:, ::-1] if bottom_up else px
+
+
 #: synthetic image geometry: 8×8, R gradient (no wraparound for
 #: doc_id%100 + linear index ≤ 163 < 256 — keeps the mean closed-form)
 IMG_W = IMG_H = 8
+
+_SYNTH_SCHEMA = "{} BIGINT, payload BINARY, mime STRING"
+
+
+def _synth_ids(batch, caller: str):
+    """The id column of a synthesizer's batch as int64 numpy ids."""
+    import pyarrow as pa
+
+    ids = batch.column(0).cast(pa.int64())
+    if ids.null_count:
+        raise ValueError(f"{caller}: NULL {batch.schema.names[0]}")
+    return ids, ids.to_numpy()
+
+
+def _synthesize_images_kernel(batch):
+    """One batch of ``synthesize_images`` payloads, built in one uint8
+    buffer: every row is the same PPM header plus 8×8×3 pixels."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, d = _synth_ids(batch, "synthesize_images")
+    n = len(d)
+    px = np.empty((n, IMG_H, IMG_W, 3), dtype=np.uint8)
+    idx = np.arange(IMG_W * IMG_H, dtype=np.uint8).reshape(IMG_H, IMG_W)
+    px[..., 0] = idx + (d % 100).astype(np.uint8)[:, None, None]
+    px[..., 1] = ((d * 7) % 256)[:, None, None]
+    px[..., 2] = ((d * 13) % 256)[:, None, None]
+    head = np.frombuffer(_ppm_prefix(IMG_W, IMG_H), dtype=np.uint8)
+    rows = np.concatenate([np.broadcast_to(head, (n, len(head))),
+                           px.reshape(n, 3 * IMG_W * IMG_H)], axis=1)
+    width = rows.shape[1]
+    return pa.RecordBatch.from_arrays(
+        [
+            ids,
+            _binary_array(rows, np.arange(0, n * width + 1, width)),
+            pa.repeat("image/x-portable-pixmap", n),
+        ],
+        names=[batch.schema.names[0], "payload", "mime"],
+    )
 
 
 def synthesize_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -201,59 +407,45 @@ def synthesize_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     linear gradient ``(doc_id % 100) + pixel_index``, G/B constant planes
     ``(doc_id*7) % 256`` / ``(doc_id*13) % 256`` — every byte of every
     payload is a real P6 file with a closed-form channel mean, which is
-    what lets the decode path carry an exact SQL oracle."""
+    what lets the decode path carry an exact SQL oracle. An Arrow kernel
+    builds each batch's payloads at once; a NULL id raises."""
+    return _map_arrow(df.select(id_col), _synthesize_images_kernel,
+                      _SYNTH_SCHEMA.format(id_col))
+
+
+def _image_features_kernel(batch, id_col: str):
+    """``image_features`` over one batch: per pixel layout, the channel
+    sums of all its images in one integer reduction."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        idx = np.arange(IMG_W * IMG_H, dtype=np.uint8).reshape(IMG_H, IMG_W)
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                img = np.empty((IMG_H, IMG_W, 3), dtype=np.uint8)
-                img[:, :, 0] = idx + np.uint8(d % 100)
-                img[:, :, 1] = np.uint8((d * 7) % 256)
-                img[:, :, 2] = np.uint8((d * 13) % 256)
-                payloads.append(encode_ppm(img))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "mime": "image/x-portable-pixmap",
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} BIGINT, payload BINARY, mime STRING"
+    n = batch.num_rows
+    size = np.zeros((2, n), np.int32)
+    means = np.zeros((3, n))
+    for rows, px, _ in _grouped(batch.column("payload"), _pixel_layout,
+                                _image_alone, _pixels):
+        k, h, w, _ = px.shape
+        size[:, rows] = [[w], [h]]
+        sums = px.reshape(k, h * w, 3).sum(axis=1, dtype=np.int64)
+        means[:, rows] = (sums / float(h * w)).T
+    return pa.RecordBatch.from_arrays(
+        [batch.column(id_col).cast(pa.int64()), *map(pa.array, size),
+         *map(pa.array, means)],
+        names=[id_col, "width", "height", "mean_r", "mean_g", "mean_b"],
     )
 
 
 def image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Real decode + feature extraction: parse each payload with
-    ``decode_image`` and emit geometry + per-channel means — Arrow-batched
-    ``mapInPandas``, only (id, payload) crosses the Python boundary."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {"width": [], "height": [], "mean_r": [], "mean_g": [],
-                    "mean_b": []}
-            for payload in pdf["payload"]:
-                img = decode_image(bytes(payload))
-                rows["width"].append(img.shape[1])
-                rows["height"].append(img.shape[0])
-                rows["mean_r"].append(float(img[:, :, 0].mean()))
-                rows["mean_g"].append(float(img[:, :, 1].mean()))
-                rows["mean_b"].append(float(img[:, :, 2].mean()))
-            out = pd.DataFrame({id_col: pdf[id_col], **rows})
-            yield out
-
-    return df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} BIGINT, width INT, height INT, mean_r DOUBLE, "
-            "mean_g DOUBLE, mean_b DOUBLE"
-        ),
+    """Real decode + feature extraction: geometry + per-channel means of
+    each payload as ``decode_image`` decodes it. An Arrow kernel parses
+    every header, then reduces all images of one geometry at once; other
+    formats go through ``decode_image`` one row at a time. Only (id,
+    payload) crosses the Python boundary."""
+    return _map_arrow(
+        df.select(id_col, "payload"),
+        partial(_image_features_kernel, id_col=id_col),
+        f"{id_col} BIGINT, width INT, height INT, mean_r DOUBLE, "
+        "mean_g DOUBLE, mean_b DOUBLE",
     )
 
 
@@ -286,29 +478,32 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 64,
 AUDIO_RATE = 8000
 
 
-def encode_wav(samples, sample_rate: int = AUDIO_RATE) -> bytes:
-    """PCM16 mono WAV: 44-byte canonical RIFF header + raw samples."""
+def _wav_prefix(n_pcm: int, sample_rate: int) -> bytes:
+    """The 44-byte canonical RIFF header ``encode_wav`` writes before
+    ``n_pcm`` bytes of PCM16 mono samples."""
     import struct
 
+    return struct.pack(
+        "<4sI4s4sIHHIIHH4sI",
+        b"RIFF", 36 + n_pcm, b"WAVE",
+        b"fmt ", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16,
+        b"data", n_pcm,
+    )
+
+
+def encode_wav(samples, sample_rate: int = AUDIO_RATE) -> bytes:
+    """PCM16 mono WAV: 44-byte canonical RIFF header + raw samples."""
     import numpy as np
 
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(pcm), b"WAVE",
-        b"fmt ", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16,
-        b"data", len(pcm),
-    )
-    return hdr + pcm
+    return _wav_prefix(len(pcm), sample_rate) + pcm
 
 
-def decode_wav(payload: bytes):
-    """Parse a PCM16 mono RIFF/WAVE payload → (samples int16 ndarray,
-    sample_rate). Walks the chunk list (fmt /data may be preceded by
-    LIST/fact chunks in files from other writers)."""
+def _wav_data(payload: bytes) -> tuple[int, int, int]:
+    """Walk a PCM16 mono RIFF/WAVE payload's chunk list (fmt /data may be
+    preceded by LIST/fact chunks in files from other writers) →
+    (start, stop, sample_rate) of the data chunk's bytes."""
     import struct
-
-    import numpy as np
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -316,83 +511,160 @@ def decode_wav(payload: bytes):
     rate, bits, channels, data = None, None, None, None
     while i + 8 <= n:
         cid, sz = payload[i : i + 4], struct.unpack("<I", payload[i + 4 : i + 8])[0]
-        body = payload[i + 8 : i + 8 + sz]
         if cid == b"fmt ":
+            body = payload[i + 8 : i + 8 + sz]
             fmt, channels, rate = struct.unpack("<HHI", body[:8])
             bits = struct.unpack("<H", body[14:16])[0]
             if fmt != 1:
                 raise ValueError(f"wav: only PCM supported, got format {fmt}")
         elif cid == b"data":
-            data = body
+            data = i + 8, min(i + 8 + sz, n)
         i += 8 + sz + (sz & 1)  # chunks are word-aligned
     if rate is None or data is None:
         raise ValueError("wav: missing fmt/data chunk")
     if bits != 16 or channels != 1:
         raise ValueError(f"wav: expected PCM16 mono, got {bits}-bit {channels}ch")
-    return np.frombuffer(data, dtype="<i2"), rate
+    return *data, rate
+
+
+def decode_wav(payload: bytes):
+    """Parse a PCM16 mono RIFF/WAVE payload → (samples int16 ndarray,
+    sample_rate); see :func:`_wav_data`."""
+    import numpy as np
+
+    start, stop, rate = _wav_data(payload)
+    return np.frombuffer(payload[start:stop], dtype="<i2"), rate
+
+
+def _pcm_layout(payload: bytes):
+    """(offset, (n_samples, sample_rate)) of a WAV payload's samples, read
+    with ``decode_wav``'s chunk walk. None for a clip that goes through
+    ``decode_wav`` alone, so that what rejects it raises at its row: an
+    empty or odd-sized data chunk, or a zero sample rate."""
+    start, stop, rate = _wav_data(payload)
+    n = stop - start
+    if n == 0 or n % 2 or rate == 0:
+        return None
+    return start, (n // 2, rate)
+
+
+def _pcm_alone(payload):
+    """One payload through ``decode_wav``: a batch of one clip."""
+    s, rate = decode_wav(bytes(payload))
+    return s[None], (len(s), rate)
+
+
+def _pcm(data, starts, geometry):
+    """The (k, n) int16 samples of clips of one (n, rate) geometry."""
+    width = 2 * geometry[0]
+    return _gather(data, starts, 1, width, width).reshape(-1, width).view(
+        "<i2")
+
+
+def _synthesize_audio_kernel(batch):
+    """One batch of ``synthesize_audio`` payloads, built in one uint8
+    buffer: each row's header and samples are laid out in a row of the
+    longest clip's width, and a mask keeps each row's own bytes."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, d = _synth_ids(batch, "synthesize_audio")
+    n = 64 + d % 64
+    amp = 100 + d % 900
+    ns, which = np.unique(n, return_inverse=True)
+    heads = np.frombuffer(
+        b"".join(_wav_prefix(2 * k, AUDIO_RATE) for k in ns.tolist()),
+        dtype=np.uint8,
+    ).reshape(len(ns), 44)
+    sign = np.where(np.arange(127) % 2, -1, 1)  # 127: the longest clip
+    pcm = (amp[:, None] * sign).astype("<i2").view(np.uint8)
+    rows = np.concatenate([heads[which], pcm], axis=1)
+    lengths = 44 + 2 * n
+    offsets = np.zeros(len(d) + 1, np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    out = rows[np.arange(rows.shape[1]) < lengths[:, None]]
+    return pa.RecordBatch.from_arrays(
+        [ids, _binary_array(out, offsets), pa.repeat("audio/wav", len(d))],
+        names=[batch.schema.names[0], "payload", "mime"],
+    )
 
 
 def synthesize_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic real WAV payloads: a square wave of amplitude
     ``100 + doc_id % 900`` over ``64 + doc_id % 64`` samples — closed-form
     RMS (= amplitude exactly: sqrt of a perfect-square double), peak, and
-    zero-crossing count, so the decode path carries an exact SQL oracle."""
+    zero-crossing count, so the decode path carries an exact SQL oracle.
+    An Arrow kernel builds each batch's payloads at once; a NULL id
+    raises."""
+    return _map_arrow(df.select(id_col), _synthesize_audio_kernel,
+                      _SYNTH_SCHEMA.format(id_col))
+
+
+def _audio_features_kernel(batch, id_col: str):
+    """``audio_features`` over one batch: per (n, rate), the integer sums
+    of squares, peaks and sign changes of all its clips at once."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                n = 64 + int(d) % 64
-                amp = 100 + int(d) % 900
-                s = np.full(n, amp, dtype=np.int16)
-                s[1::2] = -amp
-                payloads.append(encode_wav(s))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": pd.Series(payloads, dtype="object"),
-                    "mime": "audio/wav",
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} BIGINT, payload BINARY, mime STRING"
+    n_rows = batch.num_rows
+    ints = np.zeros((4, n_rows), np.int64)  # n, rate, peak, crossings
+    floats = np.zeros((2, n_rows))  # duration_ms, rms
+    for rows, s, (n, rate) in _grouped(batch.column("payload"), _pcm_layout,
+                                       _pcm_alone, _pcm):
+        duration = n * 1000.0 / rate
+        sq = (s.astype(np.int64) ** 2).sum(axis=1)
+        rms = np.sqrt(sq / float(n))
+        for j in np.flatnonzero(sq >= 2 ** 53):  # a float64 sum may round
+            x = s[j].astype(np.float64)
+            rms[j] = np.sqrt(np.mean(x * x))
+        ints[0, rows], ints[1, rows] = n, rate
+        ints[2, rows] = np.abs(s).max(axis=1)
+        neg = s < 0
+        ints[3, rows] = (neg[:, 1:] != neg[:, :-1]).sum(axis=1)
+        floats[0, rows], floats[1, rows] = duration, rms
+    return pa.RecordBatch.from_arrays(
+        [batch.column(id_col).cast(pa.int64()),
+         pa.array(ints[0]), pa.array(ints[1]), pa.array(floats[0]),
+         pa.array(floats[1]), pa.array(ints[2]), pa.array(ints[3])],
+        names=[id_col, "n_samples", "sample_rate", "duration_ms", "rms",
+               "peak", "zero_crossings"],
     )
 
 
 def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Real decode + audio features: duration, RMS energy, peak, and
     zero-crossing count — the standard audio-quality signals for corpus
-    filtering. Arrow-batched ``mapInPandas``; numpy does the math."""
+    filtering. An Arrow kernel walks every payload's chunk list, then
+    reduces all clips of one length and rate at once."""
+    return _map_arrow(
+        df.select(id_col, "payload"),
+        partial(_audio_features_kernel, id_col=id_col),
+        f"{id_col} BIGINT, n_samples BIGINT, sample_rate BIGINT, "
+        "duration_ms DOUBLE, rms DOUBLE, peak BIGINT, zero_crossings BIGINT",
+    )
+
+
+def _audio_spectral_kernel(batch, id_col: str):
+    """``audio_spectral`` over one batch: headers and samples come from
+    the Arrow buffers, the rfft stays one call per clip (a batched rfft
+    may round differently)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {"n_samples": [], "sample_rate": [], "duration_ms": [],
-                    "rms": [], "peak": [], "zero_crossings": []}
-            for payload in pdf["payload"]:
-                s, rate = decode_wav(bytes(payload))
-                x = s.astype(np.float64)
-                rows["n_samples"].append(len(s))
-                rows["sample_rate"].append(rate)
-                rows["duration_ms"].append(len(s) * 1000.0 / rate)
-                rows["rms"].append(float(np.sqrt(np.mean(x * x))))
-                rows["peak"].append(int(np.abs(s).max()))
-                rows["zero_crossings"].append(
-                    int(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], **rows})
-
-    return df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} BIGINT, n_samples BIGINT, sample_rate BIGINT, "
-            "duration_ms DOUBLE, rms DOUBLE, peak BIGINT, "
-            "zero_crossings BIGINT"
-        ),
+    n_rows = batch.num_rows
+    ints = np.zeros((2, n_rows), np.int64)  # dominant_bin, n_bins
+    freq = np.zeros(n_rows)
+    for rows, s, (n, rate) in _grouped(batch.column("payload"), _pcm_layout,
+                                       _pcm_alone, _pcm):
+        for i, clip in zip(rows.tolist(), s):
+            mag = np.abs(np.fft.rfft(clip.astype(np.float64)))
+            b = int(np.argmax(mag))
+            ints[:, i] = b, len(mag)
+            freq[i] = b * float(rate) / n
+    return pa.RecordBatch.from_arrays(
+        [batch.column(id_col).cast(pa.int64()), pa.array(ints[0]),
+         pa.array(freq), pa.array(ints[1])],
+        names=[id_col, "dominant_bin", "dominant_freq_hz", "n_bins"],
     )
 
 
@@ -401,7 +673,8 @@ def audio_spectral(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     samples and report the dominant bin, its frequency, and the bin
     count — the frequency-domain signals an audio-curation pass keys on
     (speech/music/noise discrimination starts at "where does the energy
-    live"). Arrow-batched ``mapInPandas``; numpy's FFT does the math.
+    live"). An Arrow kernel reads the samples; numpy's FFT does the math,
+    one clip per call.
 
     Exactness: the synthetic corpus is the Nyquist-alternating square
     wave, whose spectrum is closed-form — |X[m]| = a·|sin(nθ/2)/sin(θ/2)|
@@ -410,29 +683,11 @@ def audio_spectral(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     an exact SQL oracle (same trick as the RMS gate: a genuinely
     computed quantity whose value is provably closed-form on this
     corpus)."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {"dominant_bin": [], "dominant_freq_hz": [],
-                    "n_bins": []}
-            for payload in pdf["payload"]:
-                s, rate = decode_wav(bytes(payload))
-                mag = np.abs(np.fft.rfft(s.astype(np.float64)))
-                b = int(np.argmax(mag))
-                n = len(s)
-                rows["dominant_bin"].append(b)
-                rows["dominant_freq_hz"].append(b * float(rate) / n)
-                rows["n_bins"].append(len(mag))
-            yield pd.DataFrame({id_col: pdf[id_col], **rows})
-
-    return df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} BIGINT, dominant_bin BIGINT, "
-            "dominant_freq_hz DOUBLE, n_bins BIGINT"
-        ),
+    return _map_arrow(
+        df.select(id_col, "payload"),
+        partial(_audio_spectral_kernel, id_col=id_col),
+        f"{id_col} BIGINT, dominant_bin BIGINT, dominant_freq_hz DOUBLE, "
+        "n_bins BIGINT",
     )
 
 

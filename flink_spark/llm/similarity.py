@@ -366,13 +366,9 @@ def pq_encode(
         # add-after-train path (one driver job per call saved)
         sub = len(books[0][0])
         return _pq_encode_with_books(cv, m, sub, books, recon), books
-    d = len(candidates.select(vec).first()[0])
-    if d % m:
-        raise ValueError(f"pq: dim {d} not divisible by m={m}")
-    sub = d // m
     books = pq_train(candidates, cand_id=cand_id, vec=vec, m=m, ks=ks,
                      train_limit=train_limit)
-    return _pq_encode_with_books(cv, m, sub, books, recon), books
+    return _pq_encode_with_books(cv, m, len(books[0][0]), books, recon), books
 
 
 #: driver-side training-sample budget in rows×dim ELEMENTS (float64):
@@ -400,9 +396,22 @@ def pq_train(
     assignment breaks distance ties toward the lowest code (numpy argmin
     = first occurrence); mean updates are 9-digit-rounded; empty clusters
     keep their previous centroid."""
+    head = candidates.select(vec).first()
+    if head is None:
+        raise ValueError(
+            "pq: the candidate frame is empty; codebooks need at least "
+            f"ks={ks} vectors to train on"
+        )
+    return _pq_train(candidates, len(head[0]), cand_id, vec, m, ks,
+                     train_limit, n_iter)
+
+
+def _pq_train(candidates: DataFrame, d: int, cand_id: str, vec: str,
+              m: int, ks: int, train_limit: int | None, n_iter: int) -> list:
+    """:func:`pq_train` on a corpus whose vectors have ``d`` dimensions,
+    for a caller that has already read a row (no probe job)."""
     import numpy as np
 
-    d = len(candidates.select(vec).first()[0])
     if d % m:
         raise ValueError(f"pq: dim {d} not divisible by m={m}")
     sub = d // m

@@ -398,7 +398,7 @@ COLLECT_ALLOWLIST: dict = {
         (1, "scalar SUM(potential) convergence probe — one row"),
     ("llm/clustering.py", "kmeans"):
         (2, "init limit(k) rows; update k×d group means — both tiny"),
-    ("llm/similarity.py", "pq_train"):
+    ("llm/similarity.py", "_pq_train"):
         (1, "training sample byte-capped at rows×dim ≤ "
             "PQ_TRAIN_BUDGET_ELEMS (applies for train_limit=None too)"),
     ("formats/avro.py", "write_avro"):

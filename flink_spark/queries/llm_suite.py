@@ -405,12 +405,12 @@ def llm_multimodal_meta(spark, sf_dir):
 )
 def llm_multimodal_features(spark, sf_dir):
     """Arrow-batched feature extraction over binary payloads (the
-    codec-free `_fake_decode` byte-stats path — see
-    flink_spark/llm/multimodal.py). Exactified in r8: the byte-level
+    codec-free byte-stats kernel — see flink_spark/llm/multimodal.py
+    extract_features). Exactified in r8: the byte-level
     features (mean/min/max over the UTF-8 payload) are reproduced in
     DuckDB by hex-encoding the payload and folding over the parsed byte
-    list, so the pandas-UDF batch path is value-checked end to end (both
-    engines fold an exact integer sum, then one double divide)."""
+    list, so the Arrow kernel is value-checked end to end (both engines
+    fold an exact integer sum, then one double divide)."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.extract_features(MM.attach_binary(docs))
 
@@ -491,9 +491,9 @@ def llm_multimodal_decode(spark, sf_dir):
     """REAL image decode path (no codec stub): deterministic 8×8 P6 PPM
     payloads synthesized per doc (R gradient doc_id%100 + pixel index —
     no uint8 wraparound, so the channel mean is closed-form; G/B constant
-    planes), then decoded back by parsing the actual PPM bytes
-    (multimodal.decode_image: header parse + numpy frombuffer) and
-    reduced to geometry + per-channel means. The exact oracle holds iff
+    planes), then decoded back by parsing the actual PPM headers (the
+    grammar of multimodal.decode_ppm) and reduced to geometry +
+    per-channel means, one Arrow kernel per batch. The exact oracle holds iff
     every pixel of every payload round-trips correctly."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.image_features(MM.synthesize_images(docs))

@@ -53,6 +53,7 @@ from flink_spark.streaming.storeutil import (
     fold_bid_partitions,
     has_parquet,
     prepare_root,
+    read_store,
     recover_swap,
     run_drain,
     write_bid_partition,
@@ -73,17 +74,28 @@ def _save_centroids(path: str, cents: list[list[float]]) -> None:
     os.replace(tmp, path)
 
 
+def _store_key(kind: str, stream: DataFrame, id_col: str,
+               vec_col: str) -> str:
+    """The schema-memo key of an index store (``storeutil.read_store``):
+    every ingest writes to a fresh root, but the store's schema follows
+    from the stream's id and vector column types alone."""
+    id_f, vec_f = stream.select(id_col, vec_col).schema
+    return (f"{kind}:{id_col} {id_f.dataType.simpleString()},"
+            f"{vec_col} {vec_f.dataType.simpleString()}")
+
+
 class IvfStreamIndex:
     """Handle over an ingested IVF store: frozen centroids + the
     accumulated (cell, id, vec) rows; ``topk`` probes it."""
 
     def __init__(self, spark, root: str, id_col: str, vec_col: str,
-                 persistent: bool):
+                 persistent: bool, store_key: str | None = None):
         self.spark = spark
         self.root = root
         self.id_col = id_col
         self.vec_col = vec_col
         self.persistent = persistent
+        self.store_key = store_key
         self.centroids = _load_centroids(f"{root}/centroids.json") or []
 
     def assigned(self) -> DataFrame:
@@ -101,9 +113,9 @@ class IvfStreamIndex:
                 f"{self.id_col} long, {self.vec_col} array<double>, "
                 f"__cell int",
             )
-        return self.spark.read.parquet(f"{self.root}/cells").select(
-            self.id_col, self.vec_col, "__cell"
-        )
+        return read_store(
+            self.spark, f"{self.root}/cells", self.store_key
+        ).select(self.id_col, self.vec_col, "__cell")
 
     def topk(self, queries: DataFrame, k: int = 5, n_probe: int = 2,
              query_id: str = "query_id", vec: str = "embedding",
@@ -221,7 +233,8 @@ def ivf_ingest_stream(
     # partitioned store root would conflict with later __bid=/__cell=
     # partition dirs on resume; assigned()/topk() handle the absent
     # store by returning empty frames instead
-    return IvfStreamIndex(spark, root, id_col, vec_col, persistent)
+    return IvfStreamIndex(spark, root, id_col, vec_col, persistent,
+                          _store_key("ivf_cells", stream, id_col, vec_col))
 
 
 class PqStreamIndex:
@@ -230,12 +243,13 @@ class PqStreamIndex:
     ADC-shortlist + exact-rerank search over it."""
 
     def __init__(self, spark, root: str, id_col: str, vec_col: str,
-                 persistent: bool):
+                 persistent: bool, store_key: str | None = None):
         self.spark = spark
         self.root = root
         self.id_col = id_col
         self.vec_col = vec_col
         self.persistent = persistent
+        self.store_key = store_key
         self.books = _load_centroids(f"{root}/codebooks.json") or []
 
     def encoded(self) -> DataFrame:
@@ -249,9 +263,9 @@ class PqStreamIndex:
                 f"{self.id_col} long, {self.vec_col} array<double>, "
                 f"__code array<int>",
             )
-        return self.spark.read.parquet(f"{self.root}/codes").select(
-            self.id_col, self.vec_col, "__code"
-        )
+        return read_store(
+            self.spark, f"{self.root}/codes", self.store_key
+        ).select(self.id_col, self.vec_col, "__code")
 
     def _recon_col(self) -> Column:
         """Codebook reconstruction as one JVM expression over the stored
@@ -365,20 +379,22 @@ def pq_ingest_stream(
     recover_swap(codes_store)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        from flink_spark.llm.similarity import pq_encode, pq_train
+        from flink_spark.llm.similarity import _pq_train, pq_encode
 
         sess = batch.sparkSession
         books = _load_centroids(books_path)
         if books is None:
-            # emptiness probe ONLY while untrained — see ivf_ingest's
+            # one probe job, and ONLY while untrained — see ivf_ingest's
             # process(): after the books freeze, an empty batch's
-            # dynamic-partition overwrite writes nothing, so the
-            # per-batch probe job is pure overhead.
-            if batch.isEmpty():
+            # dynamic-partition overwrite writes nothing, so a per-batch
+            # probe is pure overhead. The first row shows both that the
+            # batch is non-empty and the dimension training needs.
+            head = batch.select(vec_col).first()
+            if head is None:
                 return
-            books = pq_train(
-                batch, cand_id=id_col, vec=vec_col, m=m, ks=ks,
-                train_limit=train_limit, n_iter=n_iter,
+            books = _pq_train(
+                batch, len(head[0]), id_col, vec_col, m, ks, train_limit,
+                n_iter,
             )
             _save_centroids(books_path, books)
         enc, _ = pq_encode(
@@ -398,4 +414,5 @@ def pq_ingest_stream(
 
     run_drain(stream, process, ckpt)
     # no bootstrap write on an empty drain (see ivf_ingest_stream)
-    return PqStreamIndex(spark, root, id_col, vec_col, persistent)
+    return PqStreamIndex(spark, root, id_col, vec_col, persistent,
+                         _store_key("pq_codes", stream, id_col, vec_col))

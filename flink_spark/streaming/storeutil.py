@@ -51,7 +51,8 @@ def read_store(
     dirs infer back as int regardless of the literal's write-side
     type). ``key`` overrides the memo key for stores whose PATH rotates
     while the schema stays fixed (``idleness.aligned_union_trace``'s
-    per-round buffer dirs)."""
+    per-round buffer dirs, and the ANN index stores of
+    ``ann_stream``, whose every ingest writes a fresh root)."""
     df = None
 
     def infer():

@@ -395,3 +395,33 @@ def test_pq_empty_batch_after_training_leaves_store_identical(
     ]
     rows1 = sorted(map(tuple, idx1.topk(_queries(spark, sf_dir)).collect()))
     assert rows1 == rows0
+
+
+def test_index_store_schema_memo_matches_inference(spark, sf_dir, tmp_path):
+    """Every ingest writes a fresh root, so the index stores' schema memo
+    is keyed on the stream's id and vector types, not on the path: a
+    second ingest's ``encoded()``/``assigned()`` reuses the first one's
+    schema, which must equal what inferring from its own files gives."""
+    from flink_spark.streaming.ann_stream import pq_ingest_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    cands = _cands(spark, sf_dir)
+    _land(cands, tmp_path, src, "b0")
+    for ingest, read, store in (
+        (pq_ingest_stream, "encoded", "codes"),
+        (ivf_ingest_stream, "assigned", "cells"),
+    ):
+        first, second = (
+            ingest(spark.readStream.schema(cands.schema).parquet(str(src)),
+                   root=str(tmp_path / f"{store}_{i}"))
+            for i in range(2)
+        )
+        assert first.store_key == second.store_key
+        getattr(first, read)().count()  # the miss: infers and memoizes
+        memoized = getattr(second, read)()
+        inferred = spark.read.parquet(f"{second.root}/{store}").select(
+            *memoized.columns)
+        assert memoized.schema == inferred.schema
+        assert sorted(map(tuple, memoized.collect())) == sorted(
+            map(tuple, inferred.collect()))

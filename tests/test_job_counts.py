@@ -17,8 +17,9 @@ from flink_spark.queries.registry import QUERIES
 
 JOBS = {
     "stream_watermark_alignment": 18,
-    "stream_pq_ingest": 13,
+    "stream_pq_ingest": 11,
     "llm_dedup_clusters": 28,
+    "llm_multimodal_decode": 1,
 }
 
 _PROBES = itertools.count()

@@ -279,6 +279,22 @@ def test_pq_codebook_reuse(spark):
         pq_encode(df, m=8, ks=4, books=books)
 
 
+def test_pq_training_rejects_an_empty_frame(spark):
+    """Training reads one row for the vector dimension; on an empty
+    frame there is none, and both entry points say so instead of
+    failing on ``None[0]``."""
+    import pytest
+
+    from flink_spark.llm.similarity import pq_encode, pq_train
+
+    empty = spark.createDataFrame(
+        [], "cand_id bigint, embedding array<double>")
+    with pytest.raises(ValueError, match="candidate frame is empty"):
+        pq_train(empty, m=4, ks=4)
+    with pytest.raises(ValueError, match="candidate frame is empty"):
+        pq_encode(empty, m=4, ks=4)
+
+
 def test_pq_saved_books_dim_mismatch_raises(spark):
     """The saved-books path derives sub from the books and never probes
     the data, so a caller whose vector dim doesn't match m×sub used to

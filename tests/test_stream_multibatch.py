@@ -5,61 +5,33 @@ matches/emissions must span buffer state carried across batches."""
 
 from __future__ import annotations
 
-import shutil
-
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF_DIR
 
 
-@pytest.fixture(scope="module")
-def chunked_events_dir(tmp_path_factory):
-    """sf0.001 events split into 4 parquet files by ts quartile."""
-    d = tmp_path_factory.mktemp("events_chunks")
-    pdf = pd.read_parquet(f"{SMOKE_SF_DIR}/events.parquet")
-    pdf = pdf.sort_values("ts").reset_index(drop=True)
-    n = len(pdf)
-    for i in range(4):
-        pdf.iloc[i * n // 4 : (i + 1) * n // 4].to_parquet(
-            d / f"part-{i}.parquet", index=False
-        )
-    yield str(d)
-    shutil.rmtree(str(d), ignore_errors=True)
-
-
-def _stream_chunks(spark, dir_path, watermark, pre_filter=None):
-    """``pre_filter`` is applied BEFORE withWatermark, so the watermark
-    stats deterministically reflect the filtered rows — whether Catalyst
+def _stream_chunks(spark, watermark, pre_filter=None):
+    """sf0.001 events in 4 ``ts``-ordered micro-batches. ``pre_filter``
+    is applied BEFORE withWatermark, so the watermark stats
+    deterministically reflect the filtered rows — whether Catalyst
     pushes a post-watermark filter below the EventTimeWatermark node is
     version/plan dependent, and the test model must not hinge on it."""
-    from flink_spark.streaming.core import prepare_session
+    from flink_spark.streaming.core import stream_table
 
-    prepare_session(spark)
-    schema = spark.read.parquet(dir_path).schema
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir_path)
-    )
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-        )
+    df = stream_table(spark, SMOKE_SF_DIR, "events", n_chunks=4, order="ts")
     if pre_filter is not None:
         df = df.filter(pre_filter)
     col, delay = watermark
     return df.withColumn(col, F.col(col).cast("timestamp")).withWatermark(col, delay)
 
 
-def test_temporal_sort_across_batches(spark, chunked_events_dir):
+def test_temporal_sort_across_batches(spark):
     from flink_spark.streaming.core import run_to_memory
     from flink_spark.streaming.temporal_sort import temporal_sort
 
     ev = _stream_chunks(
-        spark, chunked_events_dir, ("ts", "5 seconds"),
-        pre_filter=F.col("user_id") <= 20,
+        spark, ("ts", "5 seconds"), pre_filter=F.col("user_id") <= 20,
     )
     out = temporal_sort(
         ev.select("event_id", "user_id", "ts"),
@@ -84,7 +56,7 @@ def test_temporal_sort_across_batches(spark, chunked_events_dir):
     assert (mg.seq_got == mg.seq_exp).all()
 
 
-def test_stream_cep_across_batches(spark, chunked_events_dir):
+def test_stream_cep_across_batches(spark):
     from flink_spark.operators.cep import Pattern, match_pattern
     from flink_spark.sources.tables import load_table
     from flink_spark.streaming.cep_stream import stream_match_pattern
@@ -95,7 +67,7 @@ def test_stream_cep_across_batches(spark, chunked_events_dir):
         .next("B", lambda r: r["event_type"] == "purchase")
         .within("30 minutes")
     )
-    ev = _stream_chunks(spark, chunked_events_dir, ("ts", "10 seconds"))
+    ev = _stream_chunks(spark, ("ts", "10 seconds"))
     m = stream_match_pattern(
         ev.select("user_id", "ts", "event_id", "event_type"),
         pat, key_cols=["user_id"], ts_col="ts", order_cols=["ts", "event_id"],
