@@ -44,7 +44,7 @@ import threading
 from collections import OrderedDict
 
 from py4j.protocol import Py4JError
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: The engine's one memo of batch-independent plan pieces: expression
@@ -117,3 +117,15 @@ def _literal_column(spark: SparkSession, sql: str) -> Column:
         # TypeError calling a JVM class that no longer exists) or a plan
         # the optimizer did not fold to one Literal (ValueError above)
         return F.expr(sql)
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of the DDL ``schema``, built on the JVM as an empty
+    ``LocalRelation``. ``createDataFrame([], schema)`` builds a Python
+    RDD instead, and collecting that runs a Spark job; this collects with
+    none."""
+    jschema = spark._jvm.org.apache.spark.sql.types.StructType.fromDDL(
+        schema)
+    jdf = spark._jsparkSession.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jschema)
+    return DataFrame(jdf, spark)

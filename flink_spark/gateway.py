@@ -450,8 +450,10 @@ class SqlGatewayServer:
                     op.status = "FINISHED"
             except Exception as e:  # noqa: BLE001
                 if op.status != "CANCELED":
-                    op.status = "ERROR"
+                    # error before status: a status poll that sees ERROR
+                    # must also see its message
                     op.error = str(e)
+                    op.status = "ERROR"
             finally:
                 try:
                     sc.setJobGroup(None, None)
@@ -731,8 +733,8 @@ class SqlGatewayServer:
                                     "current page may be re-fetched"]}
         except Exception as e:  # noqa: BLE001
             if op.status != "CANCELED":
-                op.status = "ERROR"
                 op.error = str(e)
+                op.status = "ERROR"
             return 500, {"resultType": op.status, "errors": [op.error or ""]}
         if not page and int(token) > 0:
             return 200, {"resultType": "EOS",

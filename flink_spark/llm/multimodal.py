@@ -120,6 +120,11 @@ def _grouped(col, layout, alone, gather):
     ``alone(payload)`` must decode by itself (``payload`` is None for a
     NULL row); ``gather(data, starts, geometry)`` decodes a group.
 
+    A parse that ``layout`` returns may read nothing of the payload but
+    its length and its bytes before the offset. So a payload of the same
+    length that starts with the previous parse's header bytes reuses that
+    parse, exactly: a batch from one writer parses one header.
+
     Yields (row indices, decoded rows, geometry). A payload decoded alone
     is yielded when its row is reached, so the first payload to raise is
     the first one in row order that a row-by-row decode rejects."""
@@ -129,12 +134,19 @@ def _grouped(col, layout, alone, gather):
     raw = data.tobytes()
     valid = col.is_valid().to_numpy(zero_copy_only=False).tolist()
     groups: dict = {}
+    head, size, found = None, -1, None
     for i, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
-        payload = raw[s:e] if valid[i] else None
-        found = None if payload is None else layout(payload)
-        if found is None:
-            yield (np.array([i]), *alone(payload))
+        if not valid[i]:
+            yield (np.array([i]), *alone(None))
             continue
+        if e - s != size or not raw.startswith(head, s):
+            payload = raw[s:e]
+            found = layout(payload)
+            if found is None:
+                size = -1
+                yield (np.array([i]), *alone(payload))
+                continue
+            head, size = payload[:found[0]], e - s
         off, geometry = found
         rows, at = groups.setdefault(geometry, ([], []))
         rows.append(i)
@@ -333,6 +345,8 @@ def _pixel_layout(payload: bytes):
         geometry = h, w, 3 * w, False, False
     elif tag == b"BM":
         off, w, h = _bmp_header(payload)
+        if off < 34:  # pixels inside the header _bmp_header reads
+            return None
         geometry = abs(h), w, (w * 3 + 3) & ~3, h > 0, True
     else:
         return None
@@ -540,10 +554,11 @@ def _pcm_layout(payload: bytes):
     """(offset, (n_samples, sample_rate)) of a WAV payload's samples, read
     with ``decode_wav``'s chunk walk. None for a clip that goes through
     ``decode_wav`` alone, so that what rejects it raises at its row: an
-    empty or odd-sized data chunk, or a zero sample rate."""
+    empty or odd-sized data chunk, or a zero sample rate; and a clip
+    whose walk read a chunk header after the samples."""
     start, stop, rate = _wav_data(payload)
     n = stop - start
-    if n == 0 or n % 2 or rate == 0:
+    if n == 0 or n % 2 or rate == 0 or stop + 8 <= len(payload):
         return None
     return start, (n // 2, rate)
 

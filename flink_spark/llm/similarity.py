@@ -330,8 +330,8 @@ def pq_encode(
     into ``ks`` codes → an m-byte code per vector (d·4 bytes → m bytes,
     32× compression at d=64/m=8). Returns (encoded_df, codebooks) where
     ``encoded_df`` carries the code AND, unless ``recon=False``, the
-    codebook reconstruction ``__recon`` — the decoded form ADC scoring
-    uses.
+    codebook reconstruction ``__recon`` (the search, :func:`pq_search`,
+    rebuilds it from the codes itself).
 
     Scale shape: codebooks are m·ks·(d/m) floats (tiny, shipped with the
     task); encoding is one map-only pass, an Arrow-batched numpy kernel
@@ -548,24 +548,6 @@ def _pq_encode_with_books(cv: DataFrame, m: int, sub: int, books: list,
     return cv.mapInArrow(encode, StructType(fields))
 
 
-def unique_queries(q: DataFrame, query_id: str, caller: str) -> DataFrame:
-    """The (``query_id``, ``__qv``) query side of a rerank, aggregated
-    by ``query_id``. A rerank re-attaches query vectors by id, where a
-    repeated id would multiply rows, so one fails the job instead. The
-    side is tiny and gets broadcast whole, so it is aggregated in one
-    partition: no exchange, and no extra shuffle job before the
-    broadcast."""
-    return q.coalesce(1).groupBy(query_id).agg(
-        F.count(F.lit(1)).alias("__n"), F.first("__qv").alias("__qv")
-    ).select(
-        query_id,
-        F.when(F.col("__n") == 1, F.col("__qv")).otherwise(F.raise_error(
-            F.concat(F.lit(f"{caller}: duplicate query_id "),
-                     F.col(query_id).cast("string"))
-        )).alias("__qv"),
-    )
-
-
 def pq_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -582,9 +564,10 @@ def pq_topk(
 ) -> DataFrame:
     """PQ ANN with exact rerank (the standard two-stage retrieve+rerank):
     score every candidate by cosine against its CODEBOOK RECONSTRUCTION
-    (asymmetric-distance semantics as one JVM expression — the compressed
-    index is all a 100 TB scan would touch), keep a per-query shortlist,
-    then rerank only the shortlist with true vectors. The default
+    (asymmetric distance: the scan reads only the codes, and the
+    reconstruction is rebuilt from them in the search kernel), keep a
+    per-query shortlist, then rerank only the shortlist with true
+    vectors (:func:`pq_search`). The default
     shortlist is 30·k — rows-independent, so the default plan needs no
     corpus count action (r10; the r9 default's 8%-of-corpus term forced
     a full count per call and is not a shortlist at 100 TB). Because
@@ -595,45 +578,286 @@ def pq_topk(
     companion recall gates pin their own widths)."""
     if shortlist is None:
         shortlist = 30 * k
-    enc, _ = pq_encode(candidates, cand_id, vec, m, ks, seed, books=books,
-                       train_limit=train_limit)
+    enc, books = pq_encode(candidates, cand_id, vec, m, ks, seed,
+                           books=books, train_limit=train_limit,
+                           recon=False)
     q = queries.select(query_id, F.col(vec).alias("__qv"))
-    # ADC-score in the scan stage and shuffle ONLY (query_id, cand_id,
-    # __approx) into the shortlist window (guide §2.3): the old shape
-    # carried __qv + __recon (two d-dim payloads) through the exchange
-    # per candidate. The query vector is re-attached to the k·shortlist
-    # survivors by re-joining the (broadcast, tiny) query set — queries
-    # are keyed by a unique query_id, the search-API contract.
-    approx = (
-        F.broadcast(q)
-        .crossJoin(enc.select(cand_id, "__recon"))
-        .select(
-            query_id, cand_id, cosine("__qv", "__recon").alias("__approx")
-        )
-    )
-    ws = Window.partitionBy(query_id).orderBy(F.desc("__approx"), F.asc(cand_id))
-    short = (
-        approx.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
-        .select(query_id, cand_id)
-    )
-    # exact rerank of the shortlist only — true vectors join back by
-    # cand_id, query vectors by broadcast; the final top-k window again
-    # shuffles narrow scored rows, not payloads. The re-join is where a
-    # repeated query_id would multiply rows, so the contract is enforced
-    # there: the (tiny) query side fails the job on a duplicate id.
-    true_vec = candidates.select(cand_id, F.col(vec).alias("__cv"))
-    rer = (
-        short.join(true_vec, cand_id)
-        .join(F.broadcast(unique_queries(q, query_id, "pq_topk")), query_id)
-        .select(query_id, cand_id, cosine("__qv", "__cv").alias("cos_sim"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
+    return pq_search(q, enc, books, k, shortlist, query_id, "pq_topk")
+
+
+def pq_search(queries: DataFrame, enc: DataFrame, books: list, k: int,
+              shortlist: int, query_id: str = "query_id",
+              caller: str = "pq_search") -> DataFrame:
+    """Top-``k`` of each query over PQ-encoded rows: a shortlist of the
+    ``shortlist`` best by ADC cosine (against the codebook
+    reconstruction), reranked by exact cosine. ``queries`` holds
+    (``query_id``, ``__qv``) rows with unique ids; ``enc`` holds (id,
+    ``__cv``, ``__code``) rows, ``__code`` 1-based as :func:`pq_encode`
+    writes it. Returns (``query_id``, id, ``cos_sim``, ``rank``) with
+    ``cos_sim`` rounded to 12 digits; both orderings break ties by the
+    lower id.
+
+    The queries are collected to the driver once (the broadcast they
+    replace put them there too); a NULL ``query_id`` has no result, and
+    a repeated one raises. One Arrow kernel per partition of ``enc``
+    keeps each query's local shortlist (:func:`_pq_scored`); Spark then
+    cuts the global shortlist and the top ``k``. Every row of the global
+    shortlist is in its partition's local one, so the result is that of
+    scoring every pair in Spark. An id shared by several rows reranks
+    each row with its own vector."""
+    spark = queries.sparkSession
+    qt = queries.select(query_id, "__qv").toArrow()
+    qt = qt.filter(qt.column(0).is_valid())
+    if qt.num_rows:
+        import pyarrow.compute as pc
+
+        counts = pc.value_counts(qt.column(0))
+        dup = counts.filter(pc.greater(counts.field("counts"), 1))
+        if len(dup):
+            raise ValueError(f"{caller}: duplicate query_id "
+                             f"{dup.field('values')[0].as_py()}")
+    qf, cf = queries.schema[query_id], enc.schema[0]
+    if not qt.num_rows or shortlist < 1:
+        from flink_spark.exprutil import empty_frame
+
+        return empty_frame(
+            spark, f"`{query_id}` {qf.dataType.simpleString()}, "
+                   f"`{cf.name}` {cf.dataType.simpleString()}, "
+                   "cos_sim double, rank int")
+    ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
+    scored = _pq_scored(qt, qf, enc, books, shortlist, ansi)
+    qi, ci = f"`{query_id}`", f"`{cf.name}`"
+    part = f"PARTITION BY {qi} ORDER BY"
+    # SQL text: one py4j call per step, where Column builders make ~40.
+    # The exact cosine is divided after the global cut, so that a zero
+    # norm fails (ANSI) or nulls only the rows a Spark rerank would have
+    # scored. A NULL id holds its shortlist place but has no vector to
+    # rerank by id, so it leaves with the cut.
     return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("cos_sim", 12).alias("cos_sim"), "rank")
+        scored.selectExpr(
+            "*", f"row_number() OVER ({part} __approx DESC, {ci}) AS __sr")
+        .where(f"__sr <= {shortlist} AND {ci} IS NOT NULL")
+        .selectExpr(qi, ci, "__dot / __den AS cos_sim")
+        .selectExpr(
+            "*", f"row_number() OVER ({part} cos_sim DESC, {ci}) AS rank")
+        .where(f"rank <= {k}")
+        .selectExpr(qi, ci, "round(cos_sim, 12) AS cos_sim", "rank")
     )
+
+
+def _pq_scored(qt, qfield, enc: DataFrame, books: list, shortlist: int,
+               ansi: bool) -> DataFrame:
+    """Each partition's local ADC shortlist of every query in Arrow
+    table ``qt`` (id, vector) over ``enc``'s (id, ``__cv``, ``__code``)
+    rows: (query id, id, ``__approx``, ``__dot``, ``__den``), the exact
+    cosine being ``__dot / __den``.
+
+    Per bounded chunk of rows, one numpy kernel rebuilds the vectors from
+    the codes, scores every (query, row) pair, and merges the chunk into
+    a running top-``shortlist`` per query in Spark's window order:
+    ``__approx`` descending with NaN first, NULL last and −0.0 equal to
+    0.0, then the id ascending with NULL first. Every row tied with the
+    last one kept at the cut stays. The exact dot product and norm
+    product are computed only for a row that enters the running
+    shortlist. Memory is bounded by
+    queries × (``shortlist`` + chunk rows).
+
+    Both scores are bit-identical to :func:`cosine`: each dot product
+    starts at 0.0 and adds ``x·y`` in dimension order, float elements
+    widen exactly to double, and the norms are doubles; a NULL vector or
+    element, or two lengths that differ, give a NULL score, and NaN
+    propagates. A zero ADC norm product raises under ANSI, as Spark's
+    division does, and is NULL otherwise.
+
+    The worker code is nested so that cloudpickle ships it by value, as
+    ``_pq_encode_with_books`` does."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    B = np.asarray(books, dtype=np.float64)
+    m, ks, sub = B.shape
+    d = m * sub
+    s = shortlist
+    qids = qt.column(0).combine_chunks()
+    vecs = qt.column(1).to_pylist()
+    nq = len(vecs)
+    qlen = np.array([-1 if v is None else len(v) for v in vecs])
+    qok = np.array([v is not None and None not in v for v in vecs])
+    QV = np.zeros((nq, max(d, int(qlen.max()))))
+    for i, v in enumerate(vecs):
+        if qok[i]:
+            QV[i, :len(v)] = v
+    # zero padding adds exact +0.0 terms, which leave a fold that starts
+    # at +0.0 unchanged
+    qq = np.zeros(nq)
+    for t in range(QV.shape[1]):
+        qq = qq + QV[:, t] * QV[:, t]
+    qn = np.sqrt(qq)
+    adc = np.flatnonzero(qok & (qlen == d))
+    QA, nA = QV[adc, :d], qn[adc]
+    on_adc = np.full(nq, -1)
+    on_adc[adc] = np.arange(len(adc))
+    # rows per kernel call: the rows×d reconstruction and the
+    # queries×rows score arrays stay ~8 MB each
+    rows = max(1, 2 ** 20 // max(d, nq))
+    names = [qfield.name, enc.schema[0].name, "__approx", "__dot", "__den"]
+    schema = StructType([qfield, enc.schema[0]] + [
+        StructField(n, DoubleType()) for n in names[2:]])
+
+    def dense(col, width):
+        """(n, width) doubles of list array ``col``, and the mask of rows
+        that are non-null, ``width`` long and free of NULL elements
+        (the other rows hold zeros)."""
+        n = len(col)
+        lens = col.value_lengths().fill_null(0).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        ok = col.is_valid().to_numpy(zero_copy_only=False) & (lens == width)
+        flat = col.flatten()
+        vals = np.asarray(flat.to_numpy(zero_copy_only=False), np.float64)
+        if flat.null_count:
+            bad = np.bincount(
+                np.repeat(np.arange(n), lens),
+                weights=flat.is_null().to_numpy(zero_copy_only=False),
+                minlength=n)
+            ok &= bad == 0
+        if ok.all():
+            return vals.reshape(n, width), ok
+        out = np.zeros((n, width))
+        at = np.cumsum(lens) - lens
+        out[ok] = vals[at[ok, None] + np.arange(width)]
+        return out, ok
+
+    def fold(X, Y):
+        """The p dot products of the columns of Y (width, p) with those
+        of X (width, p, or width, 1 for one vector), summed in order."""
+        acc = np.zeros(Y.shape[1])
+        for t in range(X.shape[0]):
+            acc = acc + X[t] * Y[t]
+        return acc
+
+    def adc_scores(codes):
+        """(adc queries, n) ADC cosines of a chunk and their NULL mask."""
+        n = len(codes)
+        C, cok = dense(codes, m)
+        code = C.astype(np.int64)
+        code[~cok] = 1
+        if ((code < 1) | (code > ks)).any():
+            raise ValueError(f"pq_search: a code outside 1..{ks}")
+        RT = np.ascontiguousarray(B[np.arange(m), code - 1].reshape(n, d).T)
+        dot = np.zeros((len(adc), n))
+        tmp = np.empty_like(dot)
+        for t in range(d):
+            np.multiply(QA[:, t, None], RT[t], out=tmp)
+            np.add(dot, tmp, out=dot)
+        den = nA[:, None] * np.sqrt(fold(RT, RT))[None, :]
+        null = np.broadcast_to(~cok, dot.shape)
+        zero = (den == 0) & ~null
+        if zero.any():
+            if ansi:
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                    "query or codebook reconstruction in the ADC cosine")
+            null = null | zero
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return dot / den, null
+
+    def exact(qi, cv):
+        """Exact (dot, norm product, NULL) of query ``qi`` against the
+        vectors of list array ``cv``."""
+        n = len(cv)
+        if not qok[qi]:
+            return np.zeros(n), np.zeros(n), np.ones(n, bool)
+        X, xok = dense(cv, int(qlen[qi]))
+        XT = np.ascontiguousarray(X.T)
+        dot = fold(QV[qi, :qlen[qi], None], XT)
+        return dot, qn[qi] * np.sqrt(fold(XT, XT)), ~xok
+
+    def merge(st, qi, cls, neg, key, apx, rb):
+        """The top-``s`` (with ties) of query ``qi``'s state ``st`` and
+        chunk ``rb``, as a new state; the exact scores are computed for
+        the chunk rows it takes."""
+        ns = 0 if st is None else len(st["key"])
+        both = key if st is None else np.concatenate([st["key"], key])
+        pick = np.arange(len(both))
+        if len(both) > s:
+            # a non-strict monotone image of the order: keeps a superset
+            # of the top s and every tie at the cut
+            pick = np.flatnonzero(both <= np.partition(both, s - 1)[s - 1])
+        ps, pcn = pick[pick < ns], pick[pick >= ns] - ns
+        if not len(pcn) and len(ps) == ns:
+            return st
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cand = {"cls": cls[pcn], "neg": neg[pcn], "key": key[pcn],
+                "apx": apx[pcn], "dot": np.zeros(len(pcn)),
+                "den": np.zeros(len(pcn)), "xnull": np.ones(len(pcn), bool)}
+        cid = rb.column(0).take(pcn)
+        if st is not None:
+            cand = {f: np.concatenate([st[f][ps], v])
+                    for f, v in cand.items()}
+            cid = pa.concat_arrays([st["ids"].take(ps), cid])
+        order = pc.sort_indices(
+            pa.table({"c": cand["cls"], "a": cand["neg"], "i": cid}),
+            sort_keys=[("c", "ascending"), ("a", "ascending"),
+                       ("i", "ascending")],
+            null_placement="at_start").to_numpy()
+        if len(order) > s:
+            last, end = order[s - 1], s
+            lid = cid[int(last)].as_py()
+            while (end < len(order)
+                   and cand["cls"][order[end]] == cand["cls"][last]
+                   and cand["neg"][order[end]] == cand["neg"][last]
+                   and cid[int(order[end])].as_py() == lid):
+                end += 1
+            order = order[:end]
+        new = {f: v[order] for f, v in cand.items()}
+        new["ids"] = cid.take(order)
+        fresh = np.flatnonzero(order >= len(ps))
+        if len(fresh):
+            took = pcn[order[fresh] - len(ps)]
+            new["dot"][fresh], new["den"][fresh], new["xnull"][fresh] = (
+                exact(qi, rb.column(1).take(took)))
+        return new
+
+    def search(batches):
+        import pyarrow as pa
+
+        states = [None] * nq
+        for batch in batches:
+            for off in range(0, batch.num_rows, rows):
+                rb = batch.slice(off, rows)
+                n = rb.num_rows
+                apx, null = adc_scores(rb.column(2))
+                for qi in range(nq):
+                    a = on_adc[qi]
+                    if a < 0:
+                        ap, cls = np.zeros(n), np.full(n, 2, np.int8)
+                    else:
+                        ap = apx[a]
+                        cls = np.where(null[a], 2, np.where(
+                            np.isnan(ap), 0, 1)).astype(np.int8)
+                    # 0.0 - x turns −0.0 into 0.0, so the two tie
+                    neg = np.where(cls == 1, 0.0 - ap, 0.0)
+                    key = np.where(cls == 0, -np.inf,
+                                   np.where(cls == 2, np.inf, neg))
+                    states[qi] = merge(states[qi], qi, cls, neg, key, ap, rb)
+        out = [(qi, st) for qi, st in enumerate(states) if st is not None]
+        if not out:
+            return
+        cat = {f: np.concatenate([st[f] for _, st in out])
+               for f in ("cls", "apx", "dot", "den", "xnull")}
+        owner = np.repeat([qi for qi, _ in out],
+                          [len(st["key"]) for _, st in out])
+        yield pa.RecordBatch.from_arrays([
+            qids.take(pa.array(owner)),
+            pa.concat_arrays([st["ids"] for _, st in out]),
+            pa.array(cat["apx"], mask=cat["cls"] == 2),
+            pa.array(cat["dot"], mask=cat["xnull"]),
+            pa.array(cat["den"], mask=cat["xnull"]),
+        ], names=names)
+
+    return enc.mapInArrow(search, schema)
 
 
 def truncate_normalize(

@@ -786,8 +786,8 @@ def llm_pq_topk(spark, sf_dir):
     """Product-quantization ANN (FAISS PQ; the compressed-index family of
     the VECTOR_SEARCH surface): 16 subspaces × 16 codes (32× compression
     of the 64-dim doubles), asymmetric scoring against the codebook
-    reconstruction as one JVM expression, then exact rerank of a
-    30·k shortlist. EXACT oracle (r9): pq_train's joint
+    reconstruction and exact rerank of a 30·k shortlist in one Arrow
+    kernel pass (similarity.pq_search). EXACT oracle (r9): pq_train's joint
     Lloyd's is deterministic (md5-ordered sample, id-ordered init,
     first-occurrence argmin ties, round-9 means) and fixed at 3
     iterations, so queries/annsql.py unrolls training + encoding +

@@ -45,9 +45,10 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import empty_frame
 from flink_spark.llm.clustering import assign_clusters, kmeans
 from flink_spark.streaming.storeutil import (
     fold_bid_partitions,
@@ -108,10 +109,10 @@ class IvfStreamIndex:
         the test-corpus id type; a non-long id only surfaces here when
         the index never saw a row.)"""
         if not has_parquet(f"{self.root}/cells"):
-            return self.spark.createDataFrame(
-                [],
-                f"{self.id_col} long, {self.vec_col} array<double>, "
-                f"__cell int",
+            return empty_frame(
+                self.spark,
+                f"`{self.id_col}` long, `{self.vec_col}` array<double>, "
+                "__cell int",
             )
         return read_store(
             self.spark, f"{self.root}/cells", self.store_key
@@ -130,10 +131,9 @@ class IvfStreamIndex:
 
         cents = self.centroids
         if not cents:  # empty index: no cells to probe
-            return self.spark.createDataFrame(
-                [], f"{query_id} long, cand_id long, cos_sim double, "
-                    f"rank int"
-            )
+            return empty_frame(
+                self.spark, f"`{query_id}` long, cand_id long, "
+                            "cos_sim double, rank int")
         # single-literal spelling of the (dist, idx) argmin ranking — see
         # clustering._ranked_cells for the analysis-cost economics and
         # bit-equivalence of the literal inlining
@@ -258,47 +258,29 @@ class PqStreamIndex:
         frame when nothing was ever drained (no bootstrap file — see
         IvfStreamIndex)."""
         if not has_parquet(f"{self.root}/codes"):
-            return self.spark.createDataFrame(
-                [],
-                f"{self.id_col} long, {self.vec_col} array<double>, "
-                f"__code array<int>",
+            return empty_frame(
+                self.spark,
+                f"`{self.id_col}` long, `{self.vec_col}` array<double>, "
+                "__code array<int>",
             )
         return read_store(
             self.spark, f"{self.root}/codes", self.store_key
         ).select(self.id_col, self.vec_col, "__code")
 
-    def _recon_col(self) -> Column:
-        """Codebook reconstruction as one JVM expression over the stored
-        code array (no recon stored — m bytes per vector stay m bytes).
-        One flatten/transform over a single 3-level codebook LITERAL
-        node (exprutil.double_array_lit — not m·ks·sub CAST('…') nodes;
-        see exprutil for the analysis-cost economics and
-        bit-equivalence). Code VALUES are 1-based argmin positions,
-        element_at is 1-based."""
-        from flink_spark.exprutil import double_array_lit
-
-        bl = double_array_lit(self.spark, self.books)
-        return F.flatten(F.transform(
-            F.sequence(F.lit(0), F.lit(len(self.books) - 1)),
-            lambda j: F.element_at(
-                F.element_at(bl, j + F.lit(1)),
-                F.element_at(F.col("__code"), j + F.lit(1)),
-            ),
-        ))
-
     def topk(self, queries: DataFrame, k: int = 5,
              shortlist: int | None = None,
              query_id: str = "query_id", vec: str = "embedding",
              ) -> DataFrame:
-        from pyspark.sql import Window
-
-        from flink_spark.llm.similarity import cosine, unique_queries
+        """ADC shortlist + exact rerank over the accumulated index
+        (similarity.pq_search): the vectors are rebuilt from the stored
+        codes and the frozen books in the search kernel, so the store
+        keeps m codes per vector and no reconstruction."""
+        from flink_spark.llm.similarity import pq_search
 
         if not self.books:
-            return self.spark.createDataFrame(
-                [], f"{query_id} long, cand_id long, cos_sim double, "
-                    f"rank int"
-            )
+            return empty_frame(
+                self.spark, f"`{query_id}` long, cand_id long, "
+                            "cos_sim double, rank int")
         enc = self.encoded().select(
             F.col(self.id_col).alias("cand_id"),
             F.col(self.vec_col).alias("__cv"),
@@ -310,40 +292,8 @@ class PqStreamIndex:
         if shortlist is None:
             shortlist = 30 * k
         q = queries.select(query_id, F.col(vec).alias("__qv"))
-        # ADC-score in the scan stage, shuffle only (query_id, cand_id,
-        # __approx) into the shortlist window, and re-attach the
-        # (broadcast, unique-keyed) query vectors to the shortlist for
-        # the rerank — guide §2.3, same shape as similarity.pq_topk: the
-        # exchanges move narrow scored rows, never the d-dim payloads
-        approx = (
-            F.broadcast(q)
-            .crossJoin(enc.select(
-                "cand_id", self._recon_col().alias("__recon")))
-            .select(query_id, "cand_id",
-                    cosine("__qv", "__recon").alias("__approx"))
-        )
-        ws = Window.partitionBy(query_id).orderBy(
-            F.desc("__approx"), F.asc("cand_id"))
-        short = (
-            approx.withColumn("__sr", F.row_number().over(ws))
-            .filter(F.col("__sr") <= shortlist)
-            .select(query_id, "cand_id")
-        )
-        rer = (
-            short.join(enc.select("cand_id", "__cv"), "cand_id")
-            .join(F.broadcast(
-                unique_queries(q, query_id, "PqStreamIndex.topk")), query_id)
-            .select(query_id, "cand_id",
-                    cosine("__qv", "__cv").alias("cos_sim"))
-        )
-        w = Window.partitionBy(query_id).orderBy(
-            F.desc("cos_sim"), F.asc("cand_id"))
-        return (
-            rer.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, "cand_id",
-                    F.round("cos_sim", 12).alias("cos_sim"), "rank")
-        )
+        return pq_search(q, enc, self.books, k, shortlist, query_id,
+                         "PqStreamIndex.topk")
 
     def close(self) -> None:
         if not self.persistent:
@@ -369,9 +319,10 @@ def pq_ingest_stream(
     freezes them; every batch encodes map-only against the frozen books
     (pq_encode's add-after-train path: a numpy argmin per subspace in
     the worker, zero shuffle) and appends (id, vec, code) to the store.
-    Search reconstructs from codes per the frozen books, shortlists by
-    ADC cosine, and exact-reranks — identical semantics to the batch
-    pq_topk with training pinned to batch 0."""
+    Search runs similarity.pq_search over the store: one Arrow kernel
+    pass rebuilds the vectors from the codes per the frozen books,
+    shortlists by ADC cosine and exact-reranks — identical semantics to
+    the batch pq_topk with training pinned to batch 0."""
     spark = stream.sparkSession
     root, persistent = prepare_root(prefix, root)
     codes_store, ckpt = f"{root}/codes", f"{root}/ckpt"

@@ -4,6 +4,8 @@ duplicate rows — for any placement of rows across micro-batches."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import pandas as pd
@@ -16,9 +18,13 @@ def _chunked_stream(spark, tmp_path, name, pdf: pd.DataFrame, n_chunks: int):
     d.mkdir()
     n = len(pdf)
     for i in range(n_chunks):
+        p = d / f"part-{i}.parquet"
         pdf.iloc[i * n // n_chunks : (i + 1) * n // n_chunks].to_parquet(
-            d / f"part-{i}.parquet", index=False
+            p, index=False
         )
+        # the file source orders files by modification time, and files
+        # written within one instant tie (see streaming/core._chunk_dir)
+        os.utime(p, (1_600_000_000 + i * 60,) * 2)
     schema = spark.read.parquet(str(d)).schema
     return (
         spark.readStream.schema(schema)

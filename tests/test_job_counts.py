@@ -17,7 +17,8 @@ from flink_spark.queries.registry import QUERIES
 
 JOBS = {
     "stream_watermark_alignment": 18,
-    "stream_pq_ingest": 11,
+    "stream_pq_ingest": 9,
+    "llm_pq_topk": 5,
     "llm_dedup_clusters": 28,
     "llm_multimodal_decode": 1,
 }
@@ -46,3 +47,32 @@ def test_driver_job_count(spark, sf_dir, name):
     before = _probe_job_id(sc)
     fn(spark, sf_dir).collect()
     assert _probe_job_id(sc) - before - 1 == JOBS[name]
+
+
+def test_empty_ann_frames_run_no_job(spark, sf_dir, tmp_path):
+    """An ANN index that never drained a row, and a PQ search whose
+    query set is empty, hand back JVM-side empty frames: collecting them
+    runs no Spark job."""
+    from pyspark.sql import functions as F
+
+    from flink_spark.llm.similarity import pq_topk
+    from flink_spark.sources.tables import load_table
+    from flink_spark.streaming.ann_stream import IvfStreamIndex, PqStreamIndex
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    c = emb.filter(F.col("vec_id") >= 10).select(
+        F.col("vec_id").alias("cand_id"), "embedding")
+    ivf = IvfStreamIndex(spark, str(tmp_path / "ivf"), "vec_id",
+                         "embedding", persistent=True)
+    pq = PqStreamIndex(spark, str(tmp_path / "pq"), "vec_id", "embedding",
+                       persistent=True)
+    books = [[[0.0] * 4, [1.0] * 4]] * 16
+    frames = [ivf.assigned(), ivf.topk(q), pq.encoded(), pq.topk(q),
+              pq_topk(q.filter(F.lit(False)), c, books=books, ks=2)]
+    for frame in frames:
+        before = _probe_job_id(sc)
+        assert frame.collect() == []
+        assert _probe_job_id(sc) - before - 1 == 0

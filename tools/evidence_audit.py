@@ -469,6 +469,7 @@ MANIFEST += [
       tests=["test_ann_stream"]),
     C("LLM", "Streaming PQ index ingest",
       gates=["stream_pq_ingest"],
+      fuzz=["test_pq_topk_and_stream_index_match_two_stage_plan"],
       crash=["test_crash_exactness_pq_ingest",
              "test_pq_fold_crash_exact_on_object_store"]),
     C("LLM", "Streaming curation e2e (multi-store)",
@@ -485,7 +486,8 @@ MANIFEST += [
       gates=["llm_cosine_topk", "llm_lsh_topk", "llm_ivf_topk",
              "llm_pq_topk", "llm_lsh_recall_gate", "llm_ivf_recall_gate",
              "llm_pq_recall_gate"],
-      fuzz=["test_brute_force_topk_matches_numpy"],
+      fuzz=["test_brute_force_topk_matches_numpy",
+            "test_pq_search_matches_two_stage_plan"],
       tests=["test_annsql"]),
     C("LLM", "SimHash / n-gram Jaccard / embedding-cosine near-dup",
       gates=["llm_simhash_pairs", "llm_ngram_jaccard_pairs",
