@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_spark.exprutil import empty_frame
 from flink_spark.session import prepare_session
 from flink_spark.sqltok import det_digest as _det_digest
 from flink_spark.sqltok import match_paren as _match_paren
@@ -2515,7 +2516,7 @@ class TableEnvironment:
                 [(removed,)], "rows_affected bigint"
             )
         if cond is None:
-            keep = self.spark.createDataFrame([], spec.ddl_schema())
+            keep = empty_frame(self.spark, spec.ddl_schema())
             removed = df.count()
         else:
             keep = df.filter(f"({cond}) IS NOT TRUE")
@@ -4102,13 +4103,12 @@ class TableEnvironment:
                 )
             if self._is_managed_bucketed(spec):
                 self._rewrite_table_storage(
-                    spec, self.spark.createDataFrame([], spec.ddl_schema())
+                    spec, empty_frame(self.spark, spec.ddl_schema())
                 )
                 return None
             _shutil.rmtree(spec.options["path"], ignore_errors=True)
-            self.spark.createDataFrame(
-                [], spec.ddl_schema()
-            ).createOrReplaceTempView(spec.name)
+            empty_frame(self.spark, spec.ddl_schema()).createOrReplaceTempView(
+                spec.name)
             return None
         an = re.match(
             r"^\s*ANALYZE\s+TABLE\s+(?P<name>[\w.]+)\s+COMPUTE\s+STATISTICS"
@@ -4502,7 +4502,7 @@ class TableEnvironment:
             from flink_spark.sources.bucketing import write_bucketed
 
             dcols, nbuck = distributed
-            empty = self.spark.createDataFrame([], spec.ddl_schema())
+            empty = empty_frame(self.spark, spec.ddl_schema())
             write_bucketed(empty, name, dcols, nbuck)
         if not temporary:
             # TEMPORARY tables are session-scoped (reference
@@ -4547,7 +4547,7 @@ class TableEnvironment:
         schema = spec.ddl_schema()
         if conn == "filesystem" and self._is_managed_bucketed(spec):
             if not self.spark.catalog.tableExists(spec.name):
-                return self.spark.createDataFrame([], schema)
+                return empty_frame(self.spark, schema)
             return self.spark.table(spec.name)
         if conn == "filesystem":
             fmt = spec.options.get("format", "parquet")
@@ -4566,7 +4566,7 @@ class TableEnvironment:
 
                 (kc, kt), (vc, vt) = spec.columns
                 if not os.path.isdir(path):
-                    return self.spark.createDataFrame([], schema)
+                    return empty_frame(self.spark, schema)
                 return read_sequence_file(
                     self.spark, path, kc, vc, kt.lower(), vt.lower()
                 )

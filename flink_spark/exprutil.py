@@ -46,6 +46,7 @@ from collections import OrderedDict
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: The engine's one memo of batch-independent plan pieces: expression
 #: Columns (literals, minhash/sketch/Gopher trees) and inferred read
@@ -119,13 +120,16 @@ def _literal_column(spark: SparkSession, sql: str) -> Column:
         return F.expr(sql)
 
 
-def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
-    """An empty frame of the DDL ``schema``, built on the JVM as an empty
-    ``LocalRelation``. ``createDataFrame([], schema)`` builds a Python
-    RDD instead, and collecting that runs a Spark job; this collects with
-    none."""
-    jschema = spark._jvm.org.apache.spark.sql.types.StructType.fromDDL(
-        schema)
+def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
+    """An empty frame of ``schema`` (a DDL string or a ``StructType``),
+    built on the JVM as an empty ``LocalRelation``.
+    ``createDataFrame([], schema)`` builds a Python RDD instead, and
+    collecting that runs a Spark job; this collects with none. A
+    ``StructType`` crosses as JSON, so field nullability and metadata
+    survive."""
+    types = spark._jvm.org.apache.spark.sql.types
+    jschema = (types.StructType.fromDDL(schema) if isinstance(schema, str)
+               else types.DataType.fromJson(schema.json()))
     jdf = spark._jsparkSession.createDataFrame(
         spark._jvm.java.util.ArrayList(), jschema)
     return DataFrame(jdf, spark)

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_spark.exprutil import empty_frame
+
 MAGIC = b"Obj\x01"
 
 # ----------------------------------------------------------- primitives --
@@ -364,7 +366,7 @@ def read_avro(
     )
     encs = _encoders(schema)
     if not files:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     fdf = spark.createDataFrame([(f,) for f in files], "avro_file string").repartition(
         len(files)
     )

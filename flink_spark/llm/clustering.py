@@ -18,7 +18,8 @@ Spark-first design:
 
 At 100 TB: per iteration = one scan + one k×d shuffle; the driver only
 ever holds k×d floats. For very large k use the IVF path in
-llm/similarity.py (cell assignment by the same argmin construction).
+llm/similarity.py, whose cells come from :func:`nearest_cells`, the same
+ranking.
 """
 
 from __future__ import annotations
@@ -64,6 +65,18 @@ def _ranked_cells(spark: SparkSession, vec: Column,
             ),
         )
     )
+
+
+def nearest_cells(spark: SparkSession, vec: Column,
+                  centroids: list[list[float]], n: int) -> Column:
+    """The ids of the ``n`` centroids nearest ``vec`` (squared L2), as an
+    array in (dist, idx) order: ties go to the lower cell. A vector whose
+    distances are all NULL (a NULL vector or element, or a length other
+    than the centroids') or all NaN gets cells 0, 1, … in order. The one
+    IVF cell lookup: ``ivf_topk``'s assignment and probes,
+    ``IvfStreamIndex.topk``'s probes and :func:`semantic_neardup_pairs`."""
+    ranked = _ranked_cells(spark, vec.cast("array<double>"), centroids)
+    return F.transform(F.slice(ranked, 1, max(0, n)), lambda s: s["i"])
 
 
 def assign_clusters(df: DataFrame, centroids: list[list[float]],
@@ -138,14 +151,10 @@ def semantic_neardup_pairs(df, k: int = 8, n_iter: int = 3,
                           vec_col=vec_col)
     n_probe = 2
     v = F.col(vec_col)
-    # single-literal ranking — see _ranked_cells for the analysis-cost
-    # economics and bit-equivalence
-    ranked = _ranked_cells(df.sparkSession, v, centroids)
     probes = df.select(
         F.col(id_col), v,
-        F.explode(
-            F.slice(F.transform(ranked, lambda s: s["i"]), 1, n_probe)
-        ).alias("cluster"),
+        F.explode(nearest_cells(df.sparkSession, v, centroids, n_probe))
+        .alias("cluster"),
     )
     a = probes.select(
         "cluster", F.col(id_col).alias("id_a"), v.alias("__va")

@@ -4,25 +4,34 @@ Reference surface: VECTOR_SEARCH table function
 (reference StreamExecVectorSearchTableFunction, VectorSearchCodeGenerator.scala)
 — top-k nearest neighbors for a query set against an embedding table.
 
-Two paths:
-  - brute-force cosine top-k: exact baseline. Broadcast the (small) query
-    set, one pass over the candidate table, per-query top-k via window —
-    scales linearly in candidates, embarrassingly parallel.
-  - LSH-bucketed (random hyperplane signs): the scale path — candidates
-    restricted to matching sign-sketch buckets before scoring; recall<1,
-    cost ~ bucket size instead of full scan.
+Four searches, each scoring (query, candidate) pairs by :func:`cosine`:
+  - :func:`brute_force_topk`: the exact baseline. The (small) query set
+    is broadcast against one pass over the candidates.
+  - :func:`lsh_topk`: candidates restricted to the query's random
+    hyperplane sign buckets; recall < 1, cost ~ bucket size.
+  - :func:`ivf_topk` (and ``streaming/ann_stream.IvfStreamIndex.topk``):
+    k-means cells, with each query probing its nearest cells. Every cell
+    lookup is ``clustering.nearest_cells``, the one IVF ranking.
+  - :func:`pq_topk` (and ``PqStreamIndex.topk``): an ADC shortlist over
+    product-quantized codes, reranked exactly in one Arrow kernel
+    (:func:`pq_search`).
 
-Determinism: dot products accumulate per-term products cast to DECIMAL —
-order-independent exact sums (see queries/util.py) — so results hash-match
-DuckDB's unordered SUM-over-unnest evaluation.
+All four end in one top-k tail, :func:`_top_k`: ``row_number()`` per
+query by ``cos_sim`` descending, then the lower id, and ``cos_sim``
+rounded to 12 digits.
+
+Determinism: dot products are sequential double folds in dimension
+order, the order of DuckDB's ``list_reduce``, so the oracles compare
+bitwise-equal sums (see ``_DOT``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_spark.exprutil import double_array_lit, memo
+from flink_spark.exprutil import double_array_lit, empty_frame, memo
+from flink_spark.llm.clustering import kmeans, nearest_cells
 
 # Exact cross-engine dot product / norm over double arrays WITHOUT decimal
 # arithmetic: Spark's `aggregate` is a sequential left fold (0.0 + x1 + x2
@@ -69,13 +78,25 @@ def brute_force_topk(
         .crossJoin(c)
         .select(query_id, cand_id, cosine("__qv", "__cv").alias("cos_sim"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
+    return _top_k(scored, k, query_id, cand_id)
+
+
+def _top_k(scored: DataFrame, k: int, query_id: str,
+           cand_id: str) -> DataFrame:
+    """The tail of every search: ``scored``'s (query id, candidate id,
+    ``cos_sim``) rows ranked per query by ``cos_sim`` descending (NULL
+    last), then the lower candidate id (NULL first); the first ``k``
+    kept, with ``rank``. Ranked on the raw value and reported rounded to
+    12 digits: the sums are exact, but the final divide's last ulp is
+    engine-specific. SQL text: one py4j call per step, where Column
+    builders make several."""
+    qi, ci = f"`{query_id}`", f"`{cand_id}`"
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        # rank on the raw value; report rounded (decimal-exact sums still
-        # pass through one double divide whose last ulp is engine-specific)
-        .select(query_id, cand_id, F.round("cos_sim", 12).alias("cos_sim"), "rank")
+        scored.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {qi} "
+                 f"ORDER BY cos_sim DESC, {ci}) AS rank")
+        .where(f"rank <= {k}")
+        .selectExpr(qi, ci, "round(cos_sim, 12) AS cos_sim", "rank")
     )
 
 
@@ -180,12 +201,7 @@ def lsh_topk(
     )
     if n_tables > 1:
         scored = scored.dropDuplicates([query_id, cand_id])
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("cos_sim", 12).alias("cos_sim"), "rank")
-    )
+    return _top_k(scored, k, query_id, cand_id)
 
 
 def ivf_topk(
@@ -197,7 +213,6 @@ def ivf_topk(
     vec: str = "embedding",
     n_centroids: int = 8,
     n_probe: int = 2,
-    seed: int = 42,
     n_assign: int = 1,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means-partition the candidates, probe
@@ -206,84 +221,54 @@ def ivf_topk(
     replication analog of FAISS's multi-assignment), trading index size
     for recall that stays stable as the corpus grows.
 
-    Scale shape: the centroid table is tiny (n_centroids × dim) and
-    broadcast everywhere; candidates get their cell(s) in one pass and the
-    probe is an equi-join on cell id — so the scored set shrinks to
-    ~n_probe·n_assign/n_centroids of the corpus with no cross product.
-    Recall is the n_probe/n_assign dial (IVF-Flat semantics; the
-    FAISS-style layout the VECTOR_SEARCH surface would back onto at
-    100 TB)."""
+    Scale shape: the centroids (n_centroids × dim) are one literal in the
+    plan; candidates get their cell(s) in one map-only pass
+    (``clustering.nearest_cells``) and the probe is an equi-join on cell
+    id — so the scored set shrinks to ~n_probe·n_assign/n_centroids of
+    the corpus with no cross product. Recall is the n_probe/n_assign
+    dial (IVF-Flat semantics; the FAISS-style layout the VECTOR_SEARCH
+    surface would back onto at 100 TB)."""
     # deterministic Lloyd's (clustering.kmeans: id-ordered init, 9-digit-
     # rounded centroid updates) — reproducible recall where Spark ML's
     # KMeans varies run-to-run with float reduce order
-    from flink_spark.llm.clustering import kmeans as det_kmeans
-
     cand_vec = candidates.select(cand_id, F.col(vec).alias("__cv"))
-    _, cents = det_kmeans(
+    _, cents = kmeans(
         cand_vec.select(
             F.col(cand_id),
             F.col("__cv").cast("array<double>").alias("__dv"),
         ),
         k=n_centroids, n_iter=3, id_col=cand_id, vec_col="__dv",
     )
-    centroids = [(i, c) for i, c in enumerate(cents)]
-    spark = candidates.sparkSession
-    cent_df = spark.createDataFrame(centroids, "__cell int, __cent array<double>")
-
-    c_l2 = F.expr(
-        "aggregate(zip_with(__cv, __cent, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    assigned = (
-        cand_vec.crossJoin(F.broadcast(cent_df))
-        .withColumn("__cd", c_l2)
-        .withColumn(
-            "__cr",
-            F.row_number().over(
-                Window.partitionBy(cand_id).orderBy("__cd", "__cell")
-            ),
-        )
-        .filter(F.col("__cr") <= max(1, n_assign))
-        .select(cand_id, "__cv", "__cell")
-    )
-
-    # each query → its n_probe nearest centroids (centroids broadcast)
+    cells = nearest_cells(candidates.sparkSession, F.col("__cv"), cents,
+                          max(1, n_assign))
+    index = cand_vec.select(cand_id, "__cv", F.explode(cells).alias("__cell"))
     q = queries.select(query_id, F.col(vec).alias("__qv"))
-    l2 = F.expr(
-        "aggregate(zip_with(__qv, __cent, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("__d", l2)
-        .withColumn(
-            "__pr",
-            F.row_number().over(
-                Window.partitionBy(query_id).orderBy("__d", "__cell")
-            ),
-        )
-        .filter(F.col("__pr") <= n_probe)
-        .select(query_id, "__qv", "__cell")
-    )
-    pairs = probes.join(assigned, "__cell")
-    # score in the probe-join stage, then project to narrow rows before
-    # any exchange (guide §2.3): the dedup (multi-assign spill — rows for
-    # the same pair are identical, so deduplicating scored rows keeps the
-    # old values bitwise) and the top-k window shuffle (query_id,
-    # cand_id, cos_sim), not the embedding payloads
-    scored = pairs.select(
+    scored = _ivf_scored(q, index, cents, n_probe, query_id, cand_id,
+                         spilled=n_assign > 1)
+    return _top_k(scored, k, query_id, cand_id)
+
+
+def _ivf_scored(queries: DataFrame, index: DataFrame, centroids: list,
+                n_probe: int, query_id: str, cand_id: str,
+                spilled: bool) -> DataFrame:
+    """(query id, candidate id, ``cos_sim``) of each query in
+    ``queries`` (query id, ``__qv``) against every ``index`` row
+    (candidate id, ``__cv``, ``__cell``) in its ``n_probe`` nearest
+    cells. Scored in the probe-join stage and projected to narrow rows
+    before any exchange (guide §2.3), so the shuffles move (query id,
+    candidate id, ``cos_sim``), not the embedding payloads. With
+    ``spilled`` (a candidate indexed under several cells) a pair probed
+    through two cells scores once; its rows are identical, so keeping
+    any one is exact."""
+    cells = nearest_cells(queries.sparkSession, F.col("__qv"), centroids,
+                          n_probe)
+    probes = queries.select(query_id, "__qv", F.explode(cells).alias("__cell"))
+    scored = probes.join(index, "__cell").select(
         query_id, cand_id, cosine("__qv", "__cv").alias("cos_sim")
     )
-    if n_assign > 1:
-        # a candidate spilled into several probed cells must score once
+    if spilled:
         scored = scored.dropDuplicates([query_id, cand_id])
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.asc(cand_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("cos_sim", 12).alias("cos_sim"), "rank")
-    )
+    return scored
 
 
 def quantize_int8(df: DataFrame, vec: str = "embedding",
@@ -320,7 +305,6 @@ def pq_encode(
     vec: str = "embedding",
     m: int = 8,
     ks: int = 16,
-    seed: int = 42,
     books: list | None = None,
     train_limit: int | None = 50_000,
     recon: bool = True,
@@ -558,7 +542,6 @@ def pq_topk(
     m: int = 16,
     ks: int = 16,
     shortlist: int | None = None,
-    seed: int = 42,
     books: list | None = None,
     train_limit: int | None = 50_000,
 ) -> DataFrame:
@@ -578,8 +561,8 @@ def pq_topk(
     companion recall gates pin their own widths)."""
     if shortlist is None:
         shortlist = 30 * k
-    enc, books = pq_encode(candidates, cand_id, vec, m, ks, seed,
-                           books=books, train_limit=train_limit,
+    enc, books = pq_encode(candidates, cand_id=cand_id, vec=vec, m=m,
+                           ks=ks, books=books, train_limit=train_limit,
                            recon=False)
     q = queries.select(query_id, F.col(vec).alias("__qv"))
     return pq_search(q, enc, books, k, shortlist, query_id, "pq_topk")
@@ -618,8 +601,6 @@ def pq_search(queries: DataFrame, enc: DataFrame, books: list, k: int,
                              f"{dup.field('values')[0].as_py()}")
     qf, cf = queries.schema[query_id], enc.schema[0]
     if not qt.num_rows or shortlist < 1:
-        from flink_spark.exprutil import empty_frame
-
         return empty_frame(
             spark, f"`{query_id}` {qf.dataType.simpleString()}, "
                    f"`{cf.name}` {cf.dataType.simpleString()}, "
@@ -627,22 +608,19 @@ def pq_search(queries: DataFrame, enc: DataFrame, books: list, k: int,
     ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
     scored = _pq_scored(qt, qf, enc, books, shortlist, ansi)
     qi, ci = f"`{query_id}`", f"`{cf.name}`"
-    part = f"PARTITION BY {qi} ORDER BY"
     # SQL text: one py4j call per step, where Column builders make ~40.
     # The exact cosine is divided after the global cut, so that a zero
     # norm fails (ANSI) or nulls only the rows a Spark rerank would have
     # scored. A NULL id holds its shortlist place but has no vector to
     # rerank by id, so it leaves with the cut.
-    return (
+    shortlisted = (
         scored.selectExpr(
-            "*", f"row_number() OVER ({part} __approx DESC, {ci}) AS __sr")
+            "*", f"row_number() OVER (PARTITION BY {qi} "
+                 f"ORDER BY __approx DESC, {ci}) AS __sr")
         .where(f"__sr <= {shortlist} AND {ci} IS NOT NULL")
         .selectExpr(qi, ci, "__dot / __den AS cos_sim")
-        .selectExpr(
-            "*", f"row_number() OVER ({part} cos_sim DESC, {ci}) AS rank")
-        .where(f"rank <= {k}")
-        .selectExpr(qi, ci, "round(cos_sim, 12) AS cos_sim", "rank")
     )
+    return _top_k(shortlisted, k, query_id, cf.name)
 
 
 def _pq_scored(qt, qfield, enc: DataFrame, books: list, shortlist: int,

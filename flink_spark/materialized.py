@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from flink_spark.exprutil import empty_frame
+
 #: reference default: materialized-table.refresh-mode.freshness-threshold
 FRESHNESS_THRESHOLD_SEC = 30 * 60
 
@@ -930,13 +932,12 @@ class MaterializedTableManager:
                     f.endswith(".parquet") for f in os.listdir(out)):
                 base = self.spark.read.parquet(out)
             else:
-                base = self.spark.createDataFrame(
-                    [], self.spark.sql(mt.as_query).schema)
+                base = empty_frame(self.spark,
+                                   self.spark.sql(mt.as_query).schema)
         elif mt.version > 0:
             base = self.spark.read.parquet(f"{mt.root}/v={mt.version}")
         else:
-            base = self.spark.createDataFrame(
-                [], self.spark.sql(mt.as_query).schema)
+            base = empty_frame(self.spark, self.spark.sql(mt.as_query).schema)
         self._apply_schema_to(base, mt.schema_cols).createOrReplaceTempView(
             mt.name
         )
@@ -1107,7 +1108,7 @@ class MaterializedTableManager:
         apply_schema = self._apply_schema_to
         # until the first batch lands, the table reads as empty
         apply_schema(
-            spark.createDataFrame([], sdf.schema), mt.schema_cols
+            empty_frame(spark, sdf.schema), mt.schema_cols
         ).createOrReplaceTempView(mt.name)
 
         def sink(batch, batch_id: int) -> None:

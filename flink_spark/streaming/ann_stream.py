@@ -19,8 +19,8 @@ Streaming operator:
     replay-exactness discipline (idempotent ``__bid`` overwrites,
     crash-safe compaction folds);
   - queries probe the ``n_probe`` nearest cells of the ACCUMULATED
-    store: cell ids come from the same inlined-argmin expression
-    (``slice(sort_array(...))`` — still no crossJoin), the probe is an
+    store: cell ids come from the same ranking
+    (``clustering.nearest_cells`` — still no crossJoin), the probe is an
     equality join on the cell id, and the store's cell sub-partitioning
     means a table-format store prunes unprobed cells entirely.
 
@@ -121,48 +121,25 @@ class IvfStreamIndex:
     def topk(self, queries: DataFrame, k: int = 5, n_probe: int = 2,
              query_id: str = "query_id", vec: str = "embedding",
              ) -> DataFrame:
-        """Probed cosine top-k over the accumulated index: each query's
-        n_probe nearest cells via the inlined-argmin expression, then an
-        equality join on the cell id (partition-prunable), exact cosine
-        inside the probed cells, (cos DESC, id) tie-break."""
-        from pyspark.sql import Window
+        """Probed cosine top-k over the accumulated index, as the batch
+        ``similarity.ivf_topk`` searches: each query's n_probe nearest
+        cells, an equality join on the cell id (partition-prunable),
+        exact cosine inside the probed cells, (cos DESC, id) tie-break."""
+        from flink_spark.llm.similarity import _ivf_scored, _top_k
 
-        from flink_spark.llm.similarity import cosine
-
-        cents = self.centroids
-        if not cents:  # empty index: no cells to probe
+        if not self.centroids:  # empty index: no cells to probe
             return empty_frame(
                 self.spark, f"`{query_id}` long, cand_id long, "
                             "cos_sim double, rank int")
-        # single-literal spelling of the (dist, idx) argmin ranking — see
-        # clustering._ranked_cells for the analysis-cost economics and
-        # bit-equivalence of the literal inlining
-        from flink_spark.llm.clustering import _ranked_cells
-
-        ranked = _ranked_cells(
-            queries.sparkSession, F.col(vec).cast("array<double>"), cents
-        )
-        cells = F.slice(ranked, 1, n_probe)
-        probes = queries.select(
-            query_id, F.col(vec).alias("__qv"),
-            F.explode(cells).alias("__p"),
-        ).select(query_id, "__qv", F.col("__p.i").alias("__cell"))
         idx = self.assigned().select(
             F.col(self.id_col).alias("cand_id"),
             F.col(self.vec_col).alias("__cv"),
             "__cell",
         )
-        pairs = probes.join(idx, "__cell")
-        scored = pairs.withColumn("cos_sim", cosine("__qv", "__cv"))
-        w = Window.partitionBy(query_id).orderBy(
-            F.desc("cos_sim"), F.asc("cand_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, "cand_id",
-                    F.round("cos_sim", 12).alias("cos_sim"), "rank")
-        )
+        q = queries.select(query_id, F.col(vec).alias("__qv"))
+        scored = _ivf_scored(q, idx, self.centroids, n_probe, query_id,
+                             "cand_id", spilled=False)
+        return _top_k(scored, k, query_id, "cand_id")
 
     def close(self) -> None:
         if not self.persistent:

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_spark.exprutil import empty_frame
 from flink_spark.session import prepare_session
 from flink_spark.streaming import storeutil
 from flink_spark.streaming.storeutil import drain_conf
@@ -530,7 +531,7 @@ def side_output_late(
 
     def channel(d: str) -> DataFrame:
         if not storeutil.has_parquet(d):
-            return spark.createDataFrame([], stream.schema)
+            return empty_frame(spark, stream.schema)
         rows = storeutil.read_store(spark, d).drop(storeutil.BID)
         return rows.localCheckpoint(eager=True)
 

@@ -28,7 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_spark.exprutil import memo
+from flink_spark.exprutil import empty_frame, memo
 
 BID = "__bid"
 
@@ -279,7 +279,7 @@ def collect_out(
     if not has_parquet(out_dir):
         if not persistent:
             shutil.rmtree(root, ignore_errors=True)
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     out = read_store(spark, out_dir).select(*cols)
     if persistent:
         return out

@@ -1,4 +1,5 @@
-"""Count the child processes the driver JVM forks while a query runs.
+"""Count the child processes the driver JVM forks, and the broadcasts it
+makes, while a query runs.
 
 Runs QUERY once to warm up, then ``--runs`` more times, in one
 ``local[4]`` session whose JVM keeps a JFR recording
@@ -7,6 +8,11 @@ Runs QUERY once to warm up, then ``--runs`` more times, in one
 frame on the forking thread's stack. On a host without libhadoop,
 Hadoop's local file system forks a ``readlink`` or ``chmod`` for some
 file operations; this is how such forks show up.
+
+It also prints each warm run's number of broadcasts: the difference of
+the broadcast manager's next broadcast id before and after the run. A
+stream-stream join broadcasts the session's Hadoop conf once per copy of
+its node, which is how that cost shows up.
 
 Usage:
     SPARK_GRAFT_SF_DIR=DIR python tools/spawn_audit.py QUERY [--runs N]
@@ -56,6 +62,16 @@ def _process_starts(jfr_file: str) -> list[dict]:
     return [e["values"] for e in json.loads(out)["recording"]["events"]]
 
 
+def _next_broadcast_id(jvm) -> int:
+    """The driver's next broadcast id: ``SparkEnv.broadcastManager``'s
+    private ``nextBroadcastId`` counter (an ``AtomicLong``, which py4j
+    hands over as a Python int), read by reflection."""
+    manager = jvm.org.apache.spark.SparkEnv.get().broadcastManager()
+    field = manager.getClass().getDeclaredField("nextBroadcastId")
+    field.setAccessible(True)
+    return int(field.get(manager))
+
+
 def _print_counts(title: str, counts: collections.Counter) -> None:
     print(f"  by {title}:")
     for key, n in counts.most_common():
@@ -88,14 +104,15 @@ def main() -> None:
     fn = QUERIES[args.query].fn
     spark = get_spark("flink_spark-spawn-audit", cpus=4)
     spark.sparkContext.setLogLevel("ERROR")
+    jvm = spark.sparkContext._jvm
     fn(spark, args.sf).collect()  # warm-up, not reported
-    windows = []
+    windows, broadcasts = [], []
     for _ in range(args.runs):
-        t0 = time.time()
+        b0, t0 = _next_broadcast_id(jvm), time.time()
         fn(spark, args.sf).collect()
         windows.append((t0, time.time()))
+        broadcasts.append(_next_broadcast_id(jvm) - b0)
 
-    jvm = spark.sparkContext._jvm
     tmp = tempfile.mkdtemp(prefix="spawn_audit_")
     try:
         dump = os.path.join(tmp, "run.jfr")
@@ -108,9 +125,10 @@ def main() -> None:
     spark.stop()
 
     print(f"{args.query}: {args.runs} warm runs, local[4], {args.sf}")
-    for i, (t0, t1) in enumerate(windows, 1):
+    for i, ((t0, t1), n_bc) in enumerate(zip(windows, broadcasts), 1):
         run = [e for e in events if t0 <= _epoch(e["startTime"]) <= t1]
-        print(f"run {i}: {len(run)} forks in {t1 - t0:.2f} s")
+        print(f"run {i}: {len(run)} forks, {n_bc} broadcasts "
+              f"in {t1 - t0:.2f} s")
         _print_counts("command", collections.Counter(
             os.path.basename(e["command"].split()[0]) if e["command"]
             else "?" for e in run))
